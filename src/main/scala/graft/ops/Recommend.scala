@@ -187,7 +187,10 @@ object Recommend {
     // presence frame — one row per (user, item), |pres|/R rows per
     // reducer with no per-key skew, so the per-partition hash table is
     // bounded the same way the SMJ sort buffer would be, and AQE's
-    // skew-split still applies to shuffled-hash joins.
+    // skew-split still applies to shuffled-hash joins. Trade-off: a
+    // shuffled-hash build side cannot spill to disk, so a reducer whose
+    // presence slice outgrows executor memory fails where an SMJ would
+    // spill; the bound above assumes R grows with the data.
     val scored = pres
       .join(dir, col("__item") === col("__i"))
       .join(pres.select(col("__basket"), col("__item").as("__j"))

@@ -106,9 +106,13 @@ object Similarity {
     * reconstruction: m small ints → dim doubles) passes the compact
     * frame as `candSide` and the reconstruction as `widen`, so a firing
     * rebalance exchanges the codes, not the dim-length arrays the codes
-    * exist to avoid moving. Identity for callers already at their final
-    * width. Same rows either way — the projection is deterministic and
-    * per-candidate, only its side of the exchange moves. */
+    * exist to avoid moving. That codes-only promise holds for the
+    * broadcast branch only: the blocked branch widens `candSide` before
+    * its `__qb` equi-join, so reconstructed arrays cross that shuffle,
+    * which keeps reconstruction once per candidate rather than per pair.
+    * Identity for callers already at their final width. Same rows either
+    * way — the projection is deterministic and per-candidate, only its
+    * side of the exchange moves. */
   private def queryProductJoin(candSide: DataFrame, q: DataFrame,
                                maxBroadcastQueries: Int,
                                blocks: Int = 256,
@@ -678,7 +682,7 @@ object Similarity {
     * nearest to each query instead of the whole corpus. At scale the
     * candidate side shrinks by ~k/nprobe while recall stays high for
     * clustered data — the standard ANN recall/cost dial. */
-  /** `spreadPostings` (here and on the probe entries below): the
+  /** `spreadPostings` (here and on [[ivfProbe]]): the
     * caller DECLARES the probe-side regime instead of the operator
     * probing it at runtime — per posting row the probe join does
     * ~|Q|·nprobe/nCentroids kernel evals, so an all-pairs audit shape
@@ -841,13 +845,8 @@ object Similarity {
   def ivfPqProbe(postings: DataFrame, queries: DataFrame, id: String,
                  vec: String, cents: Array[Array[Double]],
                  codebooks: Array[Array[Array[Double]]],
-                 nprobe: Int, k: Int,
-                 spreadPostings: Boolean = false): DataFrame = {
-    // spreadPostings per the [[ivfTopK]] contract; the spread (when it
-    // fires) moves the COMPACT codes — reconstruction stays above the
-    // exchange (the pqTopK widen lesson)
-    val pSide = if (spreadPostings) Skew.spread(postings) else postings
-    val enc = pSide.select(col("centroid_id"), col("neighbor_id"),
+                 nprobe: Int, k: Int): DataFrame = {
+    val enc = postings.select(col("centroid_id"), col("neighbor_id"),
       pqReconstruct(col("pq_code"), codebooks).as("recon"))
     val probeList = sort_array(centroidScores(col(vec), cents), asc = false)
     val probed = queries
@@ -972,12 +971,8 @@ object Similarity {
   def ivfPqResidualProbe(postings: DataFrame, queries: DataFrame, id: String,
                          vec: String, cents: Array[Array[Double]],
                          codebooks: Array[Array[Array[Double]]],
-                         nprobe: Int, k: Int,
-                         spreadPostings: Boolean = false): DataFrame = {
-    // spreadPostings per the [[ivfTopK]] contract; spread moves the
-    // compact codes, reconstruction stays above the exchange
-    val pSide = if (spreadPostings) Skew.spread(postings) else postings
-    val enc = pSide.select(col("centroid_id"), col("neighbor_id"),
+                         nprobe: Int, k: Int): DataFrame = {
+    val enc = postings.select(col("centroid_id"), col("neighbor_id"),
       pqReconstructResidual(col("pq_code"), col("centroid_id"), cents, codebooks)
         .as("recon"))
     val probeList = sort_array(centroidScores(col(vec), cents), asc = false)

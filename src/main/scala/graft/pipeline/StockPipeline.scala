@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Schemas
@@ -18,10 +18,19 @@ import graft.sources.{LakeReader, LakeWriter}
   * partitions of the job, and the only shuffle anywhere is the window
   * partitioning by ticker in [[transform]].
   *
+  * Layout: the raw and enriched zones are partitioned by `year` only,
+  * with each file's rows sorted by (ticker, date). The reference keeps
+  * one object per (year, ticker); here a year is one directory, a
+  * ticker filter prunes row groups through parquet min/max statistics,
+  * and `ticker` stays a string column (a `ticker=0700` directory would
+  * be read back as the integer 700).
+  *
   * Idempotency / incrementality:
   *  - ingest: dynamic partition overwrite — re-running a batch rewrites
-  *    exactly its (year,ticker) partitions (replaces the reference's
-  *    read-filter-concat-write merge, ingest_hourly.py:117-131);
+  *    exactly its year partitions (replaces the reference's
+  *    read-filter-concat-write merge, ingest_hourly.py:117-131). A batch
+  *    therefore replaces every ticker's rows in the years it touches and
+  *    must carry all of them, as a backfill does;
   *  - transform: processes only years ≥ the enriched zone's watermark
   *    (transform.py:39-44) — partition pruning makes the re-read cheap;
   *  - load: per-ticker watermark anti-join + deterministic dedup before
@@ -29,7 +38,15 @@ import graft.sources.{LakeReader, LakeWriter}
   */
 object StockPipeline {
 
-  val partitionCols: Seq[String] = Seq("year", "ticker")
+  val partitionCols: Seq[String] = Seq("year")
+
+  /** Dynamic-overwrite write of a raw or enriched zone, each file sorted
+    * by (ticker, date). The sort leads with the partition column, so it
+    * also meets the writer's required ordering and no second sort is
+    * planned. */
+  private def writeZone(df: DataFrame, path: String): Unit =
+    LakeWriter.overwritePartitions(
+      df.sortWithinPartitions(col("year"), col("ticker"), col("date")), path, partitionCols)
 
   /** Stage 1 — ingest: long-format OHLCV bars into the raw zone.
     *
@@ -40,7 +57,7 @@ object StockPipeline {
     val stamped = bars
       .withColumn("ingest_ts", lit(ingestTs))
       .withColumn("year", year(col("date")))
-    LakeWriter.overwritePartitions(stamped, rawPath, partitionCols)
+    writeZone(stamped, rawPath)
   }
 
   /** Stage 2 — transform: derive `daily_return` (lag pct-change) and
@@ -78,7 +95,7 @@ object StockPipeline {
       }
       .map { clean =>
         val out = clean.withColumn("year", year(col("date")))
-        LakeWriter.overwritePartitions(out, enrichedPath, partitionCols)
+        writeZone(out, enrichedPath)
         out
       }
   }
@@ -89,7 +106,9 @@ object StockPipeline {
     * deterministically (latest ingest_ts survives). Re-running is a
     * no-op — the reference needs DELETE-then-append for that
     * (load_stock_metrics.py:56-61); here idempotency falls out of the
-    * anti-join. */
+    * anti-join. Returns the warehouse row count, observed on the rows
+    * as the snapshot write streams them, so the new snapshot is never
+    * listed or read back. */
   def load(spark: SparkSession, enrichedPath: String, warehousePath: String): Long = {
     val incoming = LakeReader.read(spark, enrichedPath).drop("year")
     val merged =
@@ -105,10 +124,12 @@ object StockPipeline {
     // a single consistent snapshot, committed via staging-dir + rename —
     // the previous snapshot stays on disk until the new one is complete,
     // so a crash mid-write can never destroy the warehouse.
+    val written = Observation("load")
     LakeWriter.replaceSnapshot(
-      merged.withColumn("year", year(col("date"))), warehousePath, Seq("year"))
-    // parquet metadata count — no data read
-    spark.read.parquet(warehousePath).count()
+      merged.withColumn("year", year(col("date")))
+        .observe(written, count(lit(1)).as("rows")),
+      warehousePath, Seq("year"))
+    written.get("rows").asInstanceOf[Long]
   }
 
   /** Run all three stages (reference: run_pipeline.py / hourly DAG). */

@@ -9,10 +9,13 @@ import org.apache.spark.sql.types.StructType
   * The reference hand-rolls a lake with per-object S3 keys
   * `{zone}/{year}/{ticker}_metrics.parquet` and targeted reads/writes in
   * thread pools (reference: scripts/ingest_backfill_raw.py:49-78,
-  * scripts/ingest_hourly.py:81-87, scripts/transform.py:113-125). Here the
-  * same layout is Hive-style `partitionBy("year","ticker")` parquet, which
-  * Catalyst partition-prunes automatically — a filter on `year`/`ticker`
-  * never touches other objects, replacing all key-targeted read loops.
+  * scripts/ingest_hourly.py:81-87, scripts/transform.py:113-125). Here a
+  * zone is Hive-style partitioned parquet, which Catalyst prunes
+  * automatically, replacing all key-targeted read loops. The stock
+  * pipeline partitions by `year` and sorts each file by (ticker, date)
+  * ([[graft.pipeline.StockPipeline]]): a `year` filter never touches
+  * other directories, and a `ticker` filter skips row groups through
+  * parquet min/max statistics, without one small file per ticker.
   *
   * Scale notes: dynamic partition overwrite ([[LakeWriter.overwritePartitions]])
   * rewrites ONLY the partitions present in the batch — the reference's

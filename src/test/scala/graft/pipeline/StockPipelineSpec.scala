@@ -73,6 +73,84 @@ class StockPipelineSpec extends SparkSpec {
     assert(!plan.contains("PartitionFilters: []"))
   }
 
+  test("zones hold one directory per year, files sorted by (ticker, date), ticker filters pushed") {
+    val dir = Files.createTempDirectory("stockpipe6").toString
+    val (raw, enr, wh) = (s"$dir/raw", s"$dir/enriched", s"$dir/warehouse")
+    val lastYear = Seq(
+      (ts("2023-12-29"), 9.0, 10.0, 8.0, 9.5, 90L, "BBB", 9.5),
+      (ts("2023-12-28"), 9.0, 10.0, 8.0, 9.0, 90L, "AAA", 9.0))
+      .toDF("date", "open", "high", "low", "close", "volume", "ticker", "adj_close")
+    // input deliberately out of (ticker, date) order
+    val shuffled = bars.unionByName(lastYear).orderBy(col("date").desc, col("ticker").desc)
+    StockPipeline.run(spark, shuffled, ingestTs, raw, enr, wh) shouldBe Right(7L)
+
+    for (zone <- Seq(raw, enr)) {
+      val root = new java.io.File(zone)
+      val dirs = root.listFiles().filter(_.isDirectory)
+      dirs.map(_.getName).sorted.toSeq shouldBe Seq("year=2023", "year=2024")
+      for (d <- dirs) {
+        d.listFiles().filter(_.isDirectory) shouldBe empty
+        val files = d.listFiles().filter(_.getName.endsWith(".parquet"))
+        files should not be empty
+        for (f <- files) {
+          val keys = spark.read.parquet(f.getPath).select("ticker", "date").collect()
+            .map(r => (r.getString(0), r.getTimestamp(1).getTime)).toSeq
+          keys shouldBe keys.sorted
+        }
+      }
+    }
+
+    // a ticker filter reaches the parquet reader (row-group min/max pruning)
+    val tickerPlan = LakeReader.read(spark, raw).filter(col("ticker") === "AAA")
+      .queryExecution.executedPlan.toString
+    assert(tickerPlan.linesIterator.exists(l =>
+      l.contains("PushedFilters") && l.contains("EqualTo(ticker,AAA)")),
+      s"expected ticker pushdown in:\n$tickerPlan")
+  }
+
+  test("numeric-looking tickers stay strings through the pipeline") {
+    val dir = Files.createTempDirectory("stockpipe7").toString
+    val (raw, enr, wh) = (s"$dir/raw", s"$dir/enriched", s"$dir/warehouse")
+    val hk = bars.withColumn("ticker",
+      when(col("ticker") === "AAA", lit("0700")).otherwise(lit("0005")))
+    StockPipeline.run(spark, hk, ingestTs, raw, enr, wh) shouldBe Right(5L)
+    LakeReader.read(spark, wh).schema("ticker").dataType shouldBe
+      org.apache.spark.sql.types.StringType
+    LakeReader.read(spark, wh).select("ticker").distinct().rows.map(_.head).toSet shouldBe
+      Set("0700", "0005")
+  }
+
+  test("load returns the deduplicated row count it wrote") {
+    val dir = Files.createTempDirectory("stockpipe8").toString
+    val (enr, wh) = (s"$dir/enriched", s"$dir/warehouse")
+    // one enriched zone per ingest_ts, then all of them appended into one
+    def enrichedAt(name: String, input: org.apache.spark.sql.DataFrame, at: Timestamp): Unit = {
+      StockPipeline.ingest(input, at, s"$dir/raw_$name")
+      StockPipeline.transform(spark, s"$dir/raw_$name", s"$dir/enr_$name").isRight shouldBe true
+      LakeWriter.append(LakeReader.read(spark, s"$dir/enr_$name"), enr, StockPipeline.partitionCols)
+    }
+    val later = Timestamp.valueOf("2024-01-06 12:00:00")
+    enrichedAt("a", bars, ingestTs)
+    enrichedAt("b", bars, later)
+    LakeReader.read(spark, enr).count() shouldBe 10L     // every (ticker, date) twice
+
+    // the returned count is the warehouse's, read back independently
+    def loadChecked(expected: Long): Unit = {
+      StockPipeline.load(spark, enr, wh) shouldBe expected
+      LakeReader.read(spark, wh).count() shouldBe expected
+    }
+    loadChecked(5L)
+    // the latest ingest_ts wins the dedup
+    LakeReader.read(spark, wh).filter(col("ingest_ts") === lit(later)).count() shouldBe 5L
+
+    loadChecked(5L)                                        // re-run: no-op
+
+    val day4 = Seq((ts("2024-01-04"), 12.0, 13.0, 11.0, 13.31, 130L, "AAA", 13.31))
+      .toDF("date", "open", "high", "low", "close", "volume", "ticker", "adj_close")
+    enrichedAt("c", bars.unionByName(day4), Timestamp.valueOf("2024-01-07 12:00:00"))
+    loadChecked(6L)                                        // incremental: one new row
+  }
+
   test("transform quarantines on schema violation (DQ gate)") {
     val dir = Files.createTempDirectory("stockpipe4").toString
     val bad = bars.withColumn("volume", col("volume").cast("double"))  // wrong dtype
