@@ -5,13 +5,14 @@ import org.apache.spark.sql.functions._
 
 /** Accessors for the driver-generated test lake (TESTDATA.md).
   *
-  * One parquet file per table under `dir`. Reads are plain
-  * `spark.read.parquet`, so Catalyst's filter pushdown / column pruning
-  * apply to every downstream query unchanged.
+  * One parquet file per table under `dir`, opened through
+  * [[graft.sources.LakeReader.read]] (schema from the footer, no Spark
+  * job), so Catalyst's filter pushdown / column pruning apply to every
+  * downstream query unchanged.
   */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.LakeReader.read(spark, s"$dir/$name.parquet")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "orders")

@@ -65,9 +65,8 @@ object LakeWriter {
     * FS rename is atomic; object stores should use a pointer-file
     * indirection instead. */
   def replaceSnapshot(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
-    val sc = df.sparkSession.sparkContext
     val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(sc.hadoopConfiguration)
+    val fs = target.getFileSystem(LakeReader.hadoopConf(df.sparkSession))
     val staging = new org.apache.hadoop.fs.Path(path + ".__staging__")
     val old = new org.apache.hadoop.fs.Path(path + ".__old__")
     fs.delete(staging, true)
@@ -95,7 +94,7 @@ object LakeWriter {
     * live target (death after commit, before cleanup) is swept. */
   def recoverSnapshot(spark: SparkSession, path: String): Unit = {
     val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = target.getFileSystem(LakeReader.hadoopConf(spark))
     val staging = new org.apache.hadoop.fs.Path(path + ".__staging__")
     val old = new org.apache.hadoop.fs.Path(path + ".__old__")
     if (!fs.exists(target) && fs.exists(old))
@@ -142,7 +141,7 @@ object LakeWriter {
     * reports one "" row. */
   def fileCounts(spark: SparkSession, path: String): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(LakeReader.hadoopConf(spark))
     def walk(dir: org.apache.hadoop.fs.Path, rel: String): Seq[(String, Long)] = {
       val entries = fs.listStatus(dir).toSeq
       val subdirs = entries.filter(e => e.isDirectory && e.getPath.getName.contains("="))
@@ -296,17 +295,97 @@ object LakeWriter {
 }
 
 object LakeReader {
+  import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+
+  /** The Hadoop conf of the lake's file-system calls: the session's, the
+    * one `spark.read` lists and scans with, so a session-level
+    * `spark.conf.set("fs.…")` reaches every call here too. */
+  private[sources] def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.sessionState.newHadoopConf()
 
   /** Zone existence check (first-run vs incremental branching). */
   def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    val p = new Path(path)
+    p.getFileSystem(hadoopConf(spark)).exists(p)
   }
 
-  /** Schema-enforced zone read; partition/pushdown filters apply at scan. */
+  /** Schema-enforced zone read; partition/pushdown filters apply at scan.
+    *
+    * A given `schema` is used as is. Without one, the data schema comes
+    * from ONE footer, read on the driver: that of the zone's first
+    * visible data file in sorted path order (a file-stream sink's
+    * output: its first committed file). That is Spark's own
+    * mergeSchema-off inference rule without the Spark job it launches
+    * to read that footer, so the frame's columns (names, types,
+    * nullability, order; partition columns discovered from the listing
+    * and appended last) and rows are exactly `spark.read.parquet`'s.
+    * A path with no visible data file (missing, empty, only `_SUCCESS`)
+    * goes to `spark.read.parquet` unchanged and fails as it does.
+    * Merging every file's schema is refused under
+    * `spark.sql.parquet.mergeSchema`: pass the schema, or read through
+    * [[VersionedLake.read]], which merges with its own reader. */
   def read(spark: SparkSession, path: String, schema: Option[StructType] = None): DataFrame = {
     val r = spark.read
-    schema.fold(r)(s => r.schema(s)).parquet(path)
+    schema.orElse(footerSchema(spark, path)).fold(r)(s => r.schema(s)).parquet(path)
+  }
+
+  /** The data schema Spark's parquet inference would take for `path`
+    * with mergeSchema off, or None where `spark.read.parquet` must infer
+    * (or fail) itself: no visible data file (a glob names no literal
+    * path, so it lands here too), or a file that also stores a
+    * partition column (under a given schema that column would move to
+    * the end). */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet._
+    import org.apache.spark.sql.execution.streaming.runtime.MetadataLogFileIndex
+    import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
+    val sqlConf = spark.sessionState.conf
+    require(!sqlConf.isParquetSchemaMergingEnabled,
+      s"LakeReader.read($path) takes the schema from one footer, but " +
+        "spark.sql.parquet.mergeSchema=true asks to merge every file's: " +
+        "pass the schema, or read through VersionedLake.read")
+    val conf = hadoopConf(spark)
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val qualified = fs.makeQualified(root)
+    val first =
+      if (FileStreamSink.hasMetadata(Seq(path), conf, sqlConf))
+        new MetadataLogFileIndex(spark, qualified, Map.empty, None)
+          .allFiles().minByOption(_.getPath.toString)
+      else firstVisibleFile(fs, qualified)
+    first.flatMap { f =>
+      val footer = new Footer(f.getPath,
+        ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS))
+      val s = ParquetFileFormat.readSchemaFromFooter(footer,
+        new ParquetToSparkSchemaConverter(sqlConf))
+      val partCols = f.getPath.toUri.getPath.stripPrefix(qualified.toUri.getPath)
+        .split('/').dropRight(1).filter(_.contains('='))
+        .map(_.takeWhile(_ != '=').toLowerCase).toSet
+      if (s.fieldNames.exists(n => partCols(n.toLowerCase))) None else Some(s)
+    }
+  }
+
+  /** The first data file under `root` in sorted path order, skipping
+    * the names Spark's listing hides (`_*` without `=`, `.*`,
+    * `*._COPYING_`). Lists only the directories on the way to it: the
+    * children of a directory are visited in the order of the paths
+    * below them, a subdirectory's paths all starting with "name/". */
+  private def firstVisibleFile(fs: FileSystem, root: Path): Option[FileStatus] = {
+    def visible(st: FileStatus): Boolean = {
+      val n = st.getPath.getName
+      !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_"))
+    }
+    def first(st: FileStatus): Option[FileStatus] =
+      if (!st.isDirectory) Some(st)
+      else fs.listStatus(st.getPath).filter(visible)
+        .sortBy(c => if (c.isDirectory) c.getPath.getName + "/" else c.getPath.getName)
+        .iterator.flatMap(first).nextOption()
+    try Some(fs.getFileStatus(root)).filter(st => st.isDirectory || visible(st)).flatMap(first)
+    catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** CSV read with header + schema (reference S2 seed-file shape). */

@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
 object VersionedLake {
 
   private def fs(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new Path(path).getFileSystem(LakeReader.hadoopConf(spark))
 
   private def manifestDir(root: String) = s"$root/_manifest"
 

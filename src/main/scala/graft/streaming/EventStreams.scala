@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.ops.{CountMin, Hll, Merge}
-import graft.sources.LakeWriter
+import graft.sources.{LakeReader, LakeWriter}
 
 /** Structured Streaming over the events stream.
   *
@@ -509,10 +509,10 @@ object EventStreams {
         // first run, and must not silently restart the table from scratch
         LakeWriter.recoverSnapshot(spark, warehousePath)
         val merged =
-          if (!graft.sources.LakeReader.exists(spark, warehousePath))
+          if (!LakeReader.exists(spark, warehousePath))
             Merge.dedupByKey(batch, keys, tiebreak)
           else Merge.upsert(
-            spark.read.parquet(warehousePath), batch, keys, tiebreak)
+            LakeReader.read(spark, warehousePath), batch, keys, tiebreak)
         // staging-dir + rename swap: the previous snapshot survives until
         // the new one commits (an overwrite-in-place of the path the
         // merge just read would be unrecoverable on a mid-write crash)
@@ -585,11 +585,11 @@ object EventStreams {
           .select(baseCols.map(col) :+ col(seqCol).as("__seq") :+
             col(tieCol).as("__tie") :+ col(opCol).as("__op"): _*)
         val current =
-          if (!graft.sources.LakeReader.exists(spark, warehousePath))
+          if (!LakeReader.exists(spark, warehousePath))
             base.withColumn("__seq", lit(null).cast(batch.schema(seqCol).dataType))
               .withColumn("__tie", lit(null).cast(batch.schema(tieCol).dataType))
               .withColumn("__op", lit("U"))
-          else spark.read.parquet(warehousePath)
+          else LakeReader.read(spark, warehousePath)
         val byKey = org.apache.spark.sql.expressions.Window
           .partitionBy(col(key))
           .orderBy(col("__seq").desc_nulls_last, col("__tie").desc_nulls_last)

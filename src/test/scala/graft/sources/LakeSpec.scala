@@ -1,13 +1,199 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.sql.{Date, Timestamp}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
+import graft.pipeline.StockPipeline
 
 class LakeSpec extends SparkSpec {
   import spark.implicits._
+
+  /** `LakeReader.read` resolves `path` exactly as `spark.read.parquet`
+    * does: same columns (names, types, nullability, order, metadata)
+    * and the same rows. */
+  private def readsLikeSpark(path: String): DataFrame = {
+    val (ours, theirs) = (LakeReader.read(spark, path), spark.read.parquet(path))
+    ours.schema shouldBe theirs.schema
+    def sorted(df: DataFrame) = df.rows.sortBy(_.mkString("|"))
+    sorted(ours) shouldBe sorted(theirs)
+    ours
+  }
+
+  /** Spark jobs that `body` starts on this thread. A sentinel job runs
+    * afterwards and is waited for on the listener, so the bus has
+    * delivered every earlier event. Job groups keep the count to this
+    * thread: other suites run jobs concurrently in the same JVM. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val group = s"lakespec-${java.util.UUID.randomUUID}"
+    val sentinel = s"$group-sentinel"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "LakeSpec: zone open")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "LakeSpec: sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(sentinel) && System.nanoTime < deadline) Thread.sleep(10)
+      assert(seen.contains(sentinel), "the sentinel job never reached the listener")
+      seen.asScala.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def stockBars = Seq(
+    (Timestamp.valueOf("2023-12-28 00:00:00"), 10.0, 11.0, 9.0, 10.0, 100L, "AAA", 10.0),
+    (Timestamp.valueOf("2024-01-02 00:00:00"), 10.0, 12.0, 9.0, 11.0, 110L, "AAA", 11.0),
+    (Timestamp.valueOf("2023-12-28 00:00:00"), 50.0, 51.0, 49.0, 50.0, 500L, "0700", 50.0),
+    (Timestamp.valueOf("2024-01-02 00:00:00"), 50.0, 52.0, 48.0, 40.0, 510L, "0700", 40.0)
+  ).toDF("date", "open", "high", "low", "close", "volume", "ticker", "adj_close")
+
+  test("read: every stock zone resolves as spark.read.parquet, 0700 stays a string") {
+    val dir = Files.createTempDirectory("lakeread1").toString
+    val (raw, enr, wh) = (s"$dir/raw", s"$dir/enriched", s"$dir/warehouse")
+    StockPipeline.run(spark, stockBars, Timestamp.valueOf("2024-01-05 12:00:00"),
+      raw, enr, wh) shouldBe Right(4L)
+    Seq(raw, enr, wh).foreach { zone =>
+      val df = readsLikeSpark(zone)
+      // the partition column is discovered from the listing, appended last
+      df.columns.last shouldBe "year"
+      df.schema("year").dataType shouldBe org.apache.spark.sql.types.IntegerType
+      df.schema("ticker").dataType shouldBe org.apache.spark.sql.types.StringType
+      df.select("ticker").distinct().as[String].collect().toSet shouldBe Set("AAA", "0700")
+    }
+  }
+
+  test("read: opening a zone starts no Spark job") {
+    val dir = Files.createTempDirectory("lakeread2").toString
+    val (raw, enr, wh) = (s"$dir/raw", s"$dir/enriched", s"$dir/warehouse")
+    StockPipeline.run(spark, stockBars, Timestamp.valueOf("2024-01-05 12:00:00"),
+      raw, enr, wh) shouldBe Right(4L)
+    // the counter sees the inference job that spark.read.parquet starts
+    jobsStartedBy(spark.read.parquet(wh)) should be >= 1
+    jobsStartedBy {
+      Seq(raw, enr, wh).foreach(z => LakeReader.read(spark, z).queryExecution.analyzed)
+    } shouldBe 0
+  }
+
+  test("read: skips _SUCCESS, .crc, _temporary/ and ._COPYING_ leftovers") {
+    val dir = Files.createTempDirectory("lakeread3").toString
+    val zone = s"$dir/zone"
+    LakeWriter.write(Seq((2023, "A", 1.0), (2024, "B", 2.0)).toDF("year", "ticker", "v"),
+      zone, Seq("year"))
+    // a half-committed task output of another shape, and a file still
+    // being copied in: both sort ahead of every committed file
+    Seq((1L, "x")).toDF("other", "shape").write.parquet(s"$zone/_temporary/0")
+    Files.write(Paths.get(s"$zone/a.parquet._COPYING_"), Array[Byte](1, 2, 3))
+    val names = Files.walk(Paths.get(zone)).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(names.contains("_SUCCESS") && names.exists(n => n.startsWith(".") && n.endsWith(".crc")),
+      names.mkString(", "))
+    readsLikeSpark(zone).columns.toSeq shouldBe Seq("ticker", "v", "year")
+    // a glob is expanded by Spark's own listing
+    readsLikeSpark(s"$zone/year=202*").columns.toSeq shouldBe Seq("ticker", "v")
+  }
+
+  test("read: files that also store their partition column keep Spark's column order") {
+    val dir = Files.createTempDirectory("lakeread10").toString
+    Seq((2023, 1.0)).toDF("year", "v").write.parquet(s"$dir/zone/year=2023")
+    Seq((2024, 2.0)).toDF("year", "v").write.parquet(s"$dir/zone/year=2024")
+    readsLikeSpark(s"$dir/zone").columns.toSeq shouldBe Seq("year", "v")
+  }
+
+  test("read: a single-file path") {
+    val dir = Files.createTempDirectory("lakeread4").toString
+    Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("k", "s", "v").coalesce(1).write.parquet(s"$dir/t")
+    val file = new java.io.File(s"$dir/t").listFiles().map(_.getPath)
+      .filter(_.endsWith(".parquet")).head
+    readsLikeSpark(file).columns.toSeq shouldBe Seq("k", "s", "v")
+    jobsStartedBy(LakeReader.read(spark, file)) shouldBe 0
+  }
+
+  test("read: timestamp columns, from Spark and from a foreign writer") {
+    val dir = Files.createTempDirectory("lakeread5").toString
+    Seq((Timestamp.valueOf("2024-03-01 09:30:00"), Date.valueOf("2024-03-01"), 1L))
+      .toDF("ts", "d", "k")
+      .withColumn("ntz", to_timestamp_ntz(lit("2024-03-01 09:30:00")))
+      .write.parquet(s"$dir/spark")
+    readsLikeSpark(s"$dir/spark").schema.map(_.dataType.typeName) shouldBe
+      Seq("timestamp", "date", "long", "timestamp_ntz")
+    // no Spark row metadata: the footer's parquet types are converted
+    // under the session conf (nanosAsLong reads TIMESTAMP(NANOS) as long)
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 ts_ns (TIMESTAMP(NANOS,true)); " +
+        "required int64 ts_us (TIMESTAMP(MICROS,false)); required int32 k; }")
+    val w = ExampleParquetWriter.builder(
+        new org.apache.hadoop.fs.Path(s"$dir/foreign/part-0.parquet"))
+      .withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("ts_ns", 1709285400123456789L).append("ts_us", 1709285400123456L)
+      .append("k", 7))
+    finally w.close()
+    readsLikeSpark(s"$dir/foreign").schema.map(_.dataType.typeName) shouldBe
+      Seq("long", "timestamp_ntz", "integer")
+  }
+
+  test("read: a missing path and a zone holding only _SUCCESS fail as spark.read.parquet") {
+    val dir = Files.createTempDirectory("lakeread6").toString
+    Files.createDirectories(Paths.get(s"$dir/empty/year=2024"))
+    Files.write(Paths.get(s"$dir/empty/_SUCCESS"), Array.emptyByteArray)
+    Files.write(Paths.get(s"$dir/empty/year=2024/_SUCCESS"), Array.emptyByteArray)
+    Seq(s"$dir/missing", s"$dir/empty").foreach { p =>
+      val ours = intercept[AnalysisException](LakeReader.read(spark, p))
+      val theirs = intercept[AnalysisException](spark.read.parquet(p))
+      ours.getCondition shouldBe theirs.getCondition
+      ours.getMessage shouldBe theirs.getMessage
+    }
+  }
+
+  test("read: a file-stream sink's schema comes from a committed file") {
+    val dir = Files.createTempDirectory("lakeread7").toString
+    Seq((1L, "a"), (2L, "b")).toDF("k", "s").write.parquet(s"$dir/src")
+    spark.readStream.schema("k long, s string").parquet(s"$dir/src")
+      .writeStream.format("parquet").option("path", s"$dir/sink")
+      .option("checkpointLocation", s"$dir/ckpt")
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    // a failed attempt's file, not in the sink log, sorts first
+    Files.write(Paths.get(s"$dir/sink/part-0.parquet"), Array[Byte](1, 2, 3))
+    readsLikeSpark(s"$dir/sink").count() shouldBe 2
+  }
+
+  test("read: a session with mergeSchema on is refused, a given schema still reads") {
+    val dir = Files.createTempDirectory("lakeread8").toString
+    Seq((1L, "a")).toDF("k", "s").write.parquet(s"$dir/t")
+    // an isolated session: suites share the default one concurrently
+    val merging = spark.newSession()
+    merging.conf.set("spark.sql.parquet.mergeSchema", "true")
+    val ex = intercept[IllegalArgumentException](LakeReader.read(merging, s"$dir/t"))
+    ex.getMessage should include("spark.sql.parquet.mergeSchema")
+    LakeReader.read(merging, s"$dir/t", Some(spark.read.parquet(s"$dir/t").schema))
+      .rows shouldBe Seq(Seq(1L, "a"))
+  }
+
+  test("exists and read use the session's Hadoop conf") {
+    val dir = Files.createTempDirectory("lakeread9").toString
+    Seq((1L, "a")).toDF("k", "s").write.parquet(s"$dir/t")
+    val alias = s"lakealias://$dir/t"
+    val s2 = spark.newSession()
+    s2.conf.set("fs.lakealias.impl", classOf[AliasLocalFs].getName)
+    LakeReader.exists(s2, alias) shouldBe true
+    LakeReader.read(s2, alias).rows shouldBe Seq(Seq(1L, "a"))
+  }
 
   test("dynamic partition overwrite touches only the batch's partitions") {
     val dir = Files.createTempDirectory("lake1").toString
@@ -227,4 +413,11 @@ class LakeSpec extends SparkSpec {
     LakeWriter.recoverSnapshot(spark, s"$root/never_written")
     assert(!Files.exists(java.nio.file.Paths.get(s"$root/never_written")))
   }
+}
+
+/** The local file system under another scheme, which only a session
+  * that sets `fs.lakealias.impl` can resolve. */
+class AliasLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "lakealias"
+  override def getUri: java.net.URI = java.net.URI.create("lakealias:///")
 }
