@@ -10,6 +10,14 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.PlanAudit [sfDir]
   */
 object PlanAudit {
+  /** Shuffle exchanges of every partitioning flavor (hash, range,
+    * single-partition, round-robin) in a physical plan's string form,
+    * the count `PlanBudgetSpec` budgets. Broadcast exchanges are not
+    * shuffles and are counted with their joins instead. */
+  def exchanges(plan: String): Int =
+    "Exchange (hashpartitioning|rangepartitioning|SinglePartition|RoundRobinPartitioning)"
+      .r.findAllIn(plan).length
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = GraftSession.local("plan-audit")
@@ -19,7 +27,7 @@ object PlanAudit {
       try {
         val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
         def n(p: String) = p.r.findAllIn(plan).length
-        println(f"$name%-26s ${n("ShuffleExchange|Exchange hashpartitioning|Exchange rangepartitioning")}%4d " +
+        println(f"$name%-26s ${exchanges(plan)}%4d " +
           f"${n("BroadcastHashJoin|BroadcastNestedLoopJoin")}%5d ${n("SortMergeJoin")}%3d " +
           f"${n("BroadcastNestedLoopJoin")}%4d ${n("CartesianProduct")}%4d " +
           f"${n("Scan parquet|FileScan")}%4d ${n("WholeStageCodegen")}%4d")

@@ -118,29 +118,6 @@ object Dedup {
       .select(col(id) +: sigCols: _*)
   }
 
-  /** LSH banding of a k-column minhash signature into `bands` buckets per
-    * doc: docs agreeing on all rows of any band land in the same bucket. */
-  def lshBuckets(sig: DataFrame, id: String, k: Int = 16, bands: Int = 4): DataFrame = {
-    require(bands > 0 && k % bands == 0,
-      s"bands ($bands) must evenly divide the signature size ($k) — " +
-        "a remainder would silently drop minhashes and lower recall")
-    val rows = k / bands
-    val bandCols = (0 until bands).map { b =>
-      val cols = (b * rows until (b + 1) * rows).map(i => col(s"m$i"))
-      struct(lit(b).as("band"), xxhash64(cols: _*).as("bucket"))
-    }
-    sig.select(col(id), explode(array(bandCols: _*)).as("bb"))
-      .select(col(id), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-  }
-
-  /** Spread a CPU-heavy map stage across all cores when the source has
-    * fewer splits than the cluster's parallelism: one small parquet file
-    * is one task, so a millions-of-hashes signature pass would run
-    * single-threaded however many cores exist. A no-op when the input
-    * is already parallel enough — at real scale file splits outnumber
-    * cores and the extra shuffle would be pure waste. */
-  private def spread(df: DataFrame): DataFrame = Skew.spread(df)
-
   /** ⌈threshold·sz⌉ in EXACT decimal arithmetic. The IEEE double
     * product t·sz can land 1 ulp above a mathematically integral value
     * (e.g. 0.7·10), and ceil then overshoots by one — shortening a
@@ -160,19 +137,13 @@ object Dedup {
     * scale one boilerplate bucket can melt a join without this cap). */
   private def bandedSignatures(df: DataFrame, id: String, text: String,
                                shingleSize: Int, k: Int, bands: Int,
-                               maxBucket: Int, portable: Boolean,
-                               spreadInput: Boolean = true): DataFrame = {
+                               maxBucket: Int, portable: Boolean): DataFrame = {
     require(bands > 0 && k % bands == 0,
       s"bands ($bands) must evenly divide the signature size ($k)")
     val rows = k / bands
-    // spreadInput = false states the caller's intent for frames already
-    // materialized through a shuffle (a checkpointed batch). Since
-    // round 7 Skew.spread also skips file-LESS frames on its own
-    // (assume-parallel default), so this flag is belt-and-braces there
-    // — but it still matters for file-BACKED frames that are
-    // post-shuffle wide, which the file-count heuristic undercounts
-    val src = if (spreadInput) spread(df) else df
-    val sig = minhashSignatures(src, id, text, shingleSize, k, portable)
+    // a one-split source would run the millions-of-hashes signature
+    // pass in one task; a checkpointed (file-less) batch passes unchanged
+    val sig = minhashSignatures(Skew.spread(df), id, text, shingleSize, k, portable)
     def bandBucket(cols: Seq[Column]): Column =
       if (portable) md5(concat_ws(",", cols: _*)) else xxhash64(cols: _*)
     val banded = sig.select(
@@ -398,7 +369,7 @@ object Dedup {
     val fresh = cut(newDocs.withColumn("__h", md5(col(text)))
       .join(histHashes, Seq("__h"), "left_anti").drop("__h"), reliable)
     val newBanded = bandedSignatures(fresh, id, text, shingleSize, k, bands,
-      maxBucket, portable, spreadInput = false) // checkpointed: already parallel
+      maxBucket, portable)
       .select(col("band"), col("bucket"), col(id).as("id_a"))
     val histBanded = bandedSignatures(historical, id, text, shingleSize, k,
       bands, maxBucket, portable)
@@ -772,7 +743,7 @@ object Dedup {
     // map-only subtree. Measured at ×30 corpus: localCheckpoint here
     // made span mining 2.4× SLOWER (21.9 s vs 9.2 s) — recompute beats
     // materialize for cheap-to-rebuild, expansion-heavy projections.
-    val grams = positionedGrams(spread(df), id, text, n)
+    val grams = positionedGrams(Skew.spread(df), id, text, n)
     // the inverted-index pass: grams that recur across documents. The
     // frequent set is data-dependent and unbounded, so it meets the
     // occurrence list in a shuffle equi-join (AQE broadcasts it when it

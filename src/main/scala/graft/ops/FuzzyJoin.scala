@@ -51,8 +51,7 @@ object FuzzyJoin {
     * a frame before calling, or the spread protection cannot see it. */
   def blockedLevenshtein(df: DataFrame, id: String, str: String,
                          block: Column, maxDist: Int,
-                         maxBlock: Int = 1000, salts: Int = 1,
-                         spreadInput: Boolean = true): DataFrame = {
+                         maxBlock: Int = 1000, salts: Int = 1): DataFrame = {
     // the cap trades recall for a bound — measure the trade with
     // [[droppedBlocks]] alongside any production run, never assume it
     require(maxDist >= 0, s"maxDist must be non-negative, got $maxDist")
@@ -66,13 +65,9 @@ object FuzzyJoin {
     // spread the probe/stream side: when the small side broadcasts, the
     // edit-distance work runs in the JOIN CONDITION on the stream side's
     // tasks — a one-file scan would serialize all of it on one core
-    // (measured 12 s → 1.3 s at sf0.1; see Skew.spread). `spreadInput =
-    // false` opts out for callers whose frame is already parallel in a
-    // way the file-count heuristic can't see (Skew.spread itself now
-    // skips file-LESS frames, but a one-file-backed frame that is
-    // post-shuffle wide still looks narrow to it)
-    val aCols = blocked.select(col("__blk"), col(id).as("id_a"), col(str).as("__sa"))
-    val a = if (spreadInput) Skew.spread(aCols) else aCols
+    // (measured 12 s → 1.3 s at sf0.1; see Skew.spread)
+    val a = Skew.spread(
+      blocked.select(col("__blk"), col(id).as("id_a"), col(str).as("__sa")))
     val b = blocked.select(col("__blk"), col(id).as("id_b"), col(str).as("__sb"))
     val paired =
       if (salts <= 1) a.join(b, Seq("__blk"))

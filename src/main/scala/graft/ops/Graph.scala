@@ -94,21 +94,6 @@ object Graph {
   def loadEdges(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(s"$path/edges.parquet").select(col("src"), col("dst"))
 
-  /** Compact a persisted edge frame in place: each [[appendEdges]] call
-    * adds one file per bucket, so after N appends a reader opens
-    * N×buckets files — when N grows past the lake's file-count comfort,
-    * this rewrite collapses every bucket back to a single file (and
-    * dedups any cross-delta duplicates, upgrading degree-style
-    * consumers back to the no-distinct fast path). A full rewrite by
-    * construction — schedule it like any compaction (maintenance
-    * window, frequency amortized over appends); the frame materializes
-    * via localCheckpoint before the overwrite touches the files it was
-    * read from. */
-  def compactEdges(spark: SparkSession, path: String): Unit = {
-    val b = edgeBuckets(spark, path)
-    saveEdges(loadEdges(spark, path).localCheckpoint(), "src", "dst", path, b)
-  }
-
   /** PageRank with damping over a directed edge list. Exact replay
     * contract (the [[Pca]] pattern): rank₀ = 1/n; per iteration
     * rank'(v) = (1−d)/n + d·(Σ_{u→v} q(rank(u)/outdeg(u)) + dm/n)

@@ -178,16 +178,17 @@ object Recommend {
     }
     // seen-set anti-join BEFORE the aggregation: on a dense catalog
     // most candidate rows point at already-seen items (exclusion and
-    // summation commute, but aggregating first was MEASURED 2× slower —
-    // ScoreTime r19: the early cut does real work). The seen side is
-    // HASH-built, not sort-merged: the streamed side is the candidate
-    // expansion (|pres| × sim fan-out — strictly the larger side), and
-    // an SMJ pays a full sort of it, measured +3 s at sf0.1 (ScoreTime
-    // interleaved A/C: med 7.0 → 4.1 s). The build side is the DISTINCT
-    // presence frame — one row per (user, item), |pres|/R rows per
-    // reducer with no per-key skew, so the per-partition hash table is
-    // bounded the same way the SMJ sort buffer would be, and AQE's
-    // skew-split still applies to shuffled-hash joins. Trade-off: a
+    // summation commute, but aggregating first was MEASURED 2× slower:
+    // the early cut does real work). The seen side is HASH-built, not
+    // sort-merged: the streamed side is the candidate expansion
+    // (|pres| × sim fan-out — strictly the larger side), and an SMJ
+    // pays a full sort of it, measured +3 s at sf0.1 (interleaved A/C:
+    // med 7.0 → 4.1 s; both in OPTIMIZATION_r19.md §1). The build side
+    // is the DISTINCT presence frame — one row per (user, item),
+    // |pres|/R rows per reducer with no per-key skew, so the
+    // per-partition hash table is bounded the same way the SMJ sort
+    // buffer would be, and AQE's skew-split still applies to
+    // shuffled-hash joins. Trade-off: a
     // shuffled-hash build side cannot spill to disk, so a reducer whose
     // presence slice outgrows executor memory fails where an SMJ would
     // spill; the bound above assumes R grows with the data.

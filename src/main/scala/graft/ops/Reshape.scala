@@ -21,11 +21,6 @@ object Reshape {
               varName: String, valueName: String): DataFrame =
     df.unpivot(ids.map(col).toArray, values.map(col).toArray, varName, valueName)
 
-  /** Header normalization: lowercase every column
-    * (reference: ingest_backfill_raw.py:42). */
-  def lowercaseColumns(df: DataFrame): DataFrame =
-    df.toDF(df.columns.toIndexedSeq.map(_.toLowerCase): _*)
-
   /** Long→wide pivot (inverse of unpivot; dashboard-side reshaping).
     * Without an explicit value list Spark runs a driver-side DISTINCT
     * job to discover the columns first — fine interactively, an extra

@@ -81,10 +81,10 @@ object Similarity {
     * loses 0.3–0.7 s per query. 256 sits between the regimes — ≥ 8
     * task-widths of kernel work per candidate row at local[32].
     *
-    * Pinned by the r19 |Q| sweep (tools/KneeTime, 3-rep medians,
-    * spread − unspread seconds): 16 → −0.41, 32 → −0.47, 64 → −0.17,
-    * 96 → −0.15, 128 → −0.59, 192 → −0.06 (wash), 256 → **+0.62**,
-    * 512 → +1.70, 2000 → +10.6. The knee sits between 192 and 256 —
+    * Pinned by the r19 |Q| sweep (OPTIMIZATION_r19.md §5, 3-rep
+    * medians, spread − unspread seconds): 16 → −0.41, 32 → −0.47,
+    * 64 → −0.17, 96 → −0.15, 128 → −0.59, 192 → −0.06 (wash),
+    * 256 → **+0.62**, 512 → +1.70, 2000 → +10.6. The knee sits between 192 and 256 —
     * this constant IS the measured crossover, not an interpolation. */
   private[ops] val SpreadMinQueries: Long = 256L
 
@@ -122,9 +122,9 @@ object Similarity {
     // broadcast branch: the candidate side streams with NO exchange, so
     // its scan parallelism IS the stage parallelism — a small corpus
     // that fits one file split would evaluate the whole |C|·|Q| cosine
-    // product in ONE task ([[Skew.spread]]'s er_fuzzy_pairs lesson; the
-    // round-18 LofTime bisection measured emb_lof_outliers' n² scoring
-    // single-threaded for exactly this reason). spread is a no-op when
+    // product in ONE task ([[Skew.spread]]'s er_fuzzy_pairs lesson;
+    // emb_lof_outliers' n² scoring ran single-threaded for exactly this
+    // reason, OPTIMIZATION_r18.md §2.1). spread is a no-op when
     // splits ≥ cores — the 100 TB case by construction — but it is NOT
     // free when it fires: one exchange + one stage barrier. The probe
     // count says whether it pays: per candidate row the stage does |Q|

@@ -47,25 +47,16 @@ object Skew {
     *
     * FILE-LESS frames (in-memory, checkpointed, cached) report zero
     * `inputFiles`, and their true partitioning cannot be inspected
-    * without instantiating the physical plan. Two honest choices
-    * remain, selected by `knownParallelism`:
-    *  - `None` (default): ASSUME parallel and skip the exchange — a
-    *    large checkpointed batch or post-shuffle intermediate is
-    *    already spread across the cluster, and a silent mandatory
-    *    repartition there is pure waste (the round-6 foot-gun callers
-    *    had to dodge by hand);
-    *  - `Some(p)`: the caller states the frame's actual parallelism —
-    *    a local Seq-sourced frame is `Some(1)`, a frame built on k
-    *    files upstream of a checkpoint is `Some(k)` — and the same
-    *    splits-vs-cores rule applies to it.
-    * An explicit hint always wins, even on a file-backed frame: the
-    * caller may know the post-shuffle layout the file count can't see. */
-  def spread(df: DataFrame, knownParallelism: Option[Int] = None): DataFrame = {
+    * without instantiating the physical plan, so they are ASSUMED
+    * parallel and returned unchanged: a large checkpointed batch or
+    * post-shuffle intermediate is already spread across the cluster,
+    * and a mandatory repartition there is pure waste. A genuinely
+    * narrow file-less frame (a driver-built Seq) must be repartitioned
+    * by its caller. */
+  def spread(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     val files = df.inputFiles.length
-    val splits = knownParallelism.getOrElse(
-      if (files > 0) files else target) // file-less, no hint: assume parallel
-    if (splits >= target) df else df.repartition(target)
+    if (files == 0 || files >= target) df else df.repartition(target)
   }
 
   /** Two-phase (salted) aggregation.

@@ -37,11 +37,11 @@ object TextQueries {
   private[graft] def coocEdges(s: SparkSession, dir: String): DataFrame = {
     // THREE consumers scan sh (the rare-gram groupBy and both sides of
     // the rt self-join) and each would re-run the tokenize + explode +
-    // distinct chain from the documents scan — cut once (EdgeTime r19
-    // interleaved A/B: med 3.17 → 2.40 s, min 1.85 → 1.26). Cutting rt
-    // as well was MEASURED SLOWER (med 2.63): a 2-consumer frame with
-    // one cheap join of lineage atop the cut — the Market.itemCounts
-    // lesson holds here too.
+    // distinct chain from the documents scan — cut once (interleaved
+    // A/B, OPTIMIZATION_r19.md §2: med 3.17 → 2.40 s, min 1.85 → 1.26).
+    // Cutting rt as well was MEASURED SLOWER (med 2.63): a 2-consumer
+    // frame with one cheap join of lineage atop the cut — the
+    // Market.itemCounts lesson holds here too.
     val sh = coocShingles(s, dir).localCheckpoint()
     val rare = sh.groupBy(col("gram")).agg(count(lit(1)).as("c"))
       .filter(col("c").between(2, 4)).select(col("gram"))
@@ -262,7 +262,7 @@ object TextQueries {
     "graph_edges_append" -> ((s, dir) => {
       // the edge frame feeds BOTH the base write and the delta append —
       // cut the (tiny) final frame instead of re-running the self-join
-      // close per consumer (EdgeTime r19 phase 2: med 1.54 → 1.32 s)
+      // close per consumer (OPTIMIZATION_r19.md §2 phase 2: med 1.54 → 1.32 s)
       val all = coocEdges(s, dir).localCheckpoint()
       val tmp = QuerySql.tempDir("graft_edgeappend")
       Graph.saveEdges(all.filter(col("src") <= 450 && col("dst") <= 450),

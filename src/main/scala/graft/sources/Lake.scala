@@ -48,11 +48,6 @@ object LakeWriter {
       .partitionBy(partitionCols: _*)
       .parquet(path)
 
-  /** CSV export (reference S10: scripts/ingest_backfill_sp500.py:34-39 —
-    * dormant local CSV path for dashboard hosting). */
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-
   /** Crash-safe snapshot replace for a serving table DERIVED FROM the
     * path being replaced: write the new snapshot to a sibling staging
     * dir first, then swap via two renames. A plain overwrite-in-place
@@ -386,13 +381,6 @@ object LakeReader {
         .iterator.flatMap(first).nextOption()
     try Some(fs.getFileStatus(root)).filter(st => st.isDirectory || visible(st)).flatMap(first)
     catch { case _: java.io.FileNotFoundException => None }
-  }
-
-  /** CSV read with header + schema (reference S2 seed-file shape). */
-  def readCsv(spark: SparkSession, path: String,
-              schema: Option[StructType] = None): DataFrame = {
-    val r = spark.read.option("header", "true")
-    schema.fold(r.option("inferSchema", "true"))(s => r.schema(s)).csv(path)
   }
 
   /** One partition subset, expressed as a filter so Catalyst prunes at

@@ -62,9 +62,9 @@ object ScaleSmoke {
     // measure a vanishing input, not the operator
     "emb_covariance", "emb_pca_project", "sample_temperature_mix",
     // graph_triangles / graph_khop share the same caveat (their input
-    // graph SHRINKS under replication) — their scale decades live in
-    // tools/GraphTime over synthetic graphs with a true ×10/×30 edge
-    // axis instead
+    // graph SHRINKS under replication) — their scale decades were
+    // measured over synthetic graphs with a true ×10/×30 edge axis
+    // instead (BENCH_NOTES_r9.md §8)
     "corr_series_pairs", "beta_vs_market", "hist_equi_depth",
     "skyline_pareto", "ts_ohlc_weekly")
 

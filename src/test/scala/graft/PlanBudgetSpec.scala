@@ -44,8 +44,7 @@ class PlanBudgetSpec extends SparkSpec {
   // broadcast-nested-loop joins, cartesian products)
   private def metrics(plan: String): Seq[Int] = {
     def n(p: String) = p.r.findAllIn(plan).length
-    Seq(
-      n("Exchange (hashpartitioning|rangepartitioning|SinglePartition|RoundRobinPartitioning)"),
+    Seq(PlanAudit.exchanges(plan),
       n("SortMergeJoin"), n("BroadcastNestedLoopJoin"), n("CartesianProduct"))
   }
 

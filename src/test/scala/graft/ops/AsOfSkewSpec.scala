@@ -128,18 +128,11 @@ class AsOfSkewSpec extends SparkSpec {
     }
   }
 
-  test("spread: file-less frames skip the exchange unless a hint forces it") {
-    val target = spark.sparkContext.defaultParallelism
+  test("spread: file-less frames skip the exchange") {
     val inMem = (1 to 100).map(i => (i, s"v$i")).toDF("k", "v")
-    // no files, no hint → assume parallel, plan unchanged (no extra exchange)
+    // no files → assume parallel, plan unchanged (no extra exchange)
     Skew.spread(inMem).queryExecution.analyzed shouldBe
       inMem.queryExecution.analyzed
-    // explicit Some(1): the caller states it's narrow → repartition to cores
-    Skew.spread(inMem, knownParallelism = Some(1))
-      .rdd.getNumPartitions shouldBe target
-    // a hint at/above cores is a stated no-op even when files say otherwise
-    Skew.spread(inMem, knownParallelism = Some(target))
-      .queryExecution.analyzed shouldBe inMem.queryExecution.analyzed
   }
 
   test("spread: a narrow file-backed scan is rebalanced to cores") {
@@ -150,25 +143,6 @@ class AsOfSkewSpec extends SparkSpec {
     scan.inputFiles.length shouldBe 1
     Skew.spread(scan).rdd.getNumPartitions shouldBe
       spark.sparkContext.defaultParallelism
-  }
-
-  test("spread: an explicit hint beats the file count on a file-backed scan") {
-    val target = spark.sparkContext.defaultParallelism
-    val dir = java.nio.file.Files.createTempDirectory("graft_spread_h").toString
-    (1 to 50).map(i => (i, i * 2)).toDF("a", "b")
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    val one = spark.read.parquet(dir)
-    one.inputFiles.length shouldBe 1
-    // hint says parallel → no exchange, even though files==1 says narrow
-    Skew.spread(one, knownParallelism = Some(target))
-      .queryExecution.analyzed shouldBe one.queryExecution.analyzed
-    // and the inverse: many files, hint says narrow → forced rebalance
-    (1 to 50).map(i => (i, i * 2)).toDF("a", "b")
-      .repartition(4).write.mode("overwrite").parquet(dir)
-    val many = spark.read.parquet(dir)
-    assert(many.inputFiles.length > 1)
-    Skew.spread(many, knownParallelism = Some(1))
-      .rdd.getNumPartitions shouldBe target
   }
 
   test("bpeTokenCount and rollingHashFingerprint basics") {

@@ -1,14 +1,16 @@
 package graft.ops
 
 import graft.SparkSpec
+import scala.jdk.CollectionConverters._
 
 /** Pins the round-18 wave-2 rebalance sites: operators whose
   * compute-dense pre-shuffle stage consumes a raw scan must route that
-  * stage through [[Skew.spread]], so a one-split corpus (the LofTime
-  * finding: 780 KB of embeddings = ONE file split = the whole n² cosine
-  * product in ONE task) parallelizes to the cluster width. The pin is
-  * structural — a RoundRobinPartitioning exchange in the pre-execution
-  * plan of each operator over a deliberately single-split parquet scan —
+  * stage through [[Skew.spread]], so a one-split corpus (the
+  * OPTIMIZATION_r18.md §2.1 finding: 780 KB of embeddings = ONE file
+  * split = the whole n² cosine product in ONE task) parallelizes to the
+  * cluster width. The pin is structural — a RoundRobinPartitioning
+  * exchange in the pre-execution plan of each operator over a
+  * deliberately single-split parquet scan —
   * because the result rows are partitioning-invariant by the repo's
   * standing exactness contracts (verified separately by each operator's
   * own spec + the DuckDB oracles).
@@ -39,6 +41,43 @@ class SpreadSitesSpec extends SparkSpec
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** Round-robin exchanges in the executed plans of every Dataset action
+    * `body` runs whose analyzed plan mentions `tag` — eager checkpoints
+    * included, whose plans the returned frame no longer shows. A
+    * sentinel action is waited for on the listener, so the bus has
+    * delivered every earlier event. */
+  private def roundRobinsRunBy(tag: String)(body: => Unit): Int = {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sentinel = s"${tag}_sentinel"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def mentions(qe: QueryExecution, s: String) = qe.analyzed.toString.contains(s)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF(sentinel).collect()
+      val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(mentions(_, sentinel)) && System.nanoTime < deadline)
+        Thread.sleep(10)
+      assert(seen.asScala.exists(mentions(_, sentinel)),
+        "the sentinel action never reached the listener")
+      val helper = new AdaptiveSparkPlanHelper {}
+      seen.asScala.filter(qe => mentions(qe, tag) && !mentions(qe, sentinel))
+        .map(qe => helper.collect(qe.executedPlan) {
+          case e: ShuffleExchangeExec
+              if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+        }.size).sum
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("queryProductJoin broadcast branch spreads a one-split candidate " +
       "scan when the query side is fat, and leaves it alone when thin") {
@@ -129,6 +168,33 @@ class SpreadSitesSpec extends SparkSpec
       vec = "embedding", cents, nprobe = 1, k = 3))
     assert(!thin.contains("RoundRobinPartitioning"),
       s"expected NO rebalance for the serving default, plan:\n$thin")
+  }
+
+  test("blockedLevenshtein spreads a one-split probe-side scan") {
+    val dir = oneSplitParquet { d =>
+      (0L until 32L).map(i => (i, s"name${i % 8}x${i % 3}"))
+        .toDF("id", "name").coalesce(1).write.mode("overwrite").parquet(d)
+    }
+    import org.apache.spark.sql.functions.{col, substring}
+    val plan = planOf(FuzzyJoin.blockedLevenshtein(spark.read.parquet(dir),
+      id = "id", str = "name", block = substring(col("name"), 1, 5), maxDist = 1))
+    assert(plan.contains("RoundRobinPartitioning"),
+      s"expected the probe side rebalanced before the edit-distance join, plan:\n$plan")
+  }
+
+  test("dedupIncremental spreads the one-split historical scan but not " +
+      "its checkpointed new batch") {
+    def docs(from: Long) = (from until from + 32L).map(i =>
+        (i, s"alpha beta gamma delta token${i % 5} token${i % 7} token$i"))
+      .toDF("spread_probe_id", "text").coalesce(1)
+    val newDir = oneSplitParquet(d => docs(0L).write.mode("overwrite").parquet(d))
+    val histDir = oneSplitParquet(d => docs(16L).write.mode("overwrite").parquet(d))
+    // the new batch is localCheckpointed (file-less) before it is banded,
+    // so only the historical side's banding pays a rebalance
+    roundRobinsRunBy("spread_probe_id") {
+      Dedup.dedupIncremental(spark.read.parquet(newDir),
+        spark.read.parquet(histDir), "spread_probe_id", "text").collect()
+    } shouldBe 1
   }
 
   test("Pca.covariance spreads a one-split vector scan") {
