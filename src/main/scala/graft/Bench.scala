@@ -142,7 +142,9 @@ object Bench {
     // and single runs vary ±2×; the median measures the engine, not the
     // noise, and unlike min it can't be flattered by one lucky cache-warm
     // run. A failed query records -1 (never a fast-looking time-to-throw)
-    // and logs to stderr.
+    // and logs to stderr. Each run writes the query into Spark's noop
+    // sink, which computes every output column; count() would let the
+    // optimizer prune the columns no filter or join reads.
     // dev filter: SPARK_GRAFT_BENCH_ONLY=q1,q2 times just those queries
     // (local iteration on one operator without the 140-query loop); the
     // driver never sets it, so round artifacts always cover everything
@@ -197,7 +199,10 @@ object Bench {
       .map { case (name, fn) =>
       def run(): Double = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0
@@ -377,6 +382,11 @@ object Bench {
       }.mkString("{", ",", "}")
       println(s"""{"metric":"med_min_max","part":${i + 1},"of":${chunks.size},"queries":$part}""")
     }
+    // every query's [median,min,max] on one line, for parsers that want
+    // the whole per-query map without stitching the chunks together
+    println(results.map { case (k, (med, mn, mx)) =>
+      s""""$k":[${r3(med)},${r3(mn)},${r3(mx)}]"""
+    }.mkString("""{"metric":"per_query","queries":{""", ",", "}}"))
     println(writeStatus)
     // health fields repeat on the tail-surviving compact line: a bounded
     // tail capture must carry the contamination evidence, not just the

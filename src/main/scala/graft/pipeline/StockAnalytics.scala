@@ -53,9 +53,14 @@ object StockAnalytics {
       .agg(max_by(col("pct_diff"), col("date")).as("final_pct_diff"))
 
   /** Latest-day snapshot joined with the dimension table
-    * (reference: app.py:75-97 — dim join, ROW_NUMBER window, rn=1). */
+    * (reference: app.py:75-97 — dim join, ROW_NUMBER window, rn=1).
+    * Finishes in one task: Spark's partial `WindowGroupLimit` keeps at
+    * most one row per ticker per map task ahead of the hash exchange, so
+    * the single final task reads at most |tickers| × map-tasks rows, and
+    * the display sort on that one partition needs no range exchange. */
   def latestSnapshot(metrics: DataFrame, dim: DataFrame): DataFrame = {
     val latest = Snapshot.latestPerKey(metrics, keys = Seq("ticker"), order = Seq("date"))
+      .coalesce(1)
     latest.join(broadcast(dim), latest("ticker") === dim("ticker_symbol"))
       .select(col("ticker"), col("security_name"), col("gics_sector"),
         col("date"), col("close"), col("daily_return"), col("rolling_vol_30d"))
@@ -63,7 +68,10 @@ object StockAnalytics {
   }
 
   /** Sector top gainers/losers (reference: app.py:140-148 —
-    * n = min(count/2, 20), TakeOrderedAndProject in Spark). */
+    * n = min(count/2, 20)). Over a [[latestSnapshot]] the whole query
+    * stays in that snapshot's single task: its windows need no
+    * `SinglePartition` exchange, and the snapshot's display sort is
+    * dropped by [[graft.functions.EliminateSortBelowWindow]]. */
   def topMovers(snapshot: DataFrame, sector: String,
                 gainers: Boolean): DataFrame = {
     val by: Column = if (gainers) col("daily_return").desc else col("daily_return").asc

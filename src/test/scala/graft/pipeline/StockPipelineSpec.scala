@@ -167,7 +167,13 @@ class StockPipelineSpec extends SparkSpec {
   test("analytics: trends, final returns, relative, snapshot, top movers, unpivot") {
     val dir = Files.createTempDirectory("stockpipe5").toString
     val (raw, enr, wh) = (s"$dir/raw", s"$dir/enriched", s"$dir/warehouse")
-    StockPipeline.run(spark, bars, ingestTs, raw, enr, wh)
+    // three more Tech tickers, two days each: latest returns +0.25, -0.10, +0.05
+    val tech = Seq(("CCC", 20.0, 25.0), ("DDD", 30.0, 27.0), ("EEE", 40.0, 42.0)).flatMap {
+      case (t, c1, c2) => Seq(
+        (ts("2024-01-01"), c1, c1, c1, c1, 100L, t, c1),
+        (ts("2024-01-02"), c1, c2, c1, c2, 100L, t, c2))
+    }.toDF("date", "open", "high", "low", "close", "volume", "ticker", "adj_close")
+    StockPipeline.run(spark, bars.unionByName(tech), ingestTs, raw, enr, wh) shouldBe Right(11L)
     val metrics = LakeReader.read(spark, wh)
 
     val hist = StockAnalytics.history(metrics, Seq("AAA", "BBB"), "2024-01-01", "2024-01-31")
@@ -182,14 +188,38 @@ class StockPipelineSpec extends SparkSpec {
     rel.last shouldBe 100.0 * (1.1 - 0.8) +- 1e-9              // day2: 1.1 vs 0.8
 
     val dim = Seq(("AAA", "Alpha Corp", "Tech", "Software"),
-      ("BBB", "Beta Inc", "Energy", "Oil"))
+      ("BBB", "Beta Inc", "Energy", "Oil"),
+      ("CCC", "Gamma Co", "Tech", "Software"),
+      ("DDD", "Delta Ltd", "Tech", "Hardware"),
+      ("EEE", "Epsilon AG", "Tech", "Hardware"))
       .toDF("ticker_symbol", "security_name", "gics_sector", "gics_sub_industry")
     val snap = StockAnalytics.latestSnapshot(metrics, dim)
-    snap.count() shouldBe 2
-    snap.select("ticker").rows.map(_.head).toSet shouldBe Set("AAA", "BBB")
+    val snapRows = snap.select("ticker", "daily_return").rows
+      .map(r => (r(0).asInstanceOf[String], r(1).asInstanceOf[Double]))
+    snapRows.map(_._1) shouldBe Seq("CCC", "AAA", "EEE", "DDD", "BBB")  // daily_return desc
+    snapRows.map(_._2).zip(Seq(0.25, 0.10, 0.05, -0.10, -0.20)).foreach {
+      case (got, want) => got shouldBe want +- 1e-12 }
 
-    // reference semantics: n = min(count/2, 20) → a 1-row sector yields 0
-    StockAnalytics.topMovers(snap, "Tech", gainers = true).count() shouldBe 0
+    // reference semantics: n = min(count/2, 20) → 4 Tech tickers give 2 a side
+    def movers(sector: String, gainers: Boolean) =
+      StockAnalytics.topMovers(snap, sector, gainers).select("ticker").rows.map(_.head)
+    movers("Tech", gainers = true) shouldBe Seq("CCC", "AAA")
+    movers("Tech", gainers = false) shouldBe Seq("DDD", "EEE")
+    movers("Energy", gainers = true) shouldBe empty              // a 1-row sector yields 0
+
+    // plan shape: the display sorts the windows re-sort plan no range
+    // exchange, and the snapshot's one task reads only the partial
+    // per-ticker limit's survivors, never the whole warehouse
+    def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan.toString
+    val trendsPlan = plan(trends)
+    val moversPlan = plan(StockAnalytics.topMovers(snap, "Tech", gainers = true))
+    assert(!trendsPlan.contains("rangepartitioning"), trendsPlan)
+    assert(!moversPlan.contains("rangepartitioning"), moversPlan)
+    val snapLines = plan(snap).linesIterator.toSeq
+    val exchange = snapLines.indexWhere(_.contains("Exchange hashpartitioning(ticker"))
+    val partial = snapLines.indexWhere(l => l.contains("WindowGroupLimit") && l.contains("Partial"))
+    assert(snapLines.exists(_.contains("Coalesce 1")), snapLines.mkString("\n"))
+    assert(exchange >= 0 && partial > exchange, snapLines.mkString("\n"))
 
     // history slice pushes its predicates into the parquet scan
     val histPlan = StockAnalytics.history(metrics, Seq("AAA"), "2024-01-01", "2024-01-31")
