@@ -178,7 +178,10 @@ object IvfIndex {
     * is O(|batch|·(k + m·codeK)); historical postings are never
     * rewritten. Same trades as [[append]]: centroid/codebook drift
     * under sustained ingest is handled by periodic [[savePq]] rebuilds,
-    * and duplicate ids are the caller's to prevent. The encoding flavor
+    * and duplicate ids are the caller's to prevent. Each append adds one
+    * file per touched list; [[graft.sources.LakeWriter.compact]] on
+    * `path/pq_postings.parquet` (partition column `centroid_id`) bounds
+    * the files per list again. The encoding flavor
     * (raw vs residual) is READ FROM THE INDEX ([[pqEncoding]]'s
     * marker), not supplied by the caller — an append can therefore
     * never mix encodings within one index. */
@@ -195,70 +198,6 @@ object IvfIndex {
     enc.select(col(id).as("neighbor_id"), col("pq_code"), col("centroid_id"))
       .write.mode("append").partitionBy("centroid_id")
       .parquet(s"$path/pq_postings.parquet")
-  }
-
-  /** COMPACT a persisted IVF-PQ index's postings: rewrite every list
-    * down to at most `filesPerList` data files, codes unchanged. Each
-    * [[appendPq]] (and each streaming foreachBatch ingest) adds one
-    * file per touched list, so at production append rates the layout
-    * degrades into a small-files problem — probe wall grows with file
-    * COUNT (open/footer costs) even though dynamic partition pruning
-    * still skips unprobed lists. Run this as periodic maintenance, the
-    * way every log-structured index compacts.
-    *
-    * Shape: one shuffle keyed on (centroid_id, salt-of-`filesPerList`)
-    * — each list's rows land in ≤ filesPerList shuffle partitions, and
-    * the partitionBy write emits one file per (partition, list), so the
-    * per-list budget holds regardless of total partition count.
-    * Parallelism is min(shuffle partitions, lists × filesPerList);
-    * raise `filesPerList` for lists too big to write single-threaded.
-    * The rewrite goes to a staging dir and swaps in via two renames
-    * ([[graft.sources.LakeWriter.replaceSnapshot]]'s trade: atomic on
-    * HDFS/local rename, pointer-file indirection on object stores);
-    * the pre-compaction postings survive on disk until the new layout
-    * is fully written. Probes before and after return identical rows —
-    * compaction is layout, not data. */
-  def compactPq(spark: SparkSession, path: String, filesPerList: Int = 1): Unit = {
-    require(filesPerList >= 1, s"filesPerList must be >= 1, got $filesPerList")
-    val target = new org.apache.hadoop.fs.Path(s"$path/pq_postings.parquet")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(s"$path/pq_postings.parquet.__compact__")
-    val old = new org.apache.hadoop.fs.Path(s"$path/pq_postings.parquet.__old__")
-    fs.delete(staging, true)
-    fs.delete(old, true)
-    loadPqPostings(spark, path)
-      .repartition(col("centroid_id"),
-        pmod(xxhash64(col("neighbor_id")), lit(filesPerList)))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(staging.toString)
-    require(fs.rename(target, old),
-      s"compactPq: could not stage out previous postings at $target")
-    require(fs.rename(staging, target),
-      s"compactPq: could not commit compacted postings at $target " +
-        s"(previous postings preserved at $old)")
-    fs.delete(old, true)
-    ()
-  }
-
-  /** Per-list data-file counts of the persisted PQ postings — the
-    * small-files observer for append-heavy indexes ([[compactPq]]'s
-    * companion, the no-silent-degradation twin of the dropped-bucket
-    * observers): watch it grow under ingest, compact when it crosses
-    * the budget. Driver-side FS listing of nLists directories — an
-    * index-maintenance action, not a data read. */
-  def pqPostingsFileCounts(spark: SparkSession, path: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(s"$path/pq_postings.parquet")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rows = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("centroid_id="))
-      .map { d =>
-        val cid = d.getPath.getName.stripPrefix("centroid_id=").toInt
-        val n = fs.listStatus(d.getPath)
-          .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        (cid, n.toLong)
-      }
-    import spark.implicits._
-    rows.toDF("centroid_id", "n_files")
   }
 
   /** The k×dim centroid matrix, ordered by centroid_id (an index-load

@@ -34,11 +34,15 @@ import graft.sources.{LakeReader, LakeWriter}
   *  - transform: processes only years ≥ the enriched zone's watermark
   *    (transform.py:39-44) — partition pruning makes the re-read cheap;
   *  - load: per-ticker watermark anti-join + deterministic dedup before
-  *    the warehouse upsert (load_stock_metrics.py:40-88).
+  *    the warehouse upsert (load_stock_metrics.py:40-88), committed as
+  *    one snapshot swap.
   */
 object StockPipeline {
 
   val partitionCols: Seq[String] = Seq("year")
+
+  /** Rows in the `rolling_vol_30d` window. */
+  private val RollingWindow = 30
 
   /** Dynamic-overwrite write of a raw or enriched zone, each file sorted
     * by (ticker, date). The sort leads with the partition column, so it
@@ -61,7 +65,8 @@ object StockPipeline {
   }
 
   /** Stage 2 — transform: derive `daily_return` (lag pct-change) and
-    * `rolling_vol_30d` (trailing 30-row sample stddev) per ticker in date
+    * `rolling_vol_30d` (trailing sample stddev over [[RollingWindow]] =
+    * 30 rows, the width the column name states) per ticker in date
     * order, gate on the canonical schema, write the enriched zone.
     *
     * Both windows share ONE spec (partitionBy ticker, orderBy date) so
@@ -72,7 +77,6 @@ object StockPipeline {
     * quarantines, mirroring transform.py:133-136. */
   def transform(spark: SparkSession, rawPath: String, enrichedPath: String,
                 sinceYear: Option[Int] = None,
-                rollingWindow: Int = 30,
                 quarantinePath: Option[String] = None): Either[Seq[Quality.Violation], DataFrame] = {
     val raw0 = LakeReader.read(spark, rawPath)
     val raw = sinceYear.fold(raw0)(y => raw0.filter(col("year") >= y))
@@ -81,7 +85,7 @@ object StockPipeline {
       value = "close", out = "daily_return")
     val enriched = Volatility.rollingStd(withRet,
       partition = Seq("ticker"), order = Seq("date"),
-      value = "daily_return", window = rollingWindow, out = "rolling_vol_30d")
+      value = "daily_return", window = RollingWindow, out = "rolling_vol_30d")
     Quality.check(enriched.drop("year"), Schemas.stockMetrics, Seq("ticker", "date"))
       .left.map { violations =>
         // quarantine the rejected batch with the reasons attached — the
@@ -106,29 +110,26 @@ object StockPipeline {
     * deterministically (latest ingest_ts survives). Re-running is a
     * no-op — the reference needs DELETE-then-append for that
     * (load_stock_metrics.py:56-61); here idempotency falls out of the
-    * anti-join. Returns the warehouse row count, observed on the rows
-    * as the snapshot write streams them, so the new snapshot is never
-    * listed or read back. */
+    * anti-join. Each load rewrites the whole warehouse, which is small
+    * next to the lake (reference: ≤2.6M rows), and commits it through
+    * [[LakeWriter.replaceSnapshot]], which first heals a torn earlier
+    * load, so the previous warehouse is never lost. Returns the
+    * warehouse row count, observed on the rows as the snapshot write
+    * streams them, so the new snapshot is never listed or read back. */
   def load(spark: SparkSession, enrichedPath: String, warehousePath: String): Long = {
     val incoming = LakeReader.read(spark, enrichedPath).drop("year")
-    val merged =
-      if (!LakeReader.exists(spark, warehousePath))
-        Merge.dedupByKey(incoming, Seq("ticker", "date"), "ingest_ts")
-      else {
-        val warehouse = LakeReader.read(spark, warehousePath).drop("year")
-        val wm = Merge.watermarks(warehouse, "ticker", "date")
-        val fresh = Merge.incrementalFilter(incoming, wm, "ticker", "date")
-        warehouse.unionByName(Merge.dedupByKey(fresh, Seq("ticker", "date"), "ingest_ts"))
-      }
-    // serving layer is small relative to the lake (reference: ≤2.6M rows);
-    // a single consistent snapshot, committed via staging-dir + rename —
-    // the previous snapshot stays on disk until the new one is complete,
-    // so a crash mid-write can never destroy the warehouse.
     val written = Observation("load")
-    LakeWriter.replaceSnapshot(
+    LakeWriter.replaceSnapshot(spark, warehousePath, partitionCols) { current =>
+      val merged = current.map(_.drop("year")) match {
+        case None => Merge.dedupByKey(incoming, Seq("ticker", "date"), "ingest_ts")
+        case Some(warehouse) =>
+          val wm = Merge.watermarks(warehouse, "ticker", "date")
+          val fresh = Merge.incrementalFilter(incoming, wm, "ticker", "date")
+          warehouse.unionByName(Merge.dedupByKey(fresh, Seq("ticker", "date"), "ingest_ts"))
+      }
       merged.withColumn("year", year(col("date")))
-        .observe(written, count(lit(1)).as("rows")),
-      warehousePath, Seq("year"))
+        .observe(written, count(lit(1)).as("rows"))
+    }
     written.get("rows").asInstanceOf[Long]
   }
 

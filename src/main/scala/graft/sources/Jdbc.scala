@@ -17,6 +17,11 @@ import org.apache.spark.sql.functions._
   * Exercised at runtime against embedded Derby (JdbcSpec — the driver
   * jars ship with Spark), which covers the same Spark JDBC codepath a
   * Postgres warehouse would use; only the dialect differs.
+  *
+  * Kept as reference surface: no engine path calls it, because the
+  * engine serves from a parquet warehouse
+  * ([[graft.pipeline.StockPipeline.load]]). It is the reference's
+  * Postgres load, for a deployment that serves from Postgres.
   */
 object Jdbc {
 

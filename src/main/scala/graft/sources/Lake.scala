@@ -17,12 +17,17 @@ import org.apache.spark.sql.types.StructType
   * other directories, and a `ticker` filter skips row groups through
   * parquet min/max statistics, without one small file per ticker.
   *
-  * Scale notes: dynamic partition overwrite ([[LakeWriter.overwritePartitions]])
-  * rewrites ONLY the partitions present in the batch — the reference's
-  * read-filter-concat-write merge loop (ingest_hourly.py:117-131) and its
-  * delete-today-then-append idempotency trick (load_stock_metrics.py:56-61)
-  * both collapse into it. At 100 TB an incremental batch rewrites a few
-  * partitions, never the table.
+  * Write contracts. [[LakeWriter.overwritePartitions]] replaces every
+  * partition present in the batch and leaves the others untouched, so a
+  * batch must carry ALL rows of each partition it touches, as a backfill
+  * does. It is not the reference's row-level read-filter-concat-write
+  * merge (ingest_hourly.py:117-131): a partial batch drops the rows of
+  * its partitions that it does not carry. [[LakeWriter.replaceSnapshot]]
+  * is the one way to rewrite a directory from its own contents, the
+  * engine's form of the serving load's delete-today-then-append
+  * transaction (load_stock_metrics.py:56-61): it heals a torn swap,
+  * opens the current snapshot, writes the derived one beside it and
+  * swaps it in with two renames.
   */
 object LakeWriter {
 
@@ -42,32 +47,33 @@ object LakeWriter {
       .partitionBy(partitionCols: _*)
       .parquet(path)
 
-  /** Append-only write (raw-zone backfill shape). */
-  def append(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Append)
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-
-  /** Crash-safe snapshot replace for a serving table DERIVED FROM the
-    * path being replaced: write the new snapshot to a sibling staging
-    * dir first, then swap via two renames. A plain overwrite-in-place
-    * deletes the source mid-job — a crash or lost executor there
-    * destroys the table unrecoverably (even a localCheckpoint stage is
-    * executor-local, not durable). Here the previous snapshot survives
-    * on disk (`<path>.__old__`) until the new one is fully committed;
-    * the only non-atomic window is between the two renames, where the
-    * data still exists and a janitor can roll either way. On HDFS/local
-    * FS rename is atomic; object stores should use a pointer-file
-    * indirection instead. */
-  def replaceSnapshot(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
+  /** The one way to rewrite a lake directory from its own contents. In
+    * this order it
+    *  1. heals a swap an earlier writer left torn ([[recoverSnapshot]]);
+    *  1. opens the current snapshot with [[LakeReader.read]], `None`
+    *     when the path holds none;
+    *  1. derives the new frame with `next`;
+    *  1. writes it to the sibling `<path>.__staging__` and swaps it in
+    *     with two renames.
+    *
+    * Because the heal runs before the read, a torn swap is never taken
+    * for a first run. The previous snapshot stays on disk
+    * (`<path>.__old__`) until the new one is fully written: an
+    * overwrite in place would delete the files the new frame is read
+    * from mid-job. The only non-atomic window is between the two
+    * renames, and the next call heals it. Rename is atomic on HDFS and
+    * the local file system; an object store needs a pointer file
+    * instead. */
+  def replaceSnapshot(spark: SparkSession, path: String, partitionCols: Seq[String])
+                     (next: Option[DataFrame] => DataFrame): Unit = {
+    recoverSnapshot(spark, path)
+    val current = Option.when(LakeReader.exists(spark, path))(LakeReader.read(spark, path))
     val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(LakeReader.hadoopConf(df.sparkSession))
+    val fs = target.getFileSystem(LakeReader.hadoopConf(spark))
     val staging = new org.apache.hadoop.fs.Path(path + ".__staging__")
     val old = new org.apache.hadoop.fs.Path(path + ".__old__")
-    fs.delete(staging, true)
-    fs.delete(old, true)
-    write(df, staging.toString, partitionCols) // reads target, writes sibling
-    if (fs.exists(target)) require(fs.rename(target, old),
+    write(next(current), staging.toString, partitionCols)
+    if (current.isDefined) require(fs.rename(target, old),
       s"replaceSnapshot: could not stage out previous snapshot at $path")
     require(fs.rename(staging, target),
       s"replaceSnapshot: could not commit new snapshot at $path " +
@@ -76,18 +82,15 @@ object LakeWriter {
     ()
   }
 
-  /** Janitor for [[replaceSnapshot]]'s non-atomic window: call BEFORE
-    * reading a snapshot that is maintained by replaceSnapshot. If a
-    * previous writer died between the two renames, the target is
-    * missing while `<path>.__old__` still holds the pre-batch data —
-    * without recovery a naive exists() probe would mistake that state
-    * for a first run and silently restart from scratch. Rolls BACK
-    * (old → target) rather than forward: the interrupted batch never
-    * committed to the caller's checkpoint, so it will be replayed onto
-    * the restored snapshot; the fully-written-but-uncommitted staging
-    * dir is deleted for the same reason. Leftover `__old__` beside a
-    * live target (death after commit, before cleanup) is swept. */
-  def recoverSnapshot(spark: SparkSession, path: String): Unit = {
+  /** [[replaceSnapshot]]'s heal step. A writer that died between the two
+    * renames leaves the target missing and `<path>.__old__` holding the
+    * previous snapshot: that is rolled BACK to the target, because the
+    * interrupted batch never committed to its caller (a stream's
+    * checkpoint replays it onto the restored snapshot). The staging
+    * directory is deleted for the same reason, and an `__old__` beside
+    * a live target (death after the commit, before the cleanup) is
+    * swept. A no-op on a healthy or absent snapshot. */
+  private[sources] def recoverSnapshot(spark: SparkSession, path: String): Unit = {
     val target = new org.apache.hadoop.fs.Path(path)
     val fs = target.getFileSystem(LakeReader.hadoopConf(spark))
     val staging = new org.apache.hadoop.fs.Path(path + ".__staging__")
@@ -100,19 +103,16 @@ object LakeWriter {
     ()
   }
 
-  /** Partitioned-lake compaction — the small-files repair for
-    * append-heavy zones. Every [[append]] adds at least one file per
-    * touched partition, so a zone fed hourly degrades into thousands of
-    * kilobyte files whose open/footer overhead dominates scans long
-    * before partition pruning can help (the same failure mode
-    * [[graft.ops.IvfIndex.compactPq]] repairs for ANN postings — this is
-    * the general-lake form). Rewrites every partition to at most
-    * `filesPerPartition` files via ONE shuffle keyed on
-    * (partition columns, deterministic row-hash bucket), then commits
-    * with the [[replaceSnapshot]] staged-rename swap, so the previous
-    * zone survives on disk until the compacted one is fully written and
-    * a reader never sees a half-compacted zone. Content is unchanged —
-    * compaction is layout, not data (spec-pinned by LakeSpec).
+  /** Partitioned-lake compaction, the small-files repair for append-heavy
+    * zones. Every append adds at least one file per touched partition,
+    * so a zone fed hourly (or an IVF-PQ index's `pq_postings.parquet`,
+    * partitioned by `centroid_id`) degrades into many kilobyte files
+    * whose open and footer costs dominate scans. Rewrites every
+    * partition to at most `filesPerPartition` files through ONE shuffle
+    * keyed on (partition columns, row-hash bucket) and commits through
+    * [[replaceSnapshot]], so it first heals a torn swap and a reader
+    * never sees a half-compacted zone. Content is unchanged: compaction
+    * is layout, not data. A path that holds no snapshot raises.
     *
     * Run it from the [[fileCounts]] observer, not on a timer: compact
     * when the worst partition crosses a file budget. */
@@ -120,18 +120,18 @@ object LakeWriter {
               filesPerPartition: Int = 1): Unit = {
     require(filesPerPartition >= 1,
       s"filesPerPartition must be >= 1, got $filesPerPartition")
-    val df = LakeReader.read(spark, path)
-    val bucket = pmod(xxhash64(df.columns.toSeq.map(col): _*), lit(filesPerPartition))
-    replaceSnapshot(
-      df.repartition(partitionCols.map(col) :+ bucket: _*),
-      path, partitionCols)
+    replaceSnapshot(spark, path, partitionCols) { current =>
+      require(current.isDefined, s"compact: no snapshot at $path")
+      val df = current.get
+      val bucket = pmod(xxhash64(df.columns.toSeq.map(col): _*), lit(filesPerPartition))
+      df.repartition(partitionCols.map(col) :+ bucket: _*)
+    }
   }
 
   /** Per-partition data-file counts of a Hive-partitioned zone — the
-    * no-silent-degradation observer that tells you WHEN to [[compact]]
-    * (companion of [[graft.ops.IvfIndex.pqPostingsFileCounts]]). Walks
-    * the partition directory tree on the driver — a maintenance action
-    * bounded by partition count, not a data read. `partition` is the
+    * no-silent-degradation observer that tells you WHEN to [[compact]].
+    * Walks the partition directory tree on the driver — a maintenance
+    * action bounded by partition count, not a data read. `partition` is the
     * relative Hive path ("year=1997/ticker=A"); an unpartitioned zone
     * reports one "" row. */
   def fileCounts(spark: SparkSession, path: String): DataFrame = {
@@ -273,20 +273,6 @@ object LakeWriter {
       .select(df.columns.map(col).toSeq: _*)
       .write.mode(SaveMode.Overwrite).parquet(path)
   }
-
-  /** Bucketed catalog table: pre-shuffles ONCE at write time so every
-    * subsequent equi-join/aggregation on the bucket keys is
-    * co-located — no exchange in the join plan. The 100 TB pattern for
-    * fact tables that are repeatedly joined on the same key (bucket both
-    * sides with the same count; sortBy makes the merge join sort-free
-    * too). */
-  def writeBucketed(df: DataFrame, table: String, buckets: Int,
-                    keys: Seq[String], sortCols: Seq[String] = Seq.empty): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, keys.head, keys.drop(1): _*)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.drop(1): _*) else w)
-      .format("parquet").saveAsTable(table)
-  }
 }
 
 object LakeReader {
@@ -298,8 +284,9 @@ object LakeReader {
   private[sources] def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
     spark.sessionState.newHadoopConf()
 
-  /** Zone existence check (first-run vs incremental branching). */
-  def exists(spark: SparkSession, path: String): Boolean = {
+  /** Whether `path` exists: [[LakeWriter.replaceSnapshot]]'s
+    * first-run test, made after its heal step. */
+  private[sources] def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     p.getFileSystem(hadoopConf(spark)).exists(p)
   }
@@ -382,13 +369,4 @@ object LakeReader {
     try Some(fs.getFileStatus(root)).filter(st => st.isDirectory || visible(st)).flatMap(first)
     catch { case _: java.io.FileNotFoundException => None }
   }
-
-  /** One partition subset, expressed as a filter so Catalyst prunes at
-    * the source instead of the caller composing object keys
-    * (reference: scripts/transform.py:46-60 reads one key per task). */
-  def readPartition(spark: SparkSession, path: String,
-                    partitionEq: Map[String, Any]): DataFrame =
-    partitionEq.foldLeft(read(spark, path)) { case (df, (k, v)) =>
-      df.filter(col(k) === lit(v))
-    }
 }

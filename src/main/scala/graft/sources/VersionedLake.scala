@@ -204,7 +204,7 @@ object VersionedLake {
   /** COMPACTION commit: re-commit the CURRENT table state as one fresh
     * version, so every live partition's files land in a single commit
     * directory — the versioned-lake counterpart of
-    * [[graft.ops.IvfIndex.compactPq]]. Sustained partial commits leave
+    * [[LakeWriter.compact]]. Sustained partial commits leave
     * the manifest pointing at many historical version dirs (one scan
     * per owning commit at read time, small files accumulating per
     * partition); compaction collapses the owner spread to 1 and lets
@@ -224,16 +224,6 @@ object VersionedLake {
     commit(read(spark, root), root, partitionCols, maxPartitions)
   }
 
-  /** Distinct owning commits in a version's manifest — the read
-    * amplification [[compact]] exists to collapse (each owner is one
-    * extra parquet scan in [[read]]). Driver-side manifest math. */
-  def ownerSpread(spark: SparkSession, root: String,
-                  version: Option[Int] = None): Int = {
-    val v = version.orElse(latestVersion(spark, root)).getOrElse(
-      throw new IllegalArgumentException(s"no committed versions under $root"))
-    readManifest(spark, root, v).values.toSet.size
-  }
-
   /** Roll back by committing a PAST manifest as the new latest — history
     * stays linear and append-only (the Delta RESTORE shape): readers of
     * intermediate versions are unaffected, and the bad version remains
@@ -243,27 +233,6 @@ object VersionedLake {
     val next = latestVersion(spark, root).get + 1
     writeManifest(spark, root, next, target)
     next
-  }
-
-  /** Change feed between two versions: per-partition adds/replaces/
-    * drops, straight from the two manifests — a |partitions|-sized
-    * driver diff, no data read. Row-level diffs compose on top via
-    * [[graft.ops.Reconcile.snapshotDiff]] over [[read]]s of the two
-    * versions (see the lake_version_diff query). */
-  def partitionChanges(spark: SparkSession, root: String,
-                       fromVersion: Int, toVersion: Int): DataFrame = {
-    val from = readManifest(spark, root, fromVersion)
-    val to = readManifest(spark, root, toVersion)
-    val rows = (from.keySet ++ to.keySet).toSeq.sorted.flatMap { p =>
-      (from.get(p), to.get(p)) match {
-        case (None, Some(v)) => Some((p, "added", v.toLong))
-        case (Some(_), None) => Some((p, "dropped", -1L))
-        case (Some(a), Some(b)) if a != b => Some((p, "rewritten", b.toLong))
-        case _ => None
-      }
-    }
-    import spark.implicits._
-    rows.toDF("partition", "change", "owner_version")
   }
 
   /** Sweep data directories no manifest references (crashed commits,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.ops.{CountMin, Hll, Merge}
-import graft.sources.{LakeReader, LakeWriter}
+import graft.sources.LakeWriter
 
 /** Structured Streaming over the events stream.
   *
@@ -494,7 +494,9 @@ object EventStreams {
 
   /** Stream → serving upsert: merge each micro-batch into a keyed
     * warehouse (streaming replacement for the reference's
-    * watermark+DELETE+append load, load_stock_metrics.py:40-89). */
+    * watermark+DELETE+append load, load_stock_metrics.py:40-89),
+    * committed through [[LakeWriter.replaceSnapshot]]: a replayed batch
+    * lands on the snapshot it heals back from a torn swap. */
   def mergeIntoWarehouse(stream: DataFrame, warehousePath: String,
                          checkpoint: String, keys: Seq[String],
                          tiebreak: String,
@@ -503,20 +505,10 @@ object EventStreams {
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Update())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        // heal a predecessor's mid-swap crash BEFORE probing existence —
-        // a missing target with __old__ beside it is a torn swap, not a
-        // first run, and must not silently restart the table from scratch
-        LakeWriter.recoverSnapshot(spark, warehousePath)
-        val merged =
-          if (!LakeReader.exists(spark, warehousePath))
-            Merge.dedupByKey(batch, keys, tiebreak)
-          else Merge.upsert(
-            LakeReader.read(spark, warehousePath), batch, keys, tiebreak)
-        // staging-dir + rename swap: the previous snapshot survives until
-        // the new one commits (an overwrite-in-place of the path the
-        // merge just read would be unrecoverable on a mid-write crash)
-        LakeWriter.replaceSnapshot(merged, warehousePath, Seq.empty)
+        LakeWriter.replaceSnapshot(batch.sparkSession, warehousePath, Seq.empty) {
+          case None => Merge.dedupByKey(batch, keys, tiebreak)
+          case Some(warehouse) => Merge.upsert(warehouse, batch, keys, tiebreak)
+        }
       }
     trigger.fold(w)(w.trigger).start()
   }
@@ -547,8 +539,8 @@ object EventStreams {
     * upsert would silently resurrect a deleted key. Readers filter
     * `__op != 'D'`. Base rows seed with null seq (sorted below every
     * real change). The fold is idempotent, so checkpoint replay after a
-    * crash re-applies a batch harmlessly; [[LakeWriter.recoverSnapshot]]
-    * first heals any torn snapshot swap. */
+    * crash re-applies a batch harmlessly onto the snapshot that
+    * [[LakeWriter.replaceSnapshot]] restores from a torn swap. */
   def cdcIntoWarehouse(changes: DataFrame, base: DataFrame,
                        warehousePath: String, checkpoint: String,
                        key: String, seqCol: String, tieCol: String,
@@ -575,8 +567,6 @@ object EventStreams {
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Update())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        LakeWriter.recoverSnapshot(spark, warehousePath)
         val batchImg = batch
           // validate BEFORE any per-key selection: a corrupt op must fail
           // the run even when a later change for the same key shadows it
@@ -584,20 +574,19 @@ object EventStreams {
             lit(s"bad CDC op in $opCol (want U|D)")).isNull)
           .select(baseCols.map(col) :+ col(seqCol).as("__seq") :+
             col(tieCol).as("__tie") :+ col(opCol).as("__op"): _*)
-        val current =
-          if (!LakeReader.exists(spark, warehousePath))
-            base.withColumn("__seq", lit(null).cast(batch.schema(seqCol).dataType))
-              .withColumn("__tie", lit(null).cast(batch.schema(tieCol).dataType))
-              .withColumn("__op", lit("U"))
-          else LakeReader.read(spark, warehousePath)
         val byKey = org.apache.spark.sql.expressions.Window
           .partitionBy(col(key))
           .orderBy(col("__seq").desc_nulls_last, col("__tie").desc_nulls_last)
-        val folded = current.unionByName(batchImg)
-          .withColumn("__rn", row_number().over(byKey))
-          .filter(col("__rn") === 1)
-          .drop("__rn")
-        LakeWriter.replaceSnapshot(folded, warehousePath, Seq.empty)
+        LakeWriter.replaceSnapshot(batch.sparkSession, warehousePath, Seq.empty) { snapshot =>
+          val current = snapshot.getOrElse(
+            base.withColumn("__seq", lit(null).cast(batch.schema(seqCol).dataType))
+              .withColumn("__tie", lit(null).cast(batch.schema(tieCol).dataType))
+              .withColumn("__op", lit("U")))
+          current.unionByName(batchImg)
+            .withColumn("__rn", row_number().over(byKey))
+            .filter(col("__rn") === 1)
+            .drop("__rn")
+        }
       }
     trigger.fold(w)(w.trigger).start()
   }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sources.LakeWriter
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -124,7 +125,7 @@ class SimilaritySpec extends SparkSpec {
   test("hardExamples: a zero-norm candidate (NULL cosine) never beats a real score") {
     // candidate 9 is the zero vector → cosine NULL; inside min(struct)
     // a NULL field sorts LOWEST, so an unguarded pick would choose it
-    // over the real positives/negatives (the round-13 advice). With the
+    // over the real positives/negatives. With the
     // coalesce guard the picks are the same as without candidate 9.
     val vs = Seq(
       (1L, Seq(1.0f, 0.0f), "A"),
@@ -589,7 +590,7 @@ class SimilaritySpec extends SparkSpec {
     an[Exception] should be thrownBy IvfIndex.pqEncoding(spark, bare)
   }
 
-  test("IvfIndex.compactPq: file count drops to the budget, probe results unchanged") {
+  test("LakeWriter.compact on PQ postings: lists within budget, probes unchanged") {
     val rng = new scala.util.Random(43)
     val all = (0L until 100L).map(i =>
       (i, Seq.fill(8)(rng.nextFloat() * 2 - 1))).toDF("vec_id", "embedding")
@@ -597,7 +598,7 @@ class SimilaritySpec extends SparkSpec {
     IvfIndex.savePq(all.filter(col("vec_id") < 40), "vec_id", "embedding",
       k = 4, dir, m = 2, codeK = 4, codeFrom = 4)
     // three appends — each adds one file per touched list, the
-    // small-files failure mode the compactor exists for
+    // small-files failure mode compaction exists for
     for (b <- 0 until 3)
       IvfIndex.appendPq(
         all.filter(col("vec_id") >= 40 + b * 20 && col("vec_id") < 60 + b * 20),
@@ -608,10 +609,11 @@ class SimilaritySpec extends SparkSpec {
         IvfIndex.loadCodebooks(spark, dir), nprobe = 2, k = 3)
       .select("query_id", "neighbor_id", "rank").rows.sortBy(_.toString)
     val before = probe()
-    val filesBefore = IvfIndex.pqPostingsFileCounts(spark, dir)
+    val postings = s"$dir/pq_postings.parquet"
+    val filesBefore = LakeWriter.fileCounts(spark, postings)
       .agg(sum(col("n_files"))).rows.head.head.asInstanceOf[Long]
-    IvfIndex.compactPq(spark, dir, filesPerList = 1)
-    val counts = IvfIndex.pqPostingsFileCounts(spark, dir)
+    LakeWriter.compact(spark, postings, Seq("centroid_id"), filesPerPartition = 1)
+    val counts = LakeWriter.fileCounts(spark, postings)
     val filesAfter = counts.agg(sum(col("n_files"))).rows.head.head.asInstanceOf[Long]
     withClue(s"files before=$filesBefore after=$filesAfter: ") {
       filesBefore should be > filesAfter       // appends really fragmented

@@ -6,7 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.{LakeReader, LakeWriter}
+import graft.sources.LakeReader
 import graft.ops.Reshape
 
 class StockPipelineSpec extends SparkSpec {
@@ -127,7 +127,8 @@ class StockPipelineSpec extends SparkSpec {
     def enrichedAt(name: String, input: org.apache.spark.sql.DataFrame, at: Timestamp): Unit = {
       StockPipeline.ingest(input, at, s"$dir/raw_$name")
       StockPipeline.transform(spark, s"$dir/raw_$name", s"$dir/enr_$name").isRight shouldBe true
-      LakeWriter.append(LakeReader.read(spark, s"$dir/enr_$name"), enr, StockPipeline.partitionCols)
+      LakeReader.read(spark, s"$dir/enr_$name").write.mode("append")
+        .partitionBy(StockPipeline.partitionCols: _*).parquet(enr)
     }
     val later = Timestamp.valueOf("2024-01-06 12:00:00")
     enrichedAt("a", bars, ingestTs)
@@ -149,6 +150,36 @@ class StockPipelineSpec extends SparkSpec {
       .toDF("date", "open", "high", "low", "close", "volume", "ticker", "adj_close")
     enrichedAt("c", bars.unionByName(day4), Timestamp.valueOf("2024-01-07 12:00:00"))
     loadChecked(6L)                                        // incremental: one new row
+  }
+
+  test("load after a torn warehouse swap keeps the history") {
+    val day4 = Seq((ts("2024-01-04"), 12.0, 13.0, 11.0, 13.31, 130L, "AAA", 13.31))
+      .toDF("date", "open", "high", "low", "close", "volume", "ticker", "adj_close")
+    // a history warehouse, then an enriched zone holding only the next
+    // day: the increment ingest leaves when a batch carries one day
+    def loadedOnce(tear: Boolean): (String, Long) = {
+      val dir = Files.createTempDirectory("stockpipe9").toString
+      val (raw, enr, wh) = (s"$dir/raw", s"$dir/enriched", s"$dir/warehouse")
+      StockPipeline.run(spark, bars, ingestTs, raw, enr, wh) shouldBe Right(5L)
+      StockPipeline.ingest(day4, Timestamp.valueOf("2024-01-06 12:00:00"), raw)
+      StockPipeline.transform(spark, raw, enr).isRight shouldBe true
+      LakeReader.read(spark, enr).count() shouldBe 1L
+      if (tear) {
+        // a load that died between its two renames
+        Files.move(java.nio.file.Paths.get(wh), java.nio.file.Paths.get(s"$wh.__old__"))
+        day4.write.parquet(s"$wh.__staging__")
+      }
+      (wh, StockPipeline.load(spark, enr, wh))
+    }
+    def rows(wh: String) = LakeReader.read(spark, wh)
+      .select("ticker", "date", "close", "ingest_ts").rows.sortBy(_.mkString("|"))
+    val (clean, cleanCount) = loadedOnce(tear = false)
+    val (torn, tornCount) = loadedOnce(tear = true)
+    cleanCount shouldBe 6L
+    tornCount shouldBe cleanCount
+    rows(torn) shouldBe rows(clean)
+    for (p <- Seq(s"$torn.__old__", s"$torn.__staging__"))
+      assert(!Files.exists(java.nio.file.Paths.get(p)))
   }
 
   test("transform quarantines on schema violation (DQ gate)") {

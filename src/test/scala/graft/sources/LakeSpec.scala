@@ -212,7 +212,8 @@ class LakeSpec extends SparkSpec {
     val dir = Files.createTempDirectory("lake2").toString
     LakeWriter.write((1 to 100).map(i => (2000 + i % 5, s"T${i % 3}", i.toDouble))
       .toDF("year", "ticker", "v"), dir, Seq("year", "ticker"))
-    val plan = LakeReader.readPartition(spark, dir, Map("year" -> 2003, "ticker" -> "T1"))
+    val plan = LakeReader.read(spark, dir)
+      .filter(col("year") === 2003 && col("ticker") === "T1")
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && !plan.contains("PartitionFilters: []"))
   }
@@ -340,17 +341,17 @@ class LakeSpec extends SparkSpec {
 
   test("bucketed tables join without an exchange") {
     val n = 1000
-    LakeWriter.writeBucketed((1 to n).map(i => (i.toLong, s"left$i")).toDF("k", "lv"),
-      "bucketed_l", buckets = 4, keys = Seq("k"), sortCols = Seq("k"))
-    LakeWriter.writeBucketed((1 to n).map(i => (i.toLong, s"right$i")).toDF("k", "rv"),
-      "bucketed_r", buckets = 4, keys = Seq("k"), sortCols = Seq("k"))
+    def writeBucketed(df: DataFrame, table: String): Unit =
+      df.write.mode("overwrite").bucketBy(4, "k").sortBy("k")
+        .format("parquet").saveAsTable(table)
+    writeBucketed((1 to n).map(i => (i.toLong, s"left$i")).toDF("k", "lv"), "bucketed_l")
+    writeBucketed((1 to n).map(i => (i.toLong, s"right$i")).toDF("k", "rv"), "bucketed_r")
     // force the sort-merge path (small test tables would otherwise
     // broadcast); bucketed SMJ needs neither a shuffle nor a sort.
     // The -1 threshold goes on an ISOLATED child session, never the
     // shared one: suites run in parallel threads inside the forked
     // test JVM, and a set/finally window on the shared session races
-    // any suite that clones conf via newSession() mid-window (it cost
-    // PlanBudgetSpec a flaky AQE audit before this isolation).
+    // any suite that clones conf via newSession() mid-window.
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val joined = s2.table("bucketed_l").join(s2.table("bucketed_r"), Seq("k"))
@@ -363,20 +364,44 @@ class LakeSpec extends SparkSpec {
     spark.sql("DROP TABLE bucketed_l"); spark.sql("DROP TABLE bucketed_r")
   }
 
+  /** `path` as a writer that died between `replaceSnapshot`'s two
+    * renames leaves it: the previous snapshot moved to `__old__`, a
+    * fully written but uncommitted `__staging__` beside it. */
+  private def tearSwap(path: String, uncommitted: DataFrame): Unit = {
+    Files.move(Paths.get(path), Paths.get(s"$path.__old__"))
+    LakeWriter.write(uncommitted, s"$path.__staging__", Seq.empty)
+  }
+
   test("recoverSnapshot: a torn swap rolls back to the previous snapshot") {
     val root = Files.createTempDirectory("lake3").toString
     val path = s"$root/wh"
     LakeWriter.write(Seq((1L, "old")).toDF("k", "v"), path, Seq.empty)
-    // simulate a writer that died between the two renames: target moved
-    // to __old__, fully-written-but-uncommitted staging left behind
-    Files.move(java.nio.file.Paths.get(path),
-      java.nio.file.Paths.get(s"$path.__old__"))
-    LakeWriter.write(Seq((1L, "uncommitted")).toDF("k", "v"),
-      s"$path.__staging__", Seq.empty)
-    LakeWriter.recoverSnapshot(spark, path)
+    tearSwap(path, Seq((1L, "uncommitted")).toDF("k", "v"))
+    var seen: Option[Seq[Seq[Any]]] = None
+    LakeWriter.replaceSnapshot(spark, path, Seq.empty) { current =>
+      seen = current.map(_.rows)
+      current.get
+    }
+    seen shouldBe Some(Seq(Seq(1L, "old")))
     LakeReader.read(spark, path).rows shouldBe Seq(Seq(1L, "old"))
-    assert(!Files.exists(java.nio.file.Paths.get(s"$path.__old__")))
-    assert(!Files.exists(java.nio.file.Paths.get(s"$path.__staging__")))
+    assert(!Files.exists(Paths.get(s"$path.__old__")))
+    assert(!Files.exists(Paths.get(s"$path.__staging__")))
+  }
+
+  test("compact on a torn swap compacts the restored rows") {
+    val root = Files.createTempDirectory("lake6").toString
+    val path = s"$root/zone"
+    val df = (1L to 60L).map(i => (i, s"p${i % 2}")).toDF("k", "part")
+    LakeWriter.write(df.repartition(6), path, Seq("part"))
+    def filesPerPartition = LakeWriter.fileCounts(spark, path).rows.map(_(1).asInstanceOf[Long])
+    filesPerPartition.max should be > 1L
+    tearSwap(path, Seq((99L, "uncommitted")).toDF("k", "part"))
+    LakeWriter.compact(spark, path, Seq("part"))
+    all(filesPerPartition) shouldBe 1L
+    LakeReader.read(spark, path).orderBy("k").select("k", "part").rows shouldBe
+      df.orderBy("k").rows
+    assert(!Files.exists(Paths.get(s"$path.__old__")))
+    assert(!Files.exists(Paths.get(s"$path.__staging__")))
   }
 
   test("compact: file counts drop to the budget, data byte-identical, staging swept") {
@@ -406,12 +431,28 @@ class LakeSpec extends SparkSpec {
     val path = s"$root/wh"
     LakeWriter.write(Seq((1L, "new")).toDF("k", "v"), path, Seq.empty)
     LakeWriter.write(Seq((1L, "stale")).toDF("k", "v"), s"$path.__old__", Seq.empty)
-    LakeWriter.recoverSnapshot(spark, path)
+    LakeWriter.replaceSnapshot(spark, path, Seq.empty)(_.get)
     LakeReader.read(spark, path).rows shouldBe Seq(Seq(1L, "new"))
-    assert(!Files.exists(java.nio.file.Paths.get(s"$path.__old__")))
-    // no-op on a healthy or absent snapshot
-    LakeWriter.recoverSnapshot(spark, s"$root/never_written")
-    assert(!Files.exists(java.nio.file.Paths.get(s"$root/never_written")))
+    assert(!Files.exists(Paths.get(s"$path.__old__")))
+    // no-op on an absent snapshot: compact, which needs one, raises and
+    // leaves nothing behind
+    val never = s"$root/never_written"
+    val ex = intercept[IllegalArgumentException](LakeWriter.compact(spark, never, Seq.empty))
+    ex.getMessage should include("no snapshot")
+    for (p <- Seq(never, s"$never.__staging__", s"$never.__old__"))
+      assert(!Files.exists(Paths.get(p)))
+  }
+
+  test("one staged swap: only graft/sources renames, no SparkContext Hadoop conf") {
+    val root = Paths.get("src/main/scala")
+    val files = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    files should not be empty
+    def hits(needle: String) = files.filter(f =>
+      new String(Files.readAllBytes(f), "UTF-8").contains(needle))
+      .map(root.relativize(_).toString.replace('\\', '/'))
+    all(hits(".rename(")) should startWith("graft/sources/")
+    hits("sparkContext.hadoopConfiguration") shouldBe empty
   }
 }
 

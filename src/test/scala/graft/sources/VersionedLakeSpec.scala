@@ -11,6 +11,13 @@ class VersionedLakeSpec extends SparkSpec {
 
   private def freshRoot() = Files.createTempDirectory("vlake").toString + "/t"
 
+  /** Distinct owning commits in the latest manifest: the read
+    * amplification `VersionedLake.compact` collapses (one parquet scan
+    * per owner in `VersionedLake.read`). */
+  private def ownerSpread(root: String): Int =
+    VersionedLake.readManifest(spark, root, VersionedLake.latestVersion(spark, root).get)
+      .values.toSet.size
+
   test("commit / time travel: v1 stays readable after v2 rewrites one partition") {
     val root = freshRoot()
     val v1data = Seq((1L, "p0", 10.0), (2L, "p0", 20.0), (3L, "p1", 30.0))
@@ -50,12 +57,12 @@ class VersionedLakeSpec extends SparkSpec {
     VersionedLake.commit(Seq((1L, "a", 1.0)).toDF("k", "part", "v"), root, Seq("part"))
     VersionedLake.commit(Seq((2L, "b", 2.0)).toDF("k", "part", "v"), root, Seq("part"))
     VersionedLake.commit(Seq((3L, "c", 3.0)).toDF("k", "part", "v"), root, Seq("part"))
-    VersionedLake.ownerSpread(spark, root) shouldBe 3
+    ownerSpread(root) shouldBe 3
     val before = VersionedLake.read(spark, root).orderBy("k")
       .select("k", "part", "v").rows
     val cv = VersionedLake.compact(spark, root)
     cv shouldBe 4
-    VersionedLake.ownerSpread(spark, root) shouldBe 1
+    ownerSpread(root) shouldBe 1
     VersionedLake.read(spark, root).orderBy("k")
       .select("k", "part", "v").rows shouldBe before
     // retiring the pre-compaction manifests frees every old commit dir
@@ -73,22 +80,6 @@ class VersionedLakeSpec extends SparkSpec {
     VersionedLake.read(spark, root).select("k").rows shouldBe Seq(Seq(1L))
     // the rolled-over version is still inspectable
     VersionedLake.read(spark, root, Some(2)).select("k").rows shouldBe Seq(Seq(2L))
-  }
-
-  test("partitionChanges: added / rewritten / dropped from manifests alone") {
-    val root = freshRoot()
-    VersionedLake.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "part"), root, Seq("part"))
-    VersionedLake.commit(Seq((3L, "b"), (4L, "c")).toDF("k", "part"), root, Seq("part"))
-    VersionedLake.partitionChanges(spark, root, 1, 2).orderBy("partition")
-      .rows shouldBe Seq(
-      Seq("part=b", "rewritten", 2L),
-      Seq("part=c", "added", 2L))
-    // a rollback DROPS the partition added after the restore point
-    VersionedLake.rollback(spark, root, toVersion = 1)
-    VersionedLake.partitionChanges(spark, root, 2, 3).orderBy("partition")
-      .rows shouldBe Seq(
-      Seq("part=b", "rewritten", 1L),
-      Seq("part=c", "dropped", -1L))
   }
 
   test("commitUpsert: merges only the delta's partitions; migration-prone keys rejected") {
