@@ -3,9 +3,11 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Sort, Window}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, GlobalLimit, LocalLimit,
+  LogicalPlan, Project, Repartition, Sort, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreePattern.{SORT, WINDOW}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.call_function
 
 /** Session wiring for graft's native expressions and optimizer rules.
@@ -16,12 +18,14 @@ import org.apache.spark.sql.functions.call_function
   * session (`GraftFunctions.register(spark)`). After installation the
   * functions are available to SQL (`SELECT dot_product(a, b)`) and to the
   * Column API via [[GraftFunctions.dotProduct]] / [[GraftFunctions.cosineSim]].
-  * The declarative forms also install [[EliminateSortBelowWindow]].
+  * The declarative forms also install the optimizer rules
+  * [[EliminateSortBelowWindow]] and [[CoalesceSmallSingleScan]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.registry.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => EliminateSortBelowWindow)
+    ext.injectOptimizerRule(_ => CoalesceSmallSingleScan)
   }
 }
 
@@ -52,6 +56,65 @@ object EliminateSortBelowWindow extends Rule[LogicalPlan] {
     case f: Filter if f.condition.deterministic => f.copy(child = dropSort(f.child, partitionKeys))
     case other => other
   }
+}
+
+/** Runs a small single-table query in one partition. When a batch
+  * plan's only leaf is one file scan, every operator above it is a
+  * `Project`, `Filter`, `Sort`, `Window`, `Aggregate`,
+  * `WindowGroupLimit`, `Limit` or coalesce to one partition (none emits
+  * more rows than it reads), every expression is deterministic, and
+  * Catalyst sizes the scan at or below
+  * `spark.sql.autoBroadcastJoinThreshold` (the size Spark already holds
+  * whole in one place), the scan with its filters and projections is
+  * coalesced to one partition. The global sorts, windows and aggregates
+  * above it are then met without an exchange, and a global sort without
+  * its sampling job. The bound: one task reads at most the threshold's
+  * bytes of files, and no operator above it sees more rows than that
+  * task reads. A join, generator or union, a streaming plan (its
+  * stateful operators keep their fixed state partitions), a larger scan,
+  * a threshold of -1, a plan with nothing to distribute, or a
+  * nondeterministic expression (its values may depend on the partition)
+  * leaves the plan unchanged.
+  */
+object CoalesceSmallSingleScan extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.collectLeaves() match {
+    case Seq(scan @ LogicalRelation(_: HadoopFsRelation, _, _, _, _))
+        if !plan.isStreaming && conf.autoBroadcastJoinThreshold >= 0 &&
+          !plan.exists(!bounded(_)) && plan.exists(distributes) && !plan.exists(coalesced) &&
+          scan.stats.sizeInBytes <= conf.autoBroadcastJoinThreshold =>
+      coalesce(plan)
+    case _ => plan
+  }
+
+  private def bounded(p: LogicalPlan): Boolean = p.expressions.forall(_.deterministic) && (p match {
+    case _: LogicalRelation | _: Project | _: Filter | _: Sort | _: Window | _: Aggregate |
+         _: WindowGroupLimit | _: GlobalLimit | _: LocalLimit => true
+    case r: Repartition => r.numPartitions == 1 && !r.shuffle
+    case _ => false
+  })
+
+  private def distributes(p: LogicalPlan): Boolean = p match {
+    case s: Sort => s.global
+    case _: Window | _: Aggregate => true
+    case _ => false
+  }
+
+  /** The scan with the filters and projections the file source plans
+    * into it: the coalesce goes above them, so they still push down. */
+  private def scanChain(p: LogicalPlan): Boolean = p match {
+    case _: LogicalRelation => true
+    case Project(_, child) => scanChain(child)
+    case Filter(_, child) => scanChain(child)
+    case _ => false
+  }
+
+  private def coalesced(p: LogicalPlan): Boolean = p match {
+    case Repartition(1, false, child) => scanChain(child)
+    case _ => false
+  }
+
+  private def coalesce(p: LogicalPlan): LogicalPlan =
+    if (scanChain(p)) Repartition(1, shuffle = false, p) else p.mapChildren(coalesce)
 }
 
 object GraftFunctions {

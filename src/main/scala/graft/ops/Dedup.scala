@@ -383,24 +383,6 @@ object Dedup {
     fresh.join(dupIds, Seq(id), "left_anti")
   }
 
-  /** End-to-end near-duplicate removal: MinHash-LSH candidate generation
-    * → exact Jaccard verification of candidates only → drop every doc
-    * with a verified duplicate of smaller id (the canonical survivor).
-    * Total cost: two map passes + one bounded bucket join + one
-    * |candidates| verify join + one anti-join — never O(n²). */
-  def dedupCorpus(df: DataFrame, id: String, text: String,
-                  threshold: Double = 0.8,
-                  shingleSize: Int = 3, k: Int = 16, bands: Int = 4,
-                  reliable: Boolean = false): DataFrame = {
-    val candidates = minhashCandidatePairs(df, id, text, shingleSize, k, bands)
-      .select(col("id_a"), col("id_b"))
-    val dups = verifyJaccard(df, candidates, id, text, shingleSize,
-      materialize = true, reliable = reliable)
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_b").as(id)).distinct()
-    df.join(dups, Seq(id), "left_anti")
-  }
-
   /** Connected components over a near-duplicate pair list: every doc in a
     * transitively-connected duplicate family gets the family's minimum id
     * as `comp` — the cluster step real dedup pipelines run between

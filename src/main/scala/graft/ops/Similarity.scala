@@ -42,10 +42,6 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.cosineSim(a, b)
 
-  /** Portable HOF form of [[cosine]]. */
-  def cosineHof(a: Column, b: Column): Column =
-    dotHof(a, b) / nullif(sqrt(dotHof(a, a)) * sqrt(dotHof(b, b)), lit(0.0))
-
   /** Two-phase per-query top-k over a scored (query_id, neighbor_id,
     * cosine) frame. A single `Window.partitionBy(query_id)` funnels the
     * WHOLE scored stream onto |queries| reducers — the classic hot-spot
@@ -81,11 +77,12 @@ object Similarity {
     * loses 0.3–0.7 s per query. 256 sits between the regimes — ≥ 8
     * task-widths of kernel work per candidate row at local[32].
     *
-    * Pinned by the r19 |Q| sweep (OPTIMIZATION_r19.md §5, 3-rep
-    * medians, spread − unspread seconds): 16 → −0.41, 32 → −0.47,
-    * 64 → −0.17, 96 → −0.15, 128 → −0.59, 192 → −0.06 (wash),
-    * 256 → **+0.62**, 512 → +1.70, 2000 → +10.6. The knee sits between 192 and 256 —
-    * this constant IS the measured crossover, not an interpolation. */
+    * The bound it protects: a query side under 256 rows never pays for
+    * the rebalance. A sweep of |Q| at sf0.1 (3-rep medians, gain of the
+    * spread in seconds) gave 16 → −0.41, 32 → −0.47, 64 → −0.17,
+    * 96 → −0.15, 128 → −0.59, 192 → −0.06 (wash), 256 → +0.62,
+    * 512 → +1.70, 2000 → +10.6: the constant is that crossover, not an
+    * interpolation. */
   private[ops] val SpreadMinQueries: Long = 256L
 
   /** The (candidate × query) join behind every flat scan
@@ -122,9 +119,9 @@ object Similarity {
     // broadcast branch: the candidate side streams with NO exchange, so
     // its scan parallelism IS the stage parallelism — a small corpus
     // that fits one file split would evaluate the whole |C|·|Q| cosine
-    // product in ONE task ([[Skew.spread]]'s er_fuzzy_pairs lesson;
-    // emb_lof_outliers' n² scoring ran single-threaded for exactly this
-    // reason, OPTIMIZATION_r18.md §2.1). spread is a no-op when
+    // product in ONE task ([[Skew.spread]]'s er_fuzzy_pairs case;
+    // emb_lof_outliers' n² scoring is the same shape, one task per
+    // candidate file split). spread is a no-op when
     // splits ≥ cores — the 100 TB case by construction — but it is NOT
     // free when it fires: one exchange + one stage barrier. The probe
     // count says whether it pays: per candidate row the stage does |Q|
@@ -710,11 +707,11 @@ object Similarity {
     // cores): a one-split corpus would otherwise assign single-threaded
     // AND hand the checkpoint — hence the probe join that streams it —
     // a ONE-partition layout, serializing the |Q|·|list| shortlist
-    // scoring however many cores exist (the r18 emb_lof_outliers
-    // lesson, reproduced on this path in r19: the IVF variant measured
-    // SLOWER than the spread exact variant it shortlists for — stash
-    // A/B: 5.4 → 3.8 s med solo; an UNGATED build spread cost
-    // sim_ivf_data_topk +0.55 s, the regression the flag guards).
+    // scoring however many cores exist (emb_lof_outliers' shape: without
+    // the spread the IVF variant measured SLOWER than the spread exact
+    // variant it shortlists for, 5.4 → 3.8 s median with it; an UNGATED
+    // build spread cost sim_ivf_data_topk +0.55 s, the regression the
+    // flag guards).
     val indexed =
       ivfAssignWith(if (spreadPostings) Skew.spread(candidates) else candidates,
         vec, cents)

@@ -88,14 +88,18 @@ object StockAnalytics {
   }
 
   /** Display formatting (reference: app.py:121-124 — ⬆/⬇ glyph + 2dp
-    * percent) as a native Column expression, not a UDF. */
+    * percent) as a native Column expression, not a UDF. Reference
+    * surface: the engine serves data and renders nothing, so only its
+    * spec calls this; it stands for the dashboard's display step. */
   def formatDailyReturn(c: Column): Column =
     concat(
       when(c >= 0, lit("⬆ ")).otherwise(lit("⬇ ")),
       format_number(abs(c) * 100, 2), lit("%"))
 
   /** Edge-of-system timezone conversion: storage stays UTC, display
-    * converts (reference: app.py:212-213, config.py:46 US/Eastern). */
+    * converts (reference: app.py:212-213, config.py:46 US/Eastern).
+    * Reference surface, like [[formatDailyReturn]]: only its spec calls
+    * it. */
   def displayInTz(utcTs: Column, tz: String = "America/New_York"): Column =
     from_utc_timestamp(utcTs, tz)
 }

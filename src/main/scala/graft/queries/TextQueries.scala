@@ -435,14 +435,10 @@ object TextQueries {
 
     // SUBSTRING-level dedup, the excision half: remove every mined span
     // from its documents, pass untouched docs through unchanged
-    "dedup_substring" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.exciseSpans(docs,
-          Dedup.frequentSpans(docs, id = "doc_id", text = "text",
-            n = 5, minDocs = 2, minSpanTokens = 8),
-          id = "doc_id", text = "text")
-        .orderBy(col("doc_id"))
-    }),
+    "dedup_substring" -> ((s, dir) =>
+      Dedup.dedupSubstrings(Tables.documents(s, dir), id = "doc_id", text = "text",
+          n = 5, minDocs = 2, minSpanTokens = 8)
+        .orderBy(col("doc_id"))),
 
     // FULLY ORACLED since the profile moved onto the portable sketch
     // lanes: the HLL distinct estimate replays register-for-register

@@ -28,6 +28,14 @@ import org.apache.spark.sql.types.StructType
   * transaction (load_stock_metrics.py:56-61): it heals a torn swap,
   * opens the current snapshot, writes the derived one beside it and
   * swaps it in with two renames.
+  *
+  * Read contract. [[LakeReader.read]] opens a path once per snapshot: it
+  * keeps up to 32 resolved relations, one per (session, normalised
+  * path, schema), each with the listing it was resolved over (path,
+  * length and modification time of every file under the path). A read
+  * whose listing and session confs are unchanged reuses the relation
+  * without touching Hadoop conf, footer or partition discovery; any
+  * other listing (every write above changes it) or conf opens afresh.
   */
 object LakeWriter {
 
@@ -68,10 +76,8 @@ object LakeWriter {
                      (next: Option[DataFrame] => DataFrame): Unit = {
     recoverSnapshot(spark, path)
     val current = Option.when(LakeReader.exists(spark, path))(LakeReader.read(spark, path))
-    val target = new org.apache.hadoop.fs.Path(path)
+    val (target, staging, old) = snapshotPaths(path)
     val fs = target.getFileSystem(LakeReader.hadoopConf(spark))
-    val staging = new org.apache.hadoop.fs.Path(path + ".__staging__")
-    val old = new org.apache.hadoop.fs.Path(path + ".__old__")
     write(next(current), staging.toString, partitionCols)
     if (current.isDefined) require(fs.rename(target, old),
       s"replaceSnapshot: could not stage out previous snapshot at $path")
@@ -91,16 +97,21 @@ object LakeWriter {
     * a live target (death after the commit, before the cleanup) is
     * swept. A no-op on a healthy or absent snapshot. */
   private[sources] def recoverSnapshot(spark: SparkSession, path: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(path)
+    val (target, staging, old) = snapshotPaths(path)
     val fs = target.getFileSystem(LakeReader.hadoopConf(spark))
-    val staging = new org.apache.hadoop.fs.Path(path + ".__staging__")
-    val old = new org.apache.hadoop.fs.Path(path + ".__old__")
     if (!fs.exists(target) && fs.exists(old))
       require(fs.rename(old, target),
         s"recoverSnapshot: could not restore $old to $path")
     fs.delete(staging, true)
     fs.delete(old, true)
     ()
+  }
+
+  /** The target and its `__staging__` and `__old__` siblings, derived
+    * from the normalised path: `wh/` and `wh` name the same three. */
+  private def snapshotPaths(path: String) = {
+    val target = new org.apache.hadoop.fs.Path(path)
+    (target, target.suffix(".__staging__"), target.suffix(".__old__"))
   }
 
   /** Partitioned-lake compaction, the small-files repair for append-heavy
@@ -277,6 +288,7 @@ object LakeWriter {
 
 object LakeReader {
   import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+  import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
   /** The Hadoop conf of the lake's file-system calls: the session's, the
     * one `spark.read` lists and scans with, so a session-level
@@ -289,6 +301,23 @@ object LakeReader {
   private[sources] def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     p.getFileSystem(hadoopConf(spark)).exists(p)
+  }
+
+  /** Tables [[read]] keeps open, least recently read evicted first. A
+    * dashboard reads two; a test JVM's suites read a few dozen. */
+  private val OpenTables = 32
+
+  private final case class Key(spark: SparkSession, path: Path, schema: Option[StructType])
+
+  /** A resolved relation and what it was resolved under: the session's
+    * confs and the listing of its snapshot, taken before it was
+    * resolved, on the file system handle of that first open. */
+  private final case class Opened(fs: FileSystem, root: Path, confs: Map[String, String],
+                                  listing: Seq[(String, Long, Long)], relation: HadoopFsRelation)
+
+  private val opened = new java.util.LinkedHashMap[Key, Opened](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[Key, Opened]): Boolean =
+      size > OpenTables
   }
 
   /** Schema-enforced zone read; partition/pushdown filters apply at scan.
@@ -305,10 +334,56 @@ object LakeReader {
     * goes to `spark.read.parquet` unchanged and fails as it does.
     * Merging every file's schema is refused under
     * `spark.sql.parquet.mergeSchema`: pass the schema, or read through
-    * [[VersionedLake.read]], which merges with its own reader. */
+    * [[VersionedLake.read]], which merges with its own reader.
+    *
+    * Reuse. The resolved relation is kept per (session, normalised
+    * path, schema), at most `OpenTables` (32) of them, least recently
+    * read evicted first, with the identity of the snapshot it was
+    * resolved over: the path, length and modification time of every
+    * file under the path, hidden ones (`_spark_metadata` logs,
+    * `_SUCCESS`, `.crc`) included, listed on the driver before the
+    * relation is resolved. A later read lists
+    * again through the file system handle kept from that open; when the
+    * listing and every session conf are unchanged it returns a new frame
+    * (fresh attribute ids, so two reads self-join as two
+    * `spark.read.parquet` calls do) over the same relation: no Hadoop
+    * conf, no data-source lookup, no footer read, no partition discovery.
+    * Any other listing (a commit, an append, a dynamic overwrite, a
+    * healed swap, a sink batch, a writer's leftovers) or conf is a miss
+    * that opens the path as above. Globs are never kept. A writer that
+    * rewrites a file in place with the same length and modification
+    * time is not seen; Spark's writers name every file afresh. */
   def read(spark: SparkSession, path: String, schema: Option[StructType] = None): DataFrame = {
+    val key = Key(spark, new Path(path), schema)
+    val confs = spark.sessionState.conf.getAllConfs
+    val kept = opened.synchronized(Option(opened.get(key)))
+      .filter(o => o.confs == confs && listing(o.fs, o.root).contains(o.listing))
+    kept.fold(open(spark, key, path, confs))(o => spark.baseRelationToDataFrame(o.relation))
+  }
+
+  private def open(spark: SparkSession, key: Key, path: String,
+                   confs: Map[String, String]): DataFrame = {
+    val conf = hadoopConf(spark)
+    val fs = key.path.getFileSystem(conf)
+    val root = fs.makeQualified(key.path)
+    val before = if (path.exists("{}[]*?\\".contains(_))) None else listing(fs, root)
     val r = spark.read
-    schema.orElse(footerSchema(spark, path)).fold(r)(s => r.schema(s)).parquet(path)
+    val df = key.schema.orElse(footerSchema(spark, conf, fs, root, path))
+      .fold(r)(s => r.schema(s)).parquet(path)
+    for (l <- before; rel <- df.queryExecution.analyzed.collectFirst {
+           case LogicalRelation(rel: HadoopFsRelation, _, _, _, _) => rel })
+      opened.synchronized(opened.put(key, Opened(fs, root, confs, l, rel)))
+    df
+  }
+
+  /** (path, length, modification time) of every file under `root`,
+    * sorted; None when `root` cannot be listed (missing, unreadable). */
+  private def listing(fs: FileSystem, root: Path): Option[Seq[(String, Long, Long)]] = {
+    def walk(st: FileStatus): Seq[(String, Long, Long)] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
+      else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+    try Some(walk(fs.getFileStatus(root)).sorted)
+    catch { case _: java.io.IOException => None }
   }
 
   /** The data schema Spark's parquet inference would take for `path`
@@ -317,7 +392,8 @@ object LakeReader {
     * path, so it lands here too), or a file that also stores a
     * partition column (under a given schema that column would move to
     * the end). */
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+  private def footerSchema(spark: SparkSession, conf: org.apache.hadoop.conf.Configuration,
+                           fs: FileSystem, qualified: Path, path: String): Option[StructType] = {
     import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
     import org.apache.parquet.hadoop.Footer
     import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -329,10 +405,6 @@ object LakeReader {
       s"LakeReader.read($path) takes the schema from one footer, but " +
         "spark.sql.parquet.mergeSchema=true asks to merge every file's: " +
         "pass the schema, or read through VersionedLake.read")
-    val conf = hadoopConf(spark)
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val qualified = fs.makeQualified(root)
     val first =
       if (FileStreamSink.hasMetadata(Seq(path), conf, sqlConf))
         new MetadataLogFileIndex(spark, qualified, Map.empty, None)

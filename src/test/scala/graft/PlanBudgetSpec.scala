@@ -167,6 +167,11 @@ class PlanBudgetSpec extends SparkSpec {
     s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "10485760")
     s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     s.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    // the budgets audit the at-scale plan shape: at this scale factor
+    // every single-table scan is under the broadcast threshold, and the
+    // one-partition rule would drop exchanges a larger input keeps
+    s.conf.set("spark.sql.optimizer.excludedRules",
+      graft.functions.CoalesceSmallSingleScan.ruleName)
     s
   }
 

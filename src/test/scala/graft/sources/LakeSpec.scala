@@ -454,6 +454,121 @@ class LakeSpec extends SparkSpec {
     all(hits(".rename(")) should startWith("graft/sources/")
     hits("sparkContext.hadoopConfiguration") shouldBe empty
   }
+
+  test("replaceSnapshot on a path with a trailing slash stages beside it, twice") {
+    val root = Files.createTempDirectory("lake7").toString
+    val path = s"$root/wh/"
+    LakeWriter.replaceSnapshot(spark, path, Seq.empty) { current =>
+      current shouldBe None
+      Seq((1L, "first")).toDF("k", "v")
+    }
+    LakeWriter.replaceSnapshot(spark, path, Seq.empty) { current =>
+      current.map(_.rows) shouldBe Some(Seq(Seq(1L, "first")))
+      current.get.withColumn("v", lit("second"))
+    }
+    LakeReader.read(spark, s"$root/wh").rows shouldBe Seq(Seq(1L, "second"))
+    Files.list(Paths.get(root)).iterator.asScala.map(_.getFileName.toString).toSeq shouldBe Seq("wh")
+  }
+
+  // Reuse of an opened table: a repeat read must never serve a stale
+  // snapshot. Each case reads once (the table is then kept), changes
+  // the snapshot, and reads again.
+
+  private def sortedRows(df: DataFrame): Seq[String] = df.rows.map(_.mkString(",")).sorted
+
+  test("reuse: a write from another session between two reads shows") {
+    val path = s"${Files.createTempDirectory("lakereuse1")}/t"
+    LakeWriter.write(Seq((1L, "a")).toDF("k", "v"), path, Seq.empty)
+    LakeReader.read(spark, path).rows shouldBe Seq(Seq(1L, "a"))
+    val other = spark.newSession()
+    LakeWriter.write(other.range(2, 4).select(col("id").as("k"), lit("b").as("v")), path, Seq.empty)
+    sortedRows(LakeReader.read(spark, path)) shouldBe Seq("2,b", "3,b")
+  }
+
+  test("reuse: a swap torn between its renames reads as the healed snapshot") {
+    val path = s"${Files.createTempDirectory("lakereuse2")}/wh"
+    LakeWriter.write(Seq((1L, "s0")).toDF("k", "v"), path, Seq.empty)
+    LakeReader.read(spark, path).rows shouldBe Seq(Seq(1L, "s0"))
+    LakeWriter.replaceSnapshot(spark, path, Seq.empty)(_ => Seq((1L, "s1")).toDF("k", "v"))
+    tearSwap(path, Seq((1L, "uncommitted")).toDF("k", "v"))
+    LakeWriter.recoverSnapshot(spark, path)
+    LakeReader.read(spark, path).rows shouldBe Seq(Seq(1L, "s1"))
+  }
+
+  test("reuse: a dynamic overwrite of one year between two reads shows") {
+    val path = s"${Files.createTempDirectory("lakereuse3")}/zone"
+    LakeWriter.write(Seq((2023, "A", 1.0), (2024, "A", 2.0)).toDF("year", "ticker", "v"),
+      path, Seq("year"))
+    sortedRows(LakeReader.read(spark, path)) shouldBe Seq("A,1.0,2023", "A,2.0,2024")
+    LakeWriter.overwritePartitions(Seq((2024, "B", 9.0)).toDF("year", "ticker", "v"),
+      path, Seq("year"))
+    sortedRows(LakeReader.read(spark, path)) shouldBe Seq("A,1.0,2023", "B,9.0,2024")
+  }
+
+  test("reuse: a file appended between two reads shows") {
+    val path = s"${Files.createTempDirectory("lakereuse4")}/t"
+    Seq((1L, "a")).toDF("k", "v").write.parquet(path)
+    LakeReader.read(spark, path).count() shouldBe 1
+    Seq((2L, "b")).toDF("k", "v").write.mode("append").parquet(path)
+    sortedRows(LakeReader.read(spark, path)) shouldBe Seq("1,a", "2,b")
+  }
+
+  test("reuse: a batch a file-stream sink commits between two reads shows") {
+    val dir = Files.createTempDirectory("lakereuse5").toString
+    def runStream(): Unit =
+      spark.readStream.schema("k long, s string").parquet(s"$dir/src")
+        .writeStream.format("parquet").option("path", s"$dir/sink")
+        .option("checkpointLocation", s"$dir/ckpt")
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    Seq((1L, "a")).toDF("k", "s").write.parquet(s"$dir/src")
+    runStream()
+    LakeReader.read(spark, s"$dir/sink").count() shouldBe 1
+    Seq((2L, "b")).toDF("k", "s").write.mode("append").parquet(s"$dir/src")
+    runStream()
+    sortedRows(LakeReader.read(spark, s"$dir/sink")) shouldBe Seq("1,a", "2,b")
+  }
+
+  test("reuse: two reads of one path self-join as two spark.read.parquet calls") {
+    val path = s"${Files.createTempDirectory("lakereuse6")}/t"
+    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").write.parquet(path)
+    def pairs(a: DataFrame, b: DataFrame) =
+      sortedRows(a.join(b, a("k") === b("k") + 1).select(a("v"), b("v")))
+    val (a, b) = (LakeReader.read(spark, path), LakeReader.read(spark, path))
+    pairs(a, b) shouldBe pairs(spark.read.parquet(path), spark.read.parquet(path))
+    pairs(a, b) shouldBe Seq("b,a", "c,b")
+  }
+
+  test("reuse: a repeat read of an unchanged table starts no job and makes no Hadoop conf") {
+    val path = s"${Files.createTempDirectory("lakereuse7")}/zone"
+    LakeWriter.write(Seq((2023, "A", 1.0), (2024, "B", 2.0)).toDF("year", "ticker", "v"),
+      path, Seq("year"))
+    val first = LakeReader.read(spark, path)
+    // Configuration registers every instance in a static weak registry;
+    // the ones alive before the read are held here so that only the
+    // read's own can be new
+    val registry = {
+      val f = classOf[org.apache.hadoop.conf.Configuration].getDeclaredField("REGISTRY")
+      f.setAccessible(true)
+      f.get(null).asInstanceOf[java.util.Map[AnyRef, AnyRef]]
+    }
+    def live(): java.util.Set[AnyRef] = classOf[org.apache.hadoop.conf.Configuration].synchronized {
+      val s = java.util.Collections.newSetFromMap(new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+      s.addAll(registry.keySet)
+      s
+    }
+    val before = live()
+    val again = LakeReader.read(spark, path)
+    val made = live().asScala.count(c => !before.contains(c))
+    made shouldBe 0
+    def relation(df: DataFrame) = df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.get
+    assert(relation(again) eq relation(first))
+    // the key is the normalised path: a trailing slash names the same table
+    assert(relation(LakeReader.read(spark, s"$path/")) eq relation(first))
+    jobsStartedBy(LakeReader.read(spark, path)) shouldBe 0
+    sortedRows(again) shouldBe sortedRows(first)
+  }
 }
 
 /** The local file system under another scheme, which only a session
