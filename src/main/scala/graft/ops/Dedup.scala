@@ -22,23 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Lineage cut for the eager/iterative paths. Default: localCheckpoint
-    * — fast, but blocks live on executors, so an executor loss mid-job
-    * invalidates them (acceptable in local mode and on stable clusters).
-    * `reliable = true`: a real `checkpoint()` to the session's checkpoint
-    * dir — survives executor loss at the cost of a write to reliable
-    * storage, the right mode for long dedup jobs on preemptible fleets.
-    * Fails loudly when no checkpoint dir is set rather than letting
-    * Spark throw mid-job. */
-  private def cut(df: DataFrame, reliable: Boolean): DataFrame =
-    if (!reliable) df.localCheckpoint()
-    else {
-      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "reliable checkpointing needs a checkpoint dir: call " +
-          "spark.sparkContext.setCheckpointDir(<cluster-visible path>) first")
-      df.checkpoint()
-    }
-
   /** Exact content dedup: group by md5(content), keep the smallest id as
     * the canonical survivor. */
   def exactByContent(df: DataFrame, id: String, content: String): DataFrame =
@@ -293,38 +276,25 @@ object Dedup {
     * `shingleSize` MUST match the candidate generator's: verifying
     * unigram similarity against 3-shingle MinHash candidates silently
     * loses recall (unigram-similar pairs never become candidates).
-    * shingleSize = 1 → plain distinct-token Jaccard.
-    *
-    * Lazy by default; pass `materialize = true` when the pairs frame is
-    * the output of an expensive generator (see [[verifyJaccardBetween]]). */
+    * shingleSize = 1 → plain distinct-token Jaccard. EAGER: the pairs
+    * frame is cut at call time (see [[verifyJaccardBetween]]). */
   def verifyJaccard(df: DataFrame, pairs: DataFrame, id: String,
-                    text: String, shingleSize: Int = 1,
-                    materialize: Boolean = false,
-                    reliable: Boolean = false): DataFrame =
-    verifyJaccardBetween(df, df, pairs, id, text, shingleSize, materialize,
-      reliable)
+                    text: String, shingleSize: Int = 1): DataFrame =
+    verifyJaccardBetween(df, df, pairs, id, text, shingleSize)
 
   /** [[verifyJaccard]] for pairs whose two sides come from DIFFERENT
     * frames (`id_a` rows of `dfA`, `id_b` rows of `dfB`) — the
     * cross-corpus case, where ids may collide between frames.
     *
     * The candidate list feeds THREE plan branches (two semi-prunes + the
-    * pair join); Spark re-executes unshared subtrees, so when `pairs` is
-    * the output of an expensive generator (LSH banding, prefix index),
-    * pass `materialize = true` to localCheckpoint it once at call time.
-    * That makes the call EAGER (a Spark job runs before the returned
-    * frame is acted on) and pins blocks on executors — the
-    * [[duplicateClusters]] executor-stability caveat applies, and
-    * `reliable = true` lifts it via a real `checkpoint()` (see [[cut]]).
-    * Default is lazy: plan construction runs no job, `explain` stays
-    * side-effect free, and a cheap/pre-materialized pairs frame is not
-    * re-pinned. */
+    * pair join) and is usually the output of an expensive generator (LSH
+    * banding, prefix index), which Spark would re-execute per branch, so
+    * it is [[Cut]] once at call time: the call is EAGER (a Spark job runs
+    * before the returned frame is acted on). */
   def verifyJaccardBetween(dfA: DataFrame, dfB: DataFrame, pairs: DataFrame,
                            id: String, text: String,
-                           shingleSize: Int = 1,
-                           materialize: Boolean = false,
-                           reliable: Boolean = false): DataFrame = {
-    val p = if (materialize) cut(pairs, reliable) else pairs
+                           shingleSize: Int = 1): DataFrame = {
+    val p = Cut(pairs)
     val ta = candidateTokSets(dfA, p, "id_a", id, text, shingleSize)
     val tb = candidateTokSets(dfB, p, "id_b", id, text, shingleSize)
     p
@@ -359,15 +329,14 @@ object Dedup {
                        id: String, text: String, threshold: Double = 0.8,
                        shingleSize: Int = 3, k: Int = 16, bands: Int = 4,
                        maxBucket: Int = 1000,
-                       portable: Boolean = false,
-                       reliable: Boolean = false): DataFrame = {
+                       portable: Boolean = false): DataFrame = {
     val histHashes = historical.select(md5(col(text)).as("__h")).distinct()
     // materialize the exact-survivor new batch once: it feeds banding,
     // verification and the final anti-join, and the new batch is small
     // by definition (the historical side stays lazy — it is read in 3
     // linear passes: hashes, banding, token sets — never materialized)
-    val fresh = cut(newDocs.withColumn("__h", md5(col(text)))
-      .join(histHashes, Seq("__h"), "left_anti").drop("__h"), reliable)
+    val fresh = Cut(newDocs.withColumn("__h", md5(col(text)))
+      .join(histHashes, Seq("__h"), "left_anti").drop("__h"))
     val newBanded = bandedSignatures(fresh, id, text, shingleSize, k, bands,
       maxBucket, portable)
       .select(col("band"), col("bucket"), col(id).as("id_a"))
@@ -377,7 +346,7 @@ object Dedup {
     val candidates = newBanded.join(histBanded, Seq("band", "bucket"))
       .select(col("id_a"), col("id_b")).distinct()
     val dupIds = verifyJaccardBetween(fresh, historical, candidates,
-        id, text, shingleSize, materialize = true, reliable = reliable)
+        id, text, shingleSize)
       .filter(col("jaccard") >= threshold)
       .select(col("id_a").as(id)).distinct()
     fresh.join(dupIds, Seq(id), "left_anti")
@@ -394,31 +363,27 @@ object Dedup {
     * neighbors' labels; rounds ≤ component diameter (`maxIter` guards
     * pathological chains — for web-scale graphs swap in the large-star/
     * small-star variant, which converges in O(log n) rounds). Each round
-    * is one shuffle-join + one aggregate; `localCheckpoint` cuts the
-    * growing lineage so round N's plan doesn't replay rounds 1..N-1. The
+    * is one shuffle-join + one aggregate; [[Cut]] ends the growing
+    * lineage so round N's plan doesn't replay rounds 1..N-1. The
     * convergence probe collects a single count — no data ever reaches
     * the driver.
     *
     * `maxIter` budgets LABEL-CHANGING rounds only: the final round that
     * merely observes no further change is free, so `maxIter = diameter`
-    * suffices (not diameter+1). Caveat for very large runs:
-    * `localCheckpoint` keeps blocks on executors, so a lost executor
-    * makes the iteration unrecoverable — on an unreliable/preemptible
-    * cluster pass `reliable = true` for HDFS-backed `checkpoint()` at
-    * higher per-round cost (see [[cut]]; needs a checkpoint dir). */
+    * suffices (not diameter+1). Each round survives executor loss only
+    * when the deployment names a checkpoint dir (see [[Cut]]). */
   def duplicateClusters(pairs: DataFrame, idA: String = "id_a",
-                        idB: String = "id_b", maxIter: Int = 20,
-                        reliable: Boolean = false): DataFrame = {
+                        idB: String = "id_b", maxIter: Int = 20): DataFrame = {
     // both orientations in ONE pass over `pairs` (explode, not a
     // self-union): the pair list is usually the output of an expensive
     // generator, and a two-branch union would execute that generator
     // twice before the checkpoint cut
-    val edges = cut(pairs
+    val edges = Cut(pairs
       .select(explode(array(
         struct(col(idA).as("src"), col(idB).as("dst")),
         struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct(), reliable)
+      .distinct())
     // seed with min(id, min neighbor): identical to one propagation round
     // over identity labels, for the price of the distinct-node scan the
     // identity seeding needed anyway — one fewer loop round
@@ -433,10 +398,9 @@ object Dedup {
     while (!converged && i <= maxIter) {
       val nbrMin = edges.join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
         .groupBy(col("src").as("id")).agg(min(col("comp")).as("nbr_comp"))
-      val updated = cut(labels.join(nbrMin, Seq("id"), "left")
+      val updated = Cut(labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"), col("comp"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp_new")),
-        reliable)
+          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp_new")))
       converged = updated.filter(col("comp_new") < col("comp")).isEmpty
       labels = updated.select(col("id"), col("comp_new").as("comp"))
       i += 1
@@ -470,10 +434,9 @@ object Dedup {
     * on component minima; labels read directly off the star edges. Same
     * output as [[duplicateClusters]], provably (both compute
     * min-id-per-component); the fixed-point check compares consecutive
-    * small-star outputs. `reliable` as in [[cut]]. */
+    * small-star outputs. */
   def duplicateClustersStar(pairs: DataFrame, idA: String = "id_a",
-                            idB: String = "id_b", maxIter: Int = 25,
-                            reliable: Boolean = false): DataFrame = {
+                            idB: String = "id_b", maxIter: Int = 25): DataFrame = {
     // both orientations of the current edge list = the per-node
     // neighborhood view (one explode pass, as in duplicateClusters)
     def nbrs(e: DataFrame): DataFrame = e
@@ -489,10 +452,10 @@ object Dedup {
     // must still surface as its own component (duplicateClusters does)
     val allNodes = pairs
       .select(explode(array(col(idA), col(idB))).as("id")).distinct()
-    var edges = cut(pairs
+    var edges = Cut(pairs
       .select(col(idA).as("src"), col(idB).as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct(), reliable)
+      .distinct())
     // -1 sentinel: the previous round's cardinality, seeded lazily from
     // round 1's nextCount — an eager count() on the initial checkpointed
     // set would be paid even when round 1 converges, and the only thing
@@ -520,7 +483,7 @@ object Dedup {
         .unionByName(mS.select(col("u").as("src"), col("m").as("dst")))
         .filter(col("src") =!= col("dst"))
         .distinct()
-      val next = cut(small, reliable)
+      val next = Cut(small)
       // fixed point: consecutive small-star outputs are the same edge
       // set. Both sets are .distinct() outputs, so equal cardinality
       // plus ONE-way containment is set equality — and when the cheap
@@ -603,7 +566,7 @@ object Dedup {
     val cand = ranked.as("a").join(ranked.as("b"),
         col("a.tok") === col("b.tok") && col(s"a.$id") < col(s"b.$id"))
       .select(col(s"a.$id").as("id_a"), col(s"b.$id").as("id_b")).distinct()
-    verifyJaccard(df, cand, id, text, materialize = true)
+    verifyJaccard(df, cand, id, text)
       .filter(col("jaccard") >= threshold)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("jaccard"))
   }
@@ -722,7 +685,7 @@ object Dedup {
     // DELIBERATELY un-materialized: the exploded gram stream is ~n× the
     // token count with an n-token string per row (≈25× the source bytes
     // at n=5), so checkpointing it costs far more than re-running a
-    // map-only subtree. Measured at ×30 corpus: localCheckpoint here
+    // map-only subtree. Measured at ×30 corpus: a cut here
     // made span mining 2.4× SLOWER (21.9 s vs 9.2 s) — recompute beats
     // materialize for cheap-to-rebuild, expansion-heavy projections.
     val grams = positionedGrams(Skew.spread(df), id, text, n)

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: each PageRank iteration is one (rank ⋈ edges) shuffle
   * on src plus one inflow aggregation on dst — the standard Pregel
   * contraction expressed as joins, no driver-side adjacency. The node
-  * frame and out-degrees compute once; iterations localCheckpoint so
+  * frame and out-degrees compute once; each iteration is a [[Cut]], so
   * the plan never deepens.
   */
 object Graph {
@@ -109,7 +109,7 @@ object Graph {
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     require(iters >= 1, s"need at least one iteration, got $iters")
     // iteration frames are |nodes|/|edges|-sized and materialize HERE
-    // (localCheckpoint is eager), so the caller can size reducers to
+    // (every Cut is eager), so the caller can size reducers to
     // the graph instead of paying iters × session-default scheduling
     // overhead; the session setting is restored before returning. A
     // real deployment sizes this to edge volume.
@@ -140,18 +140,17 @@ object Graph {
     val deg = und.select(col("u").as("id"))
       .union(und.select(col("v").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-    // total order (deg, id) makes the orientation a DAG
-    val o = und
+    // total order (deg, id) makes the orientation a DAG; cut because it
+    // is referenced three times (both wedge sides + the closing chord),
+    // instead of leaning on runtime exchange reuse
+    val o = Cut(und
       .join(deg.select(col("id").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("id").as("v"), col("deg").as("dv")), "v")
       .select(
         when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("u"))
           .otherwise(col("v")).as("f"),
         when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("v"))
-          .otherwise(col("u")).as("t"))
-      // referenced three times (both wedge sides + the closing chord):
-      // materialize once instead of leaning on runtime exchange reuse
-      .localCheckpoint()
+          .otherwise(col("u")).as("t")))
     val tri = o.as("e1")
       .join(o.as("e2"), col("e1.t") === col("e2.f"))
       .select(col("e1.f").as("a"), col("e1.t").as("b"), col("e2.t").as("c"))
@@ -168,9 +167,7 @@ object Graph {
     * side carry 0 on the other. Two map-side-combined aggregations and
     * one |nodes|-sized outer join — no window, no driver state. */
   def degrees(edges: DataFrame, src: String = "src", dst: String = "dst"): DataFrame = {
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
+    val e = directed(edges, src, dst)
     val out = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("out_degree"))
     val in = e.groupBy(col("dst").as("id")).agg(count(lit(1)).as("in_degree"))
     out.join(in, Seq("id"), "full_outer")
@@ -186,22 +183,20 @@ object Graph {
     * Each round shuffles only the FRONTIER (nodes first reached last
     * round) against the edge list and anti-joins the visited set —
     * never all paths (the recursive-CTE oracle dedups per level for
-    * the same reason). Frames localCheckpoint per round so the plan
+    * the same reason). Frames are [[Cut]] per round so the plan
     * stays k-independent; visited is bounded by |nodes|. */
   def kHopMinHops(edges: DataFrame, seeds: DataFrame, src: String = "src",
                   dst: String = "dst", k: Int = 3): DataFrame = {
     require(k >= 1, s"need at least one hop, got $k")
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().localCheckpoint()
-    val s0 = seeds.select(col(seeds.columns.head).as("id")).distinct()
-      .withColumn("hops", lit(0)).localCheckpoint()
+    val e = Cut(directed(edges, src, dst))
+    val s0 = Cut(seeds.select(col(seeds.columns.head).as("id")).distinct()
+      .withColumn("hops", lit(0)))
     val (visited, _) = (1 to k).foldLeft((s0, s0)) { case ((vis, frontier), i) =>
-      val next = frontier.join(e, col("id") === col("src"))
+      val next = Cut(frontier.join(e, col("id") === col("src"))
         .select(col("dst").as("id")).distinct()
         .join(vis, Seq("id"), "left_anti")
-        .withColumn("hops", lit(i)).localCheckpoint()
-      (vis.union(next).localCheckpoint(), next)
+        .withColumn("hops", lit(i)))
+      (Cut(vis.union(next)), next)
     }
     visited
   }
@@ -219,24 +214,21 @@ object Graph {
     * rank exactly 0 (never reached) are emitted too: the caller
     * filters, the oracle compares the whole vector. Scale shape is
     * [[pageRank]]'s: one rank⋈edges shuffle + one inflow agg per
-    * iteration, localCheckpoint'd so the plan never deepens. */
+    * iteration, each a [[Cut]] so the plan never deepens. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
                            src: String = "src", dst: String = "dst",
                            damping: Double = 0.85, iters: Int = 8): DataFrame = {
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     require(iters >= 1, s"need at least one iteration, got $iters")
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().localCheckpoint()
+    val e = Cut(directed(edges, src, dst))
     val sd = seeds.select(col(seeds.columns.head).as("id")).distinct()
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).union(sd.select(col("id")))
       .distinct()
     val outdeg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("outdeg"))
-    val nd = nodes.join(outdeg, Seq("id"), "left")
+    val nd = Cut(nodes.join(outdeg, Seq("id"), "left")
       .join(broadcast(sd.withColumn("is_seed", lit(true))), Seq("id"), "left")
-      .withColumn("is_seed", coalesce(col("is_seed"), lit(false)))
-      .localCheckpoint()
+      .withColumn("is_seed", coalesce(col("is_seed"), lit(false))))
     val ns = sd.count()
     require(ns > 0, "personalizedPageRank needs a non-empty seed set")
     val sv = when(col("is_seed"), lit(1.0) / lit(ns)).otherwise(lit(0.0))
@@ -250,11 +242,10 @@ object Graph {
         .select(col("dst").as("id"), (col("pr") / col("outdeg")).as("c"))
       val inflow = contrib.groupBy(col("id"))
         .agg(sum(d30(col("c"))).cast("double").as("inflow"))
-      nd.join(inflow, Seq("id"), "left").crossJoin(broadcast(dm))
+      Cut(nd.join(inflow, Seq("id"), "left").crossJoin(broadcast(dm))
         .select(col("id"), col("outdeg"), col("is_seed"),
           (lit(1 - damping) * sv + lit(damping) *
-            (coalesce(col("inflow"), lit(0.0)) + col("dm") * sv)).as("pr"))
-        .localCheckpoint()
+            (coalesce(col("inflow"), lit(0.0)) + col("dm") * sv)).as("pr")))
     }
     rFinal.select(col("id"), col("pr"))
   }
@@ -272,7 +263,7 @@ object Graph {
     * label vector after k rounds", not a fixpoint — convergence
     * behavior is pinned by spec on known graphs. One neighbor-label
     * shuffle + one mode-agg + one keep-own join per round,
-    * localCheckpoint'd like the other iterative ops. */
+    * each a [[Cut]] like the other iterative ops. */
   def labelPropagation(edges: DataFrame, src: String = "src",
                        dst: String = "dst", iters: Int = 5): DataFrame = {
     require(iters >= 1, s"need at least one iteration, got $iters")
@@ -286,12 +277,10 @@ object Graph {
           "densely re-key string ids to longs first (e.g. via xxhash64 " +
           "or a dictionary join)")
     }
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().localCheckpoint()
+    val e = Cut(directed(edges, src, dst))
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-    val l0 = nodes.withColumn("lbl", col("id")).localCheckpoint()
+    val l0 = Cut(nodes.withColumn("lbl", col("id")))
     val lFinal = (1 to iters).foldLeft(l0) { (lk, _) =>
       val counts = lk.join(e, col("id") === col("src"))
         .groupBy(col("dst").as("id"), col("lbl"))
@@ -300,9 +289,8 @@ object Graph {
       val pick = counts.groupBy(col("id"))
         .agg(max_by(col("lbl"), struct(col("c"), (-col("lbl")).as("nl")))
           .as("new_lbl"))
-      lk.join(pick, Seq("id"), "left")
-        .select(col("id"), coalesce(col("new_lbl"), col("lbl")).as("lbl"))
-        .localCheckpoint()
+      Cut(lk.join(pick, Seq("id"), "left")
+        .select(col("id"), coalesce(col("new_lbl"), col("lbl")).as("lbl")))
     }
     lFinal.select(col("id"), col("lbl").as("community"))
   }
@@ -331,7 +319,7 @@ object Graph {
                  k: Int = 50, maxDegree: Long = 10000L): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
     require(maxDegree >= 2, s"maxDegree must be >= 2, got $maxDegree")
-    val und = undirected(edges, src, dst).localCheckpoint()
+    val und = Cut(undirected(edges, src, dst))
     val adj = und.select(col("u").as("c"), col("v").as("x"))
       .unionAll(und.select(col("v").as("c"), col("u").as("x")))
     val deg = adj.groupBy(col("c")).agg(count(lit(1)).as("deg"))
@@ -411,7 +399,7 @@ object Graph {
                       maxDegree: Long = 10000L): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
     require(maxDegree >= 2, s"maxDegree must be >= 2, got $maxDegree")
-    val und = undirected(edges, src, dst).localCheckpoint()
+    val und = Cut(undirected(edges, src, dst))
     val adj = und.select(col("u").as("c"), col("v").as("x"))
       .unionAll(und.select(col("v").as("c"), col("u").as("x")))
     val deg = adj.groupBy(col("c")).agg(count(lit(1)).as("deg"))
@@ -464,7 +452,7 @@ object Graph {
     * quantize. Output: (id, deg) over the final edge set, deg ≥ k.
     *
     * Plan: per round one map-side-combined degree aggregation and two
-    * hash joins against the shrinking keep-set; frames localCheckpoint
+    * hash joins against the shrinking keep-set; each round is a [[Cut]]
     * so the plan never deepens with `rounds`. */
   def kCore(edges: DataFrame, src: String = "src", dst: String = "dst",
             k: Int = 3, rounds: Int = 8): DataFrame = {
@@ -473,13 +461,12 @@ object Graph {
     def degreesOf(e: DataFrame) =
       e.select(col("u").as("c")).unionAll(e.select(col("v").as("c")))
         .groupBy(col("c")).agg(count(lit(1)).as("deg"))
-    var e = undirected(edges, src, dst).localCheckpoint()
+    var e = Cut(undirected(edges, src, dst))
     for (_ <- 1 to rounds) {
       val keep = degreesOf(e).filter(col("deg") >= k).select(col("c"))
-      e = e.join(keep.select(col("c").as("u")), Seq("u"))
+      e = Cut(e.join(keep.select(col("c").as("u")), Seq("u"))
         .join(keep.select(col("c").as("v")), Seq("v"))
-        .select(col("u"), col("v"))
-        .localCheckpoint()
+        .select(col("u"), col("v")))
     }
     // convergence observer (the no-silent-caps contract): if a further
     // round would STILL peel — some surviving endpoint sits below k —
@@ -506,18 +493,15 @@ object Graph {
     * one double division per value, no square roots — same replay
     * contract as [[pageRank]], fixed-round output pinned by spec.
     * Per round: two rank⋈edges shuffles, two map-side-combined
-    * aggregations, two broadcast one-row totals; frames
-    * localCheckpoint so the plan never deepens with `iters`. */
+    * aggregations, two broadcast one-row totals; each round is a
+    * [[Cut]] so the plan never deepens with `iters`. */
   def hits(edges: DataFrame, src: String = "src", dst: String = "dst",
            iters: Int = 8): DataFrame = {
     require(iters >= 1, s"need at least one iteration, got $iters")
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().localCheckpoint()
+    val e = Cut(directed(edges, src, dst))
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-    val init = nodes.withColumn("a", lit(1.0)).withColumn("h", lit(1.0))
-      .localCheckpoint()
+    val init = Cut(nodes.withColumn("a", lit(1.0)).withColumn("h", lit(1.0)))
     val res = (1 to iters).foldLeft(init) { (st, _) =>
       val aRaw = st.join(e, col("id") === col("src"))
         .groupBy(col("dst").as("id"))
@@ -531,14 +515,20 @@ object Graph {
         .groupBy(col("src").as("id"))
         .agg(sum(d30(col("a"))).cast("double").as("__hr"))
       val hTot = hRaw.agg(sum(d30(col("__hr"))).cast("double").as("__ht"))
-      aN.join(hRaw, Seq("id"), "left")
+      Cut(aN.join(hRaw, Seq("id"), "left")
         .crossJoin(broadcast(hTot))
         .select(col("id"), col("a"),
-          (coalesce(col("__hr"), lit(0.0)) / col("__ht")).as("h"))
-        .localCheckpoint()
+          (coalesce(col("__hr"), lit(0.0)) / col("__ht")).as("h")))
     }
     res.select(col("id"), col("a").as("authority"), col("h").as("hub"))
   }
+
+  /** Unique directed edge set (src, dst), null endpoints dropped —
+    * the multigraph collapse every directed op starts from. */
+  private def directed(edges: DataFrame, src: String, dst: String) =
+    edges.select(col(src).as("src"), col(dst).as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+      .distinct()
 
   /** Unique undirected edge set (u < v), self-loops dropped — shared
     * by [[triangles]] and [[adamicAdar]]. */
@@ -551,14 +541,12 @@ object Graph {
 
   private def pageRankImpl(edges: DataFrame, src: String, dst: String,
                            damping: Double, iters: Int): DataFrame = {
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().localCheckpoint()
+    val e = Cut(directed(edges, src, dst))
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
     val outdeg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("outdeg"))
     // left join: dangling nodes (in-edges only) carry a null outdeg
-    val nd = nodes.join(outdeg, Seq("id"), "left").localCheckpoint()
+    val nd = Cut(nodes.join(outdeg, Seq("id"), "left"))
     val n = nd.count()
     val r0 = nd.withColumn("pr", lit(1.0) / lit(n))
     val rFinal = (1 to iters).foldLeft(r0) { (rk, _) =>
@@ -570,11 +558,10 @@ object Graph {
         .select(col("dst").as("id"), (col("pr") / col("outdeg")).as("c"))
       val inflow = contrib.groupBy(col("id"))
         .agg(sum(d30(col("c"))).cast("double").as("inflow"))
-      nd.join(inflow, Seq("id"), "left").crossJoin(broadcast(dm))
+      Cut(nd.join(inflow, Seq("id"), "left").crossJoin(broadcast(dm))
         .select(col("id"), col("outdeg"),
           (lit(1 - damping) / lit(n) + lit(damping) *
-            (coalesce(col("inflow"), lit(0.0)) + col("dm") / lit(n))).as("pr"))
-        .localCheckpoint()
+            (coalesce(col("inflow"), lit(0.0)) + col("dm") / lit(n))).as("pr")))
     }
     rFinal.select(col("id"), col("pr"))
   }

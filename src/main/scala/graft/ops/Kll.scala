@@ -176,9 +176,9 @@ object Kll {
       s"quantiles must lie in (0, 1], got $ps")
     checkSketchFrame(ledger, keys)
     val withTot = cumulate(ledger, keys)
-    // ≤ k rows per group by construction — checkpointed because the
-    // quantile close reads it three times (two triangular sides + tot)
-    val sk = systematicKeep(withTot, keys, k).localCheckpoint()
+    // ≤ k rows per group by construction — cut because the quantile
+    // close reads it three times (two triangular sides + tot)
+    val sk = Cut(systematicKeep(withTot, keys, k))
     val q = quantilesByGroup(sk, keys, ps, k, probed = true)
     val exact = withTot
       .withColumn("p", explode(array(ps.map(lit): _*)))
@@ -218,23 +218,17 @@ object Kll {
   /** Merge unkeyed sketches built with the same k: weights add on the
     * value ledger, then one more compaction bounds the result back to
     * ≤ k rows (adding < 2·step_out ranks of error — see the error
-    * contract above). Shape-guarded like [[Kmv.merge]]: inputs are
-    * localCheckpointed (the probe is an eager action — a raw build
-    * lineage must not re-run per consumer) and a bounded limit(k+1)
-    * probe rejects frames larger than k. One-sided like every sketch
-    * guard here: a smaller-k frame fits the declared shape and merges
-    * with ITS coarser error — declared-k discipline is the caller's
-    * contract. For keyed/multiway merging feed the unioned partials
-    * to [[compactByGroup]] directly. */
+    * contract above). Shape-guarded like [[Kmv.merge]]
+    * ([[Kmv.cutSketch]]: cut, then a bounded limit(k+1) probe rejects
+    * frames larger than k; one-sided, a smaller-k frame merges with ITS
+    * coarser error). For keyed/multiway merging feed the unioned
+    * partials to [[compactByGroup]] directly. */
   def merge(k: Int, sketches: DataFrame*): DataFrame = {
     checkK(k)
     require(sketches.nonEmpty, "need at least one sketch to merge")
     val cut = sketches.map { sk =>
       checkSketchFrame(sk, Nil)
-      val c = sk.localCheckpoint()
-      require(c.limit(k + 1).count() <= k,
-        s"sketch frame has more than k=$k rows — built with a larger k?")
-      c
+      Kmv.cutSketch(sk, k)
     }
     compactByGroup(cut.reduce(_ unionByName _), Nil, k)
   }
@@ -251,10 +245,7 @@ object Kll {
     // message — and never pay the checkpoint before failing
     checkK(k)
     checkSketchFrame(sketch, Nil)
-    val sk = sketch.localCheckpoint()
-    require(sk.limit(k + 1).count() <= k,
-      s"sketch frame has more than k=$k rows — built with a larger k?")
-    quantilesByGroup(sk, Nil, ps, k, probed = true)
+    quantilesByGroup(Kmv.cutSketch(sketch, k), Nil, ps, k, probed = true)
   }
 
   /** Per-group [[quantiles]] over a keyed sketch frame. The contract
@@ -278,7 +269,7 @@ object Kll {
     checkSketchFrame(sketch, keys)
     val keyCols = keys.map(col)
     val sk = if (probed) sketch else {
-      val c = sketch.localCheckpoint()
+      val c = Cut(sketch)
       require(c.groupBy(keyCols: _*).count()
           .filter(col("count") > k).limit(1).count() == 0,
         s"some group has more than k=$k sketch rows — built with a larger k?")

@@ -62,36 +62,40 @@ object Kmv {
       .limit(k)
   }
 
+  /** [[Cut]] an unkeyed sketch frame, then reject it when it holds more
+    * than `k` rows — a bounded limit(k+1) probe, never a full count.
+    * The cut comes BEFORE the probe: the guard is an eager action, and
+    * probing a raw build lineage would re-run the full build once for
+    * the guard and again for every downstream consumer; after the cut
+    * the build runs exactly once and every read hits the ≤ k-row frame.
+    *
+    * The guard is one-sided: a frame built with a SMALLER k always fits
+    * the declared shape, and estimates over it silently carry the
+    * smaller k's error. Declared-k discipline (same k at build, merge
+    * and estimate) is the caller's contract; only the larger-shape
+    * direction can fail loudly. Shared by [[Kmv]] and [[Kll]]. */
+  private[ops] def cutSketch(sketch: DataFrame, k: Int): DataFrame = {
+    val c = Cut(sketch)
+    require(c.limit(k + 1).count() <= k,
+      s"sketch frame has more than k=$k rows — built with a larger k?")
+    c
+  }
+
   /** Merge sketches built with the same k: the k smallest of the
     * union of bottom-k sets equal the union's bottom-k (the sketch's
     * distributive property) — a ≤ Σk-row union + top-k, so per-slice
     * sketches from 1000 executors combine for free. The declared `k`
-    * also guards the shape: a frame larger than k rows was not built
-    * with this k and fails loudly (a bounded limit(k+1) probe, never a
-    * full count). */
+    * also guards the shape ([[cutSketch]]): a frame larger than k rows
+    * was not built with this k and fails loudly. [[jaccard]] reads each
+    * input ~3×, all from the cut. */
   def merge(k: Int, sketches: DataFrame*): DataFrame = {
     checkK(k)
     require(sketches.nonEmpty, "need at least one sketch to merge")
-    // localCheckpoint BEFORE the probe: the guard is an eager action,
-    // and probing a raw build lineage would re-run the full distinct +
-    // top-k scan once for the guard and again for every downstream
-    // consumer ([[jaccard]] reads each input ~3×) — the checkpoint
-    // makes the underlying build run exactly once, and every read
-    // after it (probe, union, semi-joins) hits the ≤ k-row cut.
-    // NOTE the guard is one-sided: a frame built with a SMALLER k
-    // always fits the declared shape and merges into a sketch whose
-    // effective k is the smaller one — estimates then carry the
-    // smaller k's error, silently. Declared-k discipline (same k at
-    // build, merge and estimate) is the caller's contract; only the
-    // larger-shape direction can fail loudly.
     val cut = sketches.map { sk =>
       require(sk.columns.toSeq == Seq("kmv_hash"),
         "expected a KMV sketch frame with exactly (kmv_hash), got: " +
           sk.columns.mkString(", "))
-      val c = sk.localCheckpoint()
-      require(c.limit(k + 1).count() <= k,
-        s"sketch frame has more than k=$k rows — built with a larger k?")
-      c
+      cutSketch(sk, k)
     }
     cut.reduce(_ unionByName _)
       .distinct()
@@ -115,9 +119,7 @@ object Kmv {
     * (the same one-sided caveat as merge: a smaller-k frame fits). */
   def estimate(sketch: DataFrame, k: Int): DataFrame = {
     checkK(k)
-    val sk = sketch.localCheckpoint()
-    require(sk.limit(k + 1).count() <= k,
-      s"sketch frame has more than k=$k rows — built with a larger k?")
+    val sk = cutSketch(sketch, k)
     val agged = sk.agg(count(lit(1)).as("n_hashes"),
       max(col("kmv_hash")).as("__hk"))
     agged.select(
@@ -141,15 +143,15 @@ object Kmv {
     *
     * Plan: ≤ k-row frames throughout — two left-semi joins onto L and
     * one aggregate; everything broadcastable by construction. Each
-    * input is localCheckpointed once up front (it feeds the merge AND
+    * input is [[Cut]] once up front (it feeds the merge AND
     * a semi-join — a raw build lineage would re-run its full scan per
     * consumer). Two EMPTY sketches yield NULL jaccard/intersection
     * (0/0 carries no evidence — the rocPoints one-class convention),
     * never a NaN artifact. */
   def jaccard(skA: DataFrame, skB: DataFrame, k: Int): DataFrame = {
     checkK(k)
-    val (a, b) = (skA.localCheckpoint(), skB.localCheckpoint())
-    val l = merge(k, a, b).localCheckpoint()
+    val (a, b) = (Cut(skA), Cut(skB))
+    val l = Cut(merge(k, a, b))
     val common = l
       .join(broadcast(a), Seq("kmv_hash"), "left_semi")
       .join(broadcast(b), Seq("kmv_hash"), "left_semi")

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the presence frame feeds four consumers (item counts,
   * basket total, support prune, pair join), so [[pairRules]] is EAGER
-  * — it materializes (basket, item) once (localCheckpoint, the
+  * — it materializes (basket, item) once ([[Cut]], the
   * [[Vocab.unigramLogProb]] contract) instead of re-deriving the
   * distinct from the raw fact per consumer. Pass 1 is one hash
   * exchange on item (map-side combined). The pair expansion is
@@ -124,7 +124,7 @@ object Market {
     val (itemCounts, nBaskets, inPlay) =
       frequentPresence(df, basket, item, minSupport, maxBasketItems)
     // four consumers (candidate gen + three count joins) — cut once
-    val fp = pairCounts(inPlay, minPairSupport).localCheckpoint()
+    val fp = Cut(pairCounts(inPlay, minPairSupport))
     val pb = inPlay.as("a").join(inPlay.as("b"),
         col("a.__basket") === col("b.__basket") &&
           col("a.__item") < col("b.__item"))
@@ -182,7 +182,7 @@ object Market {
   private[ops] def frequentPresence(df: DataFrame, basket: String, item: String,
                                minSupport: Long, maxBasketItems: Int)
       : (DataFrame, DataFrame, DataFrame) =
-    frequentPresenceOn(presence(df, basket, item).localCheckpoint(),
+    frequentPresenceOn(Cut(presence(df, basket, item)),
       minSupport, maxBasketItems)
 
   /** [[frequentPresence]] over an ALREADY-MATERIALIZED presence frame
@@ -202,7 +202,7 @@ object Market {
       .agg(count(lit(1)).as("__k"))
       .filter(col("__k") <= maxBasketItems)
       .select(col("__basket"))
-    (itemCounts, nBaskets, kept.join(sized, "__basket").localCheckpoint())
+    (itemCounts, nBaskets, Cut(kept.join(sized, "__basket")))
   }
 
   /** Per-basket unordered pair expansion + support prune: one row per

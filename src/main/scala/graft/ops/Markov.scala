@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: the state space is the DISTINCT key set (event types,
   * page classes — dozens), so each round is a join+aggregate over a
   * |states|²-bounded frame regardless of how many trillions of raw
-  * transitions were counted upstream; frames localCheckpoint so the
+  * transitions were counted upstream; each round is a [[Cut]] so the
   * plan never deepens with `iters`. */
 object Markov {
 
@@ -34,10 +34,9 @@ object Markov {
     require(iters >= 1, s"need iters >= 1, got $iters")
     val tot = transitions.groupBy(col(cur).as("__i"))
       .agg(sum(col(n)).as("__t"))
-    val p = transitions.join(tot, col(cur) === col("__i"))
+    val p = Cut(transitions.join(tot, col(cur) === col("__i"))
       .select(col(cur).as("__from"), col(nxt).as("__to"),
-        (col(n).cast("double") / col("__t").cast("double")).as("__p"))
-      .localCheckpoint()
+        (col(n).cast("double") / col("__t").cast("double")).as("__p")))
     val curs = p.select(col("__from")).distinct()
     val sinks = p.select(col("__to").as("__from")).distinct()
       .join(curs, Seq("__from"), "left_anti")
@@ -49,7 +48,7 @@ object Markov {
     require(sinkIds.isEmpty,
       "stationary: transition frame has sink states (appear as next but " +
         s"never as current) — mass would leak: ${sinkIds.mkString(", ")}")
-    val states = curs.select(col("__from").as("state")).localCheckpoint()
+    val states = Cut(curs.select(col("__from").as("state")))
     val nStates = states.count()
     var v = states.withColumn("prob", lit(1.0) / lit(nStates.toDouble))
     for (_ <- 1 to iters) {
@@ -57,9 +56,8 @@ object Markov {
         .groupBy(col("__to").as("state"))
         .agg(sum((col("prob") * col("__p")).cast("decimal(30,12)"))
           .cast("double").as("__np"))
-      v = states.join(stepped, Seq("state"), "left")
-        .select(col("state"), coalesce(col("__np"), lit(0.0)).as("prob"))
-        .localCheckpoint()
+      v = Cut(states.join(stepped, Seq("state"), "left")
+        .select(col("state"), coalesce(col("__np"), lit(0.0)).as("prob")))
     }
     v.select(col("state"), col("prob").cast("float").as("prob"))
   }

@@ -133,10 +133,9 @@ object Percentiles {
     // checkpointed because THREE consumers read it (median prefix sum,
     // group totals, deviation fold) and each would otherwise re-run
     // the full scan+exchange
-    val vc = df.filter(col(value).isNotNull)
+    val vc = Cut(df.filter(col(value).isNotNull)
       .groupBy((keyCols :+ col(value)): _*)
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("__c")))
     val tot = vc.groupBy(keyCols: _*).agg(sum(col("__c")).as("__n"))
     // rank-⌈n/2⌉ selection over a cumulated ledger: the shared close
     // for both passes (null-safe on the keys — a null key is a group)

@@ -57,7 +57,7 @@ object QualityModel {
     * to be broadcast by [[score]].
     *
     * NOTE the fitting aggregations run EAGERLY at call time
-    * (localCheckpoint, like [[Vocab.unigramLogProb]]): the weight table
+    * ([[Cut]], like [[Vocab.unigramLogProb]]): the weight table
     * feeds both the scalar pass and the scoring join, and without the
     * cut the explode→agg chain would execute twice. Consequence for
     * plan auditing: a downstream plan (e.g. `text_quality_nb`'s budget
@@ -80,15 +80,14 @@ object QualityModel {
       .filter(length(col("token")) > 0)
       .groupBy(col(id), col("__pos"), col("token"))
       .agg(count(lit(1)).as("tf"))
-    val vocab = docTf.groupBy(col("token"))
+    // the scoring join and the scalar pass both consume this; cut the
+    // explode+agg lineage once instead of running it twice
+    val vocab = Cut(docTf.groupBy(col("token"))
       .agg(
         count(lit(1)).as("n_docs"),
         sum(when(col("__pos"), col("tf")).otherwise(lit(0L))).as("tf_pos"),
         sum(when(!col("__pos"), col("tf")).otherwise(lit(0L))).as("tf_neg"))
-      .filter(col("n_docs") >= minDf)
-      // the scoring join and the scalar pass both consume this; cut the
-      // explode+agg lineage once instead of running it twice
-      .localCheckpoint()
+      .filter(col("n_docs") >= minDf))
     // class totals + vocab size: one scalar row, broadcast to every task
     val scal = vocab.agg(
       count(lit(1)).as("__v"),

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * Mechanics (the classic two-phase rank):
   *   1. `repartitionByRange` on the order columns — a range exchange
   *      whose sampled boundaries affect only balance, never the result
-  *      — then `localCheckpoint()` so both passes below see the SAME
+  *      — then a [[Cut]] so both passes below see the SAME
   *      partitioning (range boundaries are sampled, hence otherwise
   *      nondeterministic across re-evaluations);
   *   2. per-partition row counts (one map-side-combined agg to ≤P
@@ -46,7 +46,7 @@ object Ranking {
     * (pid, count, offset) ledger. P = current shuffle parallelism. */
   private def rangedWithOffsets(df: DataFrame, order: Seq[Column])
       : (DataFrame, DataFrame, DataFrame) = {
-    val ranged = df.repartitionByRange(order: _*).localCheckpoint()
+    val ranged = Cut(df.repartitionByRange(order: _*))
       .withColumn("__pid", spark_partition_id().cast("long"))
     val counts = ranged.groupBy(col("__pid")).agg(count(lit(1)).as("__c"))
     // offsets via a triangular self-join over ≤P ledger rows (P = the
@@ -129,7 +129,7 @@ object Ranking {
       s"duplicate output columns across specs: $outs")
     outs.foreach(o => require(!df.columns.contains(o),
       s"output column '$o' already exists on the input — rename first"))
-    val base = df.localCheckpoint()
+    val base = Cut(df)
     specs.foldLeft(base) { case (acc, (order, k, out)) =>
       val narrow = base.select((key ++ order).distinct.map(col): _*)
       val scored = withGlobalNtile(narrow, order.map(col), k, out)
@@ -173,8 +173,8 @@ object Ranking {
     checkCols(df, cumeOut)
     val oc = order.map(col)
     val nonNull = df.filter(oc.map(_.isNotNull).reduce(_ && _))
-    val ledger = nonNull.groupBy(oc: _*).agg(count(lit(1)).as("__c"))
-      .repartitionByRange(oc: _*).localCheckpoint()
+    val ledger = Cut(nonNull.groupBy(oc: _*).agg(count(lit(1)).as("__c"))
+      .repartitionByRange(oc: _*))
       .withColumn("__pid", spark_partition_id().cast("long"))
     val parts = ledger.groupBy(col("__pid"))
       .agg(sum(col("__c")).as("__pc"))
@@ -220,8 +220,8 @@ object Ranking {
     checkCols(df, denseOut)
     val oc = order.map(col)
     val nonNull = df.filter(oc.map(_.isNotNull).reduce(_ && _))
-    val ledger = nonNull.groupBy(oc: _*).agg(count(lit(1)).as("__c"))
-      .repartitionByRange(oc: _*).localCheckpoint()
+    val ledger = Cut(nonNull.groupBy(oc: _*).agg(count(lit(1)).as("__c"))
+      .repartitionByRange(oc: _*))
       .withColumn("__pid", spark_partition_id().cast("long"))
     val parts = ledger.groupBy(col("__pid"))
       .agg(sum(col("__c")).as("__pc"), count(lit(1)).as("__pn"))
@@ -255,7 +255,7 @@ object Ranking {
     * stalls at 100×.
     *
     * Mechanics (the [[withGlobalPercentiles]] ledger machinery,
-    * generalized): range exchange on (keys ∪ order) + `localCheckpoint`
+    * generalized): range exchange on (keys ∪ order) + [[Cut]]
     * (sampled boundaries affect only balance, and both passes must see
     * the SAME partitioning), per-partition running sums under a
     * (__pid ∪ keys)-partitioned window — parallel — plus partition
@@ -286,7 +286,7 @@ object Ranking {
     require(working.isEmpty, "withRunningTotals appends working columns " +
       s"__pl*/__pc*/__poff* — the input already has: ${working.mkString(", ")}")
     val keyCols = keys.map(col)
-    val ranged = df.repartitionByRange((keyCols ++ order): _*).localCheckpoint()
+    val ranged = Cut(df.repartitionByRange((keyCols ++ order): _*))
       .withColumn("__pid", spark_partition_id().cast("long"))
     val pcAggs = sums.zipWithIndex.map { case ((in, _), i) =>
       sum(col(in)).as(s"__pc$i")

@@ -89,7 +89,7 @@ object Recommend {
     * level. Per-item window over the catalog-sized sim frame — never
     * touches the fact table.
     *
-    * The input is localCheckpointed HERE because [[directional]]
+    * The input is [[Cut]] HERE because [[directional]]
     * intrinsically scans it twice (one union branch per orientation):
     * a caller passing a raw [[itemSims]] lineage would otherwise pay
     * the whole Apriori chain twice for one observer read. Idempotent
@@ -100,7 +100,7 @@ object Recommend {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__i"))
       .orderBy(col("cosine").desc, col("__j"))
-    directional(sims.localCheckpoint())
+    directional(Cut(sims))
       .withColumn("__sr", row_number().over(w))
       .filter(col("__sr") > maxSimilarPerItem)
       .groupBy(col("__i").as("item"))
@@ -144,16 +144,16 @@ object Recommend {
     * presence frame (serves both the similarity build — via
     * [[itemSimsOn]], which consumes it as-is instead of re-running
     * distinct+checkpoint on it — and the seen-set) and the item-item
-    * sims frame, each localCheckpointed. Public so audits that score
+    * sims frame, each a [[Cut]]. Public so audits that score
     * the SAME graph more than once (the full-vs-truncated recall
     * audit, rec_topn_recall) pay the Apriori chain — the dominant cost
     * — exactly once and feed every [[scoreTopN]] pass from the cut. */
   def presenceAndSims(df: DataFrame, user: String, item: String,
                       minUsers: Long, minPairUsers: Long,
                       maxUserItems: Int = 10000): (DataFrame, DataFrame) = {
-    val pres = Market.presence(df, user, item).localCheckpoint()
-    val sims = itemSimsOn(pres, minUsers, minPairUsers, maxUserItems)
-      .localCheckpoint() // feeds both join orientations
+    val pres = Cut(Market.presence(df, user, item))
+    // feeds both join orientations
+    val sims = Cut(itemSimsOn(pres, minUsers, minPairUsers, maxUserItems))
     (pres, sims)
   }
 
@@ -178,12 +178,11 @@ object Recommend {
     }
     // seen-set anti-join BEFORE the aggregation: on a dense catalog
     // most candidate rows point at already-seen items (exclusion and
-    // summation commute, but aggregating first was MEASURED 2× slower:
-    // the early cut does real work). The seen side is HASH-built, not
+    // summation commute, and aggregating first runs 2× slower: the
+    // early exclusion does real work). The seen side is HASH-built, not
     // sort-merged: the streamed side is the candidate expansion
     // (|pres| × sim fan-out — strictly the larger side), and an SMJ
-    // pays a full sort of it, measured +3 s at sf0.1 (interleaved A/C:
-    // med 7.0 → 4.1 s; both in OPTIMIZATION_r19.md §1). The build side
+    // pays a full sort of it (7.0 s against 4.1 s at sf0.1). The build side
     // is the DISTINCT presence frame — one row per (user, item),
     // |pres|/R rows per reducer with no per-key skew, so the
     // per-partition hash table is bounded the same way the SMJ sort

@@ -36,11 +36,10 @@ object Retrieval {
                id: String = "doc_id", text: String = "text",
                queryId: String = "query_id", queryText: String = "qtext",
                excludeSelf: Boolean = false): DataFrame = {
-    // NOTE (r18): rebalancing the corpus before this explode was tried
-    // and MEASURED SLOWER at sf0.1 (text_bm25_topk 1.34 → 2.51 s quiet
-    // box): the ~100-token fan-out per row is too thin to repay the
-    // exchange + stage barrier, unlike the shingle+distinct derivation
-    // in coocEdges where the same rebalance wins 1.5 s
+    // no rebalance before this explode: the ~100-token fan-out per row
+    // is too thin to repay an exchange + stage barrier (a rebalanced
+    // text_bm25_topk ran 1.34 → 2.51 s at sf0.1), unlike the
+    // shingle+distinct derivation in coocEdges
     val toks = corpus
       .select(col(id), explode(TextAnalysis.tokens(col(text))).as("token"))
       .filter(length(col("token")) > 0)
@@ -185,8 +184,8 @@ object Retrieval {
     * join is |shortlist|·k per query by construction, so the op scales
     * with the shortlist dial, never the corpus (run the shortlist
     * through the salted top-k machinery first at 100 TB). k driver
-    * rounds, each one bounded join + argmax window, localCheckpoint'd
-    * like the other fixed-iteration ops; every argmax is deterministic
+    * rounds, each one bounded join + argmax window, [[Cut]] like the
+    * other fixed-iteration ops; every argmax is deterministic
     * (score desc, id asc), so the greedy trajectory — not just the
     * final set — is engine-replayable. Zero-norm vectors are rejected
     * loudly: their null cosine would make the argmax ordering
@@ -196,21 +195,19 @@ object Retrieval {
                    vec: String = "cv"): DataFrame = {
     require(k >= 1, s"need at least one pick, got $k")
     require(lambda > 0 && lambda <= 1, s"lambda must be in (0,1], got $lambda")
-    val cand = candidates.select(col("query_id"), col(id),
+    val cand = Cut(candidates.select(col("query_id"), col(id),
         col(rel).cast("double").as("__rel"), col(vec).as("__v"))
       .where(assert_true(Similarity.norm(col("__v")) > 0,
-        lit("mmrDiversify: zero-norm candidate vector")).isNull)
-      .localCheckpoint()
+        lit("mmrDiversify: zero-norm candidate vector")).isNull))
     def pickTop(scored: DataFrame, score: Column): DataFrame = {
       val w = Window.partitionBy(col("query_id")).orderBy(score.desc, col(id))
       scored.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn")
     }
-    val s1 = pickTop(cand, col("__rel")).withColumn("mmr_rank", lit(1L))
-      .localCheckpoint()
+    val s1 = Cut(pickTop(cand, col("__rel")).withColumn("mmr_rank", lit(1L)))
     val (selected, _) = (2 to k).foldLeft(
-      (s1, cand.join(s1.select(col("query_id"), col(id)),
-        Seq("query_id", id), "left_anti").localCheckpoint())) {
+      (s1, Cut(cand.join(s1.select(col("query_id"), col(id)),
+        Seq("query_id", id), "left_anti")))) {
       case ((sel, rem), i) =>
         val selSide = sel.select(col("query_id"), col("__v").as("__sv"))
         val msim = rem.select(col("query_id"), col(id), col("__v"))
@@ -225,13 +222,12 @@ object Retrieval {
         // it, and checkpointing them instead re-ran the scoring once
         // per consumer (2× per round); the union of ≤k cut pieces and
         // the anti-join over cuts carry no lineage worth truncating
-        val next = pickTop(scored, col("__score"))
+        val next = Cut(pickTop(scored, col("__score"))
           .withColumn("mmr_rank", lit(i.toLong))
-          .select(sel.columns.map(col): _*)
-          .localCheckpoint()
+          .select(sel.columns.map(col): _*))
         (sel.union(next),
-          rem.join(next.select(col("query_id"), col(id)),
-            Seq("query_id", id), "left_anti").localCheckpoint())
+          Cut(rem.join(next.select(col("query_id"), col(id)),
+            Seq("query_id", id), "left_anti")))
     }
     selected.select(col("query_id"), col(id),
       col("__rel").as(rel), col("mmr_rank"))

@@ -242,7 +242,7 @@ object Similarity {
     *
     * Scale shape: the pair scoring reuses [[queryProductJoin]] (blocked
     * past the broadcast cap); everything after operates on the k·|n|
-    * ranked frame, localCheckpointed because three branches reuse it.
+    * ranked frame, [[Cut]] because three branches reuse it.
     * Brute-force pairing is the EXACT baseline — at 100 TB use
     * [[lofOutliersIvf]], which swaps the scorer for the [[ivfTopK]]
     * shortlist and keeps THIS tail ([[lofFromKnn]]) verbatim. */
@@ -255,9 +255,9 @@ object Similarity {
       .withColumn("dist", lit(1.0) - cosine(col("qv"), col("cv")))
       .select(col("query_id").as("p"), col("neighbor_id").as("o"), col("dist"))
     val w = Window.partitionBy(col("p")).orderBy(col("dist"), col("o"))
-    val ranked = scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .localCheckpoint() // three consumers: N_k, d_k, the lrd joins
+    // three consumers: N_k, d_k, the lrd joins
+    val ranked = Cut(scored.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k))
     lofFromKnn(ranked, id, k)
   }
 
@@ -346,10 +346,10 @@ object Similarity {
   private def lofShortlistTail(df: DataFrame, id: String, k: Int,
                                nprobe: Int, topk: DataFrame): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
-    val knn = topk
+    // cut: the starvation probe + the tail's three branches read it
+    val knn = Cut(topk
       .select(col("query_id").as("p"), col("neighbor_id").as("o"),
-        (lit(1.0) - col("cosine")).as("dist"), col("rank").as("rn"))
-      .localCheckpoint() // starvation probe + the tail's three branches
+        (lit(1.0) - col("cosine")).as("dist"), col("rank").as("rn")))
     val starved =
       knn.groupBy(col("p")).agg(max(col("rn")).as("__m"))
         .filter(col("__m") < k).limit(1).count() > 0
@@ -395,12 +395,11 @@ object Similarity {
   def kCenterCoreset(df: DataFrame, id: String, vec: String,
                      k: Int): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
-    val pts = df.select(col(id).as("__pid"), col(vec).as("__pv"))
-      .localCheckpoint()
+    val pts = Cut(df.select(col(id).as("__pid"), col(vec).as("__pv")))
     val seed = pts.orderBy(col("__pid")).limit(1)
       .select(col("__pid"), col("__pv"), lit(1L).as("pick_order"),
         lit(null).cast("double").as("__radius"))
-    var centers = seed.localCheckpoint()
+    var centers = Cut(seed)
     for (r <- 2 to k) {
       val scoredMin = pts
         .join(broadcast(centers.select(col("__pid").as("__cid"),
@@ -413,7 +412,7 @@ object Similarity {
         .orderBy(col("__mind").desc, col("__pid")).limit(1)
         .select(col("__pid"), col("__pv2").as("__pv"),
           lit(r.toLong).as("pick_order"), col("__mind").as("__radius"))
-      centers = centers.unionByName(next).localCheckpoint()
+      centers = Cut(centers.unionByName(next))
     }
     centers.select(col("__pid").as(id), col("pick_order"),
       col("__radius").cast("float").as("radius"))
@@ -712,11 +711,10 @@ object Similarity {
     // variant it shortlists for, 5.4 → 3.8 s median with it; an UNGATED
     // build spread cost sim_ivf_data_topk +0.55 s, the regression the
     // flag guards).
-    val indexed =
+    val indexed = Cut(
       ivfAssignWith(if (spreadPostings) Skew.spread(candidates) else candidates,
         vec, cents)
-      .select(col(id).as("neighbor_id"), col(vec).as("cv"), col("centroid_id"))
-      .localCheckpoint()
+      .select(col(id).as("neighbor_id"), col(vec).as("cv"), col("centroid_id")))
     // the checkpoint already carries the chosen layout — no re-spread
     ivfProbe(indexed, queries, id, vec, cents, nprobe, k)
   }

@@ -47,17 +47,16 @@ object Skyline {
     // rounding-blurred bucket EDGE can only move a point to an adjacent
     // bucket, never reorder two points — the guard stays sound at any
     // axis magnitude (precision loss degrades prune selectivity only).
-    val bucketed = pts.crossJoin(broadcast(bounds))
+    // feeds BOTH the per-bucket guard and the survivor filter: cut once
+    // so the grouped candidate scan — the only data-sized stage — runs
+    // once
+    val bucketed = Cut(pts.crossJoin(broadcast(bounds))
       .withColumn("bkt",
         when(col("hmax") === col("hmin"), lit(0)).otherwise(
           least(lit(buckets - 1),
             floor((col("h") - col("hmin")).cast("double") * buckets /
               (col("hmax") - col("hmin")).cast("double")).cast("int"))))
-      .select(col("h"), col("l"), col("bkt"))
-      // feeds BOTH the per-bucket guard and the survivor filter:
-      // materialize once (the Graph-op localCheckpoint pattern) so the
-      // grouped candidate scan — the only data-sized stage — runs once
-      .localCheckpoint()
+      .select(col("h"), col("l"), col("bkt")))
     // min-lo per bucket, then running min over STRICTLY higher buckets
     val perBucket = bucketed.groupBy(col("bkt")).agg(min(col("l")).as("bl"))
     val wb = Window.orderBy(col("bkt").desc).rowsBetween(Window.unboundedPreceding, -1)

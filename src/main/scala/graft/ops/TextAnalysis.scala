@@ -275,9 +275,8 @@ object TextAnalysis {
                    k: Int = 3): DataFrame = {
     require(nStopwords >= 1, s"need at least one stopword, got $nStopwords")
     require(k >= 1, s"need k >= 1, got $k")
-    // NOTE (r18): a Skew.spread here was tried and measured slower at
-    // sf0.1 (+0.6 s quiet box) — the tokenization fan-out is too thin
-    // to repay the exchange; see Retrieval.bm25TopK's note
+    // no Skew.spread: the tokenization fan-out is too thin to repay the
+    // exchange (+0.6 s at sf0.1 with it); see Retrieval.bm25TopK
     val tok = df
       .select(col(id), posexplode(tokens(col(text))).as(Seq("pos", "tok")))
       .filter(length(col("tok")) > 0)
@@ -290,12 +289,11 @@ object TextAnalysis {
     // phrase scores): EAGER, like every multi-consumer op here —
     // re-deriving the corpus token explode per consumer is the rescan
     // this avoids
-    val isl = tok.join(broadcast(stops), Seq("tok"), "left")
+    val isl = Cut(tok.join(broadcast(stops), Seq("tok"), "left")
       .withColumn("__island",
         sum(when(col("__stop"), 1L).otherwise(0L)).over(wDoc))
       .filter(col("__stop").isNull)
-      .select(col(id), col("__island"), col("pos"), col("tok"))
-      .localCheckpoint()
+      .select(col(id), col("__island"), col("pos"), col("tok")))
     val phrases = isl.groupBy(col(id), col("__island"))
       .agg(
         concat_ws(" ", transform(

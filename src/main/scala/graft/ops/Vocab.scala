@@ -74,7 +74,7 @@ object Vocab {
     *
     * Scale shape: ONE pass over the corpus token stream, collapsed
     * map-side into per-(doc, token) term frequencies and materialized
-    * (localCheckpoint — this method is EAGER, like [[tfIdfCosineTopK]]):
+    * ([[Cut]] — this method is EAGER, like [[tfIdfCosineTopK]]):
     * the vocabulary counts, the grand total, and the scoring join all
     * derive from that tf frame, never rescanning the corpus. The vocab
     * join shuffles tf on token hash (linear, no hot key — a heavy
@@ -90,9 +90,8 @@ object Vocab {
     // scale-reduction a (30,12) × bigint product triggers (which would
     // round to 6 places and break bit-equality with the oracle)
     import TextAnalysis.d12
-    val tf = tokenRows(df, id, text)
-      .groupBy(col(id), col("token")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+    val tf = Cut(tokenRows(df, id, text)
+      .groupBy(col(id), col("token")).agg(count(lit(1)).as("tf")))
     val counts = tf.groupBy(col("token")).agg(sum(col("tf")).as("n"))
     val total = counts.agg(sum(col("n")).as("total"))
     tf.join(counts, "token")
@@ -129,9 +128,8 @@ object Vocab {
                             id: String = "doc_id",
                             text: String = "text"): DataFrame = {
     import TextAnalysis.d12
-    val tf = tokenRows(score, id, text)
-      .groupBy(col(id), col("token")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+    val tf = Cut(tokenRows(score, id, text)
+      .groupBy(col(id), col("token")).agg(count(lit(1)).as("tf")))
     val counts = tokenRows(model, id, text)
       .groupBy(col("token")).agg(count(lit(1)).as("n"))
     val stats = counts.agg(sum(col("n")).as("total"), count(lit(1)).as("v"))
@@ -197,10 +195,9 @@ object Vocab {
       .filter(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("word")).limit(maxWords)
-    var state = words
+    var state = Cut(words
       .withColumn("syms", charSyms(col("word")))
-      .select(col("word"), col("freq"), col("syms"))
-      .localCheckpoint()
+      .select(col("word"), col("freq"), col("syms")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var i = 0
     var exhausted = false
@@ -218,8 +215,7 @@ object Vocab {
       else {
         val (l, r, c) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         merges += (((i + 1).toLong, l, r, c))
-        state = state.withColumn("syms", mergeFold(col("syms"), l, r))
-          .localCheckpoint()
+        state = Cut(state.withColumn("syms", mergeFold(col("syms"), l, r)))
         i += 1
       }
     }
@@ -313,12 +309,11 @@ object Vocab {
     // materialize the weighted postings ONCE: they feed four plan
     // branches (norms ×2 via doc_a/doc_b, self-join ×2) and without a
     // cut Spark re-runs the whole scan→tf→df chain for each branch
-    val wts = tf.join(dfreq.filter(col("df_t") <= maxDf), "token")
+    val wts = Cut(tf.join(dfreq.filter(col("df_t") <= maxDf), "token")
       .crossJoin(broadcast(nDocs))
       .withColumn("w", col("tf").cast("double") *
         sqrt(col("n_docs").cast("double") / col("df_t").cast("double")))
-      .select(col(id), col("token"), col("df_t"), col("w"))
-      .localCheckpoint()
+      .select(col(id), col("token"), col("df_t"), col("w")))
     val norms = wts.groupBy(col(id))
       .agg(sqrt(sum(d12(col("w") * col("w"))).cast("double")).as("norm"))
     val posts = wts.filter(col("df_t") >= 2)
@@ -356,7 +351,7 @@ object Vocab {
     * double op on exact integer inputs, per-doc sums quantize through
     * DECIMAL(20,12), the mean surfaces FLOAT. Same scale shape too: the
     * bigram occurrence stream is materialized once (EAGER — a
-    * localCheckpoint runs at call time) and feeds the corpus counts,
+    * [[Cut]] runs at call time) and feeds the corpus counts,
     * context counts, and scoring join; V rides in as one broadcast row.
     * Documents with fewer than two tokens carry no bigrams and drop
     * out, exactly as empty docs drop from the unigram scorer. */
@@ -372,9 +367,8 @@ object Vocab {
           slice(clean, lit(2), size(clean) - 1),
           (a, b) => struct(a.as("ctx"), concat(a, lit(" "), b).as("bg"))))
       .otherwise(array().cast("array<struct<ctx:string,bg:string>>"))
-    val occ = df.select(col(id), explode(pairs).as("p"))
-      .select(col(id), col("p.ctx").as("ctx"), col("p.bg").as("bg"))
-      .localCheckpoint()
+    val occ = Cut(df.select(col(id), explode(pairs).as("p"))
+      .select(col(id), col("p.ctx").as("ctx"), col("p.bg").as("bg")))
     val nab = occ.groupBy(col("bg")).agg(count(lit(1)).as("nab"))
     val na = occ.groupBy(col("ctx")).agg(count(lit(1)).as("na"))
     val v = df.select(explode(TextAnalysis.tokens(col(text))).as("token"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.{Anomaly, Cdc, CrossSeries, Eval, Experiment, Features, FuzzyJoin, Indicators, Intervals, Market, Markov, Moments, Percentiles, Quality, Ranking, Recommend, Reconcile, Resample, Skyline}
+import graft.ops.{Anomaly, Cdc, Cut, CrossSeries, Eval, Experiment, Features, FuzzyJoin, Indicators, Intervals, Market, Markov, Moments, Percentiles, Quality, Ranking, Recommend, Reconcile, Resample, Skyline}
 
 /** OLAP / warehouse-analytics extensions: grouping sets, event-path
   * transitions, exact nearest-rank quantiles, batch CDC apply, and
@@ -966,15 +966,15 @@ object AnalyticsQueries {
     // order date (this lake carries no receipt/commit dates). Exact:
     // date arithmetic is integer days; counts are exact.
     "j21_waiting_supplier" -> ((s, dir) => {
-      val base = Tables.lineitem(s, dir)
+      // cut: three consumers (late picks, exists, anti)
+      val base = Cut(Tables.lineitem(s, dir)
         .join(Tables.orders(s, dir)
             .filter(col("o_orderstatus") === "F")
             .select(col("o_orderkey"), col("o_orderdate")),
           col("l_orderkey") === col("o_orderkey"))
         .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"),
           (col("l_shipdate").cast("date") >
-            date_add(col("o_orderdate").cast("date"), 60)).as("late"))
-        .localCheckpoint() // three consumers: late picks, exists, anti
+            date_add(col("o_orderdate").cast("date"), 60)).as("late")))
       val lateSupp = base.filter(col("late"))
         .select(col("ok"), col("sk")).distinct()
       val others = base.select(col("ok").as("ok2"), col("sk").as("sk2"),
@@ -1249,13 +1249,12 @@ object AnalyticsQueries {
       // the bucketed frame feeds THREE consumers (train mean, cal
       // residuals, test audit) — cut once (the agg_mad ledger
       // pattern), narrowed to the three columns they read
-      val ev = Tables.events(s, dir)
+      val ev = Cut(Tables.events(s, dir)
         .filter(col("value").isNotNull && col("event_type").isNotNull &&
           col("event_id").isNotNull)
         .select(col("event_type"), col("value"),
           graft.ops.Sampling.hashBucket(col("event_id"), 100,
-            tag = "split:").as("__b"))
-        .localCheckpoint()
+            tag = "split:").as("__b")))
       val model = ev.filter(col("__b") < 50).groupBy(col("event_type"))
         .agg((sum(col("value").cast("decimal(18,2)")).cast("double") /
           count(lit(1)).cast("double")).as("__yhat"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.{CountMin, Hll, Kll, Percentiles, Reconcile, Reshape}
+import graft.ops.{CountMin, Cut, Hll, Kll, Percentiles, Reconcile, Reshape}
 import graft.pipeline.StockPipeline
 import graft.sources.{LakeReader, LakeWriter, VersionedLake}
 import graft.streaming.EventStreams
@@ -174,9 +174,9 @@ object PipelineQueries {
     // read); compact re-commits the live state into ONE owner and the
     // read-back must be row-identical — any compaction loss or
     // duplication flips the hash. Owner collapse + vacuum reclamation
-    // are pinned by VersionedLakeSpec. (Was shadowed by the partitioned-
-    // lake compaction entry of the same name until round 12 — duplicate
-    // Map keys resolve last-wins, silently.)
+    // are pinned by VersionedLakeSpec. The key must stay unique across
+    // the registry (Map literals resolve duplicates last-wins, silently);
+    // QueryRegistrySpec fails on a duplicate.
     "lake_vcompact_roundtrip" -> ((s, dir) => {
       val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"),
         col("o_totalprice"), col("o_orderpriority"))
@@ -277,7 +277,7 @@ object PipelineQueries {
             else delta
           // state is session-granular (tiny): cut lineage eagerly so the
           // overwrite never reads under its own write
-          merged.localCheckpoint(eager = true)
+          Cut(merged)
             .write.mode("overwrite").parquet(statePath); ()
         }
         .option("checkpointLocation", s"$tmp/ckpt")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.{Dedup, Features, Graph, Merge, Multimodal, Quality, QualityModel, Ranking, Retrieval, Sampling, TextAnalysis}
+import graft.ops.{Cut, Dedup, Features, Graph, Merge, Multimodal, Quality, QualityModel, Ranking, Retrieval, Sampling, TextAnalysis}
 
 /** LLM-training-data text pipeline over the `documents` table:
   * dedup (exact / MinHash-LSH / SimHash / Jaccard), token statistics,
@@ -37,12 +37,11 @@ object TextQueries {
   private[graft] def coocEdges(s: SparkSession, dir: String): DataFrame = {
     // THREE consumers scan sh (the rare-gram groupBy and both sides of
     // the rt self-join) and each would re-run the tokenize + explode +
-    // distinct chain from the documents scan — cut once (interleaved
-    // A/B, OPTIMIZATION_r19.md §2: med 3.17 → 2.40 s, min 1.85 → 1.26).
-    // Cutting rt as well was MEASURED SLOWER (med 2.63): a 2-consumer
-    // frame with one cheap join of lineage atop the cut — the
-    // Market.itemCounts lesson holds here too.
-    val sh = coocShingles(s, dir).localCheckpoint()
+    // distinct chain from the documents scan — cut once. rt stays
+    // uncut: a 2-consumer frame with one cheap join of lineage atop the
+    // cut costs less to recompute than to materialize (the
+    // Market.itemCounts rule).
+    val sh = Cut(coocShingles(s, dir))
     val rare = sh.groupBy(col("gram")).agg(count(lit(1)).as("c"))
       .filter(col("c").between(2, 4)).select(col("gram"))
     val rt = sh.join(rare, "gram")
@@ -262,8 +261,8 @@ object TextQueries {
     "graph_edges_append" -> ((s, dir) => {
       // the edge frame feeds BOTH the base write and the delta append —
       // cut the (tiny) final frame instead of re-running the self-join
-      // close per consumer (OPTIMIZATION_r19.md §2 phase 2: med 1.54 → 1.32 s)
-      val all = coocEdges(s, dir).localCheckpoint()
+      // close per consumer
+      val all = Cut(coocEdges(s, dir))
       val tmp = QuerySql.tempDir("graft_edgeappend")
       Graph.saveEdges(all.filter(col("src") <= 450 && col("dst") <= 450),
         "src", "dst", tmp)
@@ -416,8 +415,7 @@ object TextQueries {
       val docs = Tables.documents(s, dir).filter(col("doc_id") < 300)
       val cand = Dedup.jaccardPairs(docs, "doc_id", "text", threshold = 0.0)
         .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
-      val dups = Dedup.verifyJaccard(docs, cand, "doc_id", "text",
-          materialize = true)
+      val dups = Dedup.verifyJaccard(docs, cand, "doc_id", "text")
         .filter(col("jaccard") >= 0.6)
         .select(col("id_b").as("doc_id")).distinct()
       docs.join(dups, Seq("doc_id"), "left_anti")

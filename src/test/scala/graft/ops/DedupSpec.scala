@@ -22,8 +22,7 @@ class DedupSpec extends SparkSpec {
                           threshold: Double): DataFrame = {
     val candidates = Dedup.minhashCandidatePairs(df, id, text, shingleSize = 3)
       .select(col("id_a"), col("id_b"))
-    val dups = Dedup.verifyJaccard(df, candidates, id, text, shingleSize = 3,
-        materialize = true)
+    val dups = Dedup.verifyJaccard(df, candidates, id, text, shingleSize = 3)
       .filter(col("jaccard") >= threshold)
       .select(col("id_b").as(id)).distinct()
     df.join(dups, Seq(id), "left_anti")
@@ -299,10 +298,9 @@ class DedupSpec extends SparkSpec {
       portable = true).count() shouldBe 1L
   }
 
-  test("reliable = true checkpoints to the dir and matches the local-mode answer") {
+  test("a checkpoint dir makes Dedup's cuts reliable, with the local-mode answer") {
     // same inputs through both lineage-cut modes must agree exactly —
-    // reliable checkpointing is a fault-tolerance knob, never a
-    // semantics knob
+    // the checkpoint dir decides fault tolerance, never semantics
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
     val hist = Seq(
       (10L, "the quick brown fox jumps over the lazy dog near the river bank today"))
@@ -311,20 +309,17 @@ class DedupSpec extends SparkSpec {
       (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
       (3L, "a totally novel document about cooking pasta with garlic and olive oil"))
       .toDF("doc_id", "text")
-    // without a checkpoint dir the reliable mode fails loudly up front
     spark.sparkContext.getCheckpointDir shouldBe empty
-    an[IllegalArgumentException] should be thrownBy
-      Dedup.duplicateClusters(chain, reliable = true)
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt")
     try {
       spark.sparkContext.setCheckpointDir(ckpt.toString)
-      Dedup.duplicateClusters(chain, reliable = true).orderBy("id").rows
+      Dedup.duplicateClusters(chain).orderBy("id").rows
         .map(r => (r(0), r(1))) shouldBe
         Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L))
       Dedup.dedupIncremental(fresh, hist, "doc_id", "text",
-          threshold = 0.5, portable = true, reliable = true)
+          threshold = 0.5, portable = true)
         .select("doc_id").rows.map(_.head) shouldBe Seq(3L)
-      // the reliable cut actually wrote RDD checkpoint data to the dir
+      // the cut actually wrote RDD checkpoint data to the dir
       val wrote = java.nio.file.Files.walk(ckpt).count() > 1
       assert(wrote, s"no checkpoint data written under $ckpt")
     } finally {
