@@ -3,8 +3,11 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, GlobalLimit, LocalLimit,
-  LogicalPlan, Project, Repartition, Sort, Window, WindowGroupLimit}
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+import org.apache.spark.sql.catalyst.plans.Cross
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, GlobalLimit, HintInfo, Join,
+  JoinHint, LocalLimit, LogicalPlan, Project, Repartition, SHUFFLE_HASH, Sort, Window,
+  WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreePattern.{SORT, WINDOW}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -19,13 +22,13 @@ import org.apache.spark.sql.functions.call_function
   * functions are available to SQL (`SELECT dot_product(a, b)`) and to the
   * Column API via [[GraftFunctions.dotProduct]] / [[GraftFunctions.cosineSim]].
   * The declarative forms also install the optimizer rules
-  * [[EliminateSortBelowWindow]] and [[CoalesceSmallSingleScan]].
+  * [[EliminateSortBelowWindow]] and [[CoalesceSmallScans]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.registry.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => EliminateSortBelowWindow)
-    ext.injectOptimizerRule(_ => CoalesceSmallSingleScan)
+    ext.injectPreCBORule(_ => CoalesceSmallScans)
   }
 }
 
@@ -58,44 +61,57 @@ object EliminateSortBelowWindow extends Rule[LogicalPlan] {
   }
 }
 
-/** Runs a small single-table query in one partition. When a batch
-  * plan's only leaf is one file scan, every operator above it is a
-  * `Project`, `Filter`, `Sort`, `Window`, `Aggregate`,
-  * `WindowGroupLimit`, `Limit` or coalesce to one partition (none emits
-  * more rows than it reads), every expression is deterministic, and
-  * Catalyst sizes the scan at or below
-  * `spark.sql.autoBroadcastJoinThreshold` (the size Spark already holds
-  * whole in one place), the scan with its filters and projections is
-  * coalesced to one partition. The global sorts, windows and aggregates
-  * above it are then met without an exchange, and a global sort without
-  * its sampling job. The bound: one task reads at most the threshold's
-  * bytes of files, and no operator above it sees more rows than that
-  * task reads. A join, generator or union, a streaming plan (its
-  * stateful operators keep their fixed state partitions), a larger scan,
-  * a threshold of -1, a plan with nothing to distribute, or a
-  * nondeterministic expression (its values may depend on the partition)
-  * leaves the plan unchanged.
+/** Runs a small query over file scans in one task. When every leaf of a
+  * batch plan is a file scan, every operator is a `Project`, `Filter`,
+  * `Sort`, `Window`, `Aggregate`, `WindowGroupLimit`, `Limit`, coalesce
+  * to one partition, or an equi-join that is not a cross join and
+  * carries no user hint, every expression is deterministic, and Catalyst
+  * sizes the scans at or below `spark.sql.autoBroadcastJoinThreshold` in
+  * sum (the size Spark already holds whole in one place), each scan with
+  * its filters and projections is coalesced to one partition, and each
+  * join gets Spark's `SHUFFLE_HASH` strategy on both sides. With both
+  * inputs in one partition the hash join then needs no exchange, and
+  * neither do the global sorts, windows and aggregates above the scans;
+  * a global sort loses its sampling job, and a join its broadcast. The
+  * bound: one task reads at most the threshold's bytes of files. No
+  * operator but a join emits more rows than it reads; a join emits the
+  * rows a broadcast join of the same inputs gives, from one task. A
+  * generator or union, a non-equi, cross or hinted join, a streaming
+  * plan (its stateful operators keep their fixed state partitions),
+  * larger scans, a threshold of -1, a plan with nothing to distribute,
+  * or a nondeterministic expression (its values may depend on the
+  * partition) leaves the plan unchanged. Injected as a pre-CBO rule, it
+  * runs once after operator optimization, whose fixed-point rules would
+  * push a semi or anti join below the coalesce of its left input.
   */
-object CoalesceSmallSingleScan extends Rule[LogicalPlan] {
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.collectLeaves() match {
-    case Seq(scan @ LogicalRelation(_: HadoopFsRelation, _, _, _, _))
-        if !plan.isStreaming && conf.autoBroadcastJoinThreshold >= 0 &&
-          !plan.exists(!bounded(_)) && plan.exists(distributes) && !plan.exists(coalesced) &&
-          scan.stats.sizeInBytes <= conf.autoBroadcastJoinThreshold =>
-      coalesce(plan)
-    case _ => plan
+object CoalesceSmallScans extends Rule[LogicalPlan] {
+  private val shuffleHash = Some(HintInfo(strategy = Some(SHUFFLE_HASH)))
+
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    val scans = plan.collectLeaves()
+    if (!plan.isStreaming && conf.autoBroadcastJoinThreshold >= 0 && scans.forall(fileScan) &&
+        !plan.exists(!bounded(_)) && plan.exists(distributes) && !plan.exists(coalesced) &&
+        scans.map(_.stats.sizeInBytes).sum <= conf.autoBroadcastJoinThreshold) coalesce(plan)
+    else plan
+  }
+
+  private def fileScan(p: LogicalPlan): Boolean = p match {
+    case l: LogicalRelation => l.relation.isInstanceOf[HadoopFsRelation]
+    case _ => false
   }
 
   private def bounded(p: LogicalPlan): Boolean = p.expressions.forall(_.deterministic) && (p match {
     case _: LogicalRelation | _: Project | _: Filter | _: Sort | _: Window | _: Aggregate |
          _: WindowGroupLimit | _: GlobalLimit | _: LocalLimit => true
     case r: Repartition => r.numPartitions == 1 && !r.shuffle
+    case j: Join =>
+      j.joinType != Cross && j.hint == JoinHint.NONE && ExtractEquiJoinKeys.unapply(j).isDefined
     case _ => false
   })
 
   private def distributes(p: LogicalPlan): Boolean = p match {
     case s: Sort => s.global
-    case _: Window | _: Aggregate => true
+    case _: Window | _: Aggregate | _: Join => true
     case _ => false
   }
 
@@ -113,8 +129,12 @@ object CoalesceSmallSingleScan extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  private def coalesce(p: LogicalPlan): LogicalPlan =
-    if (scanChain(p)) Repartition(1, shuffle = false, p) else p.mapChildren(coalesce)
+  private def coalesce(p: LogicalPlan): LogicalPlan = p match {
+    case _ if scanChain(p) => Repartition(1, shuffle = false, p)
+    case j: Join => j.copy(left = coalesce(j.left), right = coalesce(j.right),
+      hint = JoinHint(shuffleHash, shuffleHash))
+    case _ => p.mapChildren(coalesce)
+  }
 }
 
 object GraftFunctions {

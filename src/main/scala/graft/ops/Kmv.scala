@@ -91,17 +91,23 @@ object Kmv {
   def merge(k: Int, sketches: DataFrame*): DataFrame = {
     checkK(k)
     require(sketches.nonEmpty, "need at least one sketch to merge")
-    val cut = sketches.map { sk =>
-      require(sk.columns.toSeq == Seq("kmv_hash"),
-        "expected a KMV sketch frame with exactly (kmv_hash), got: " +
-          sk.columns.mkString(", "))
-      cutSketch(sk, k)
-    }
+    mergeCut(k, sketches.map(cutKmv(_, k)))
+  }
+
+  /** [[cutSketch]] of a frame that must hold exactly (kmv_hash). */
+  private def cutKmv(sketch: DataFrame, k: Int): DataFrame = {
+    require(sketch.columns.toSeq == Seq("kmv_hash"),
+      "expected a KMV sketch frame with exactly (kmv_hash), got: " +
+        sketch.columns.mkString(", "))
+    cutSketch(sketch, k)
+  }
+
+  /** [[merge]] of sketches already through [[cutKmv]]. */
+  private def mergeCut(k: Int, cut: Seq[DataFrame]): DataFrame =
     cut.reduce(_ unionByName _)
       .distinct()
       .orderBy(col("kmv_hash"))
       .limit(k)
-  }
 
   /** One-row distinct-count estimate: with n = |sketch| hashes,
     *  - n < k → EXACT: the sketch saw every distinct value (estimate
@@ -143,15 +149,15 @@ object Kmv {
     *
     * Plan: ≤ k-row frames throughout — two left-semi joins onto L and
     * one aggregate; everything broadcastable by construction. Each
-    * input is [[Cut]] once up front (it feeds the merge AND
-    * a semi-join — a raw build lineage would re-run its full scan per
-    * consumer). Two EMPTY sketches yield NULL jaccard/intersection
-    * (0/0 carries no evidence — the rocPoints one-class convention),
-    * never a NaN artifact. */
+    * input is cut and shape-guarded once up front ([[cutSketch]]: it
+    * feeds the merge AND a semi-join — a raw build lineage would re-run
+    * its full scan per consumer). Two EMPTY sketches yield NULL
+    * jaccard/intersection (0/0 carries no evidence — the rocPoints
+    * one-class convention), never a NaN artifact. */
   def jaccard(skA: DataFrame, skB: DataFrame, k: Int): DataFrame = {
     checkK(k)
-    val (a, b) = (Cut(skA), Cut(skB))
-    val l = Cut(merge(k, a, b))
+    val (a, b) = (cutKmv(skA, k), cutKmv(skB, k))
+    val l = Cut(mergeCut(k, Seq(a, b)))
     val common = l
       .join(broadcast(a), Seq("kmv_hash"), "left_semi")
       .join(broadcast(b), Seq("kmv_hash"), "left_semi")

@@ -54,14 +54,19 @@ object StockAnalytics {
 
   /** Latest-day snapshot joined with the dimension table
     * (reference: app.py:75-97 — dim join, ROW_NUMBER window, rn=1).
-    * Finishes in one task: Spark's partial `WindowGroupLimit` keeps at
-    * most one row per ticker per map task ahead of the hash exchange, so
-    * the single final task reads at most |tickers| × map-tasks rows, and
-    * the display sort on that one partition needs no range exchange. */
+    * When the warehouse and dimension files together are at or below
+    * the broadcast threshold, the whole query is one job of one task
+    * ([[graft.functions.CoalesceSmallScans]]: both scans coalesced, a
+    * shuffle-hash join with no exchange). At scale the planner
+    * broadcasts the dimension by its size, and the join finishes in one
+    * task: Spark's partial `WindowGroupLimit` keeps at most one row per
+    * ticker per map task ahead of the hash exchange, so the single final
+    * task reads at most |tickers| × map-tasks rows, and the display sort
+    * on that one partition needs no range exchange. */
   def latestSnapshot(metrics: DataFrame, dim: DataFrame): DataFrame = {
     val latest = Snapshot.latestPerKey(metrics, keys = Seq("ticker"), order = Seq("date"))
       .coalesce(1)
-    latest.join(broadcast(dim), latest("ticker") === dim("ticker_symbol"))
+    latest.join(dim, latest("ticker") === dim("ticker_symbol"))
       .select(col("ticker"), col("security_name"), col("gics_sector"),
         col("date"), col("close"), col("daily_return"), col("rolling_vol_30d"))
       .orderBy(col("daily_return").desc)
@@ -71,7 +76,9 @@ object StockAnalytics {
     * n = min(count/2, 20)). Over a [[latestSnapshot]] the whole query
     * stays in that snapshot's single task: its windows need no
     * `SinglePartition` exchange, and the snapshot's display sort is
-    * dropped by [[graft.functions.EliminateSortBelowWindow]]. */
+    * dropped by [[graft.functions.EliminateSortBelowWindow]]. Over small
+    * files that is the query's only task and job; at scale the
+    * dimension's broadcast runs first, as in [[latestSnapshot]]. */
   def topMovers(snapshot: DataFrame, sector: String,
                 gainers: Boolean): DataFrame = {
     val by: Column = if (gainers) col("daily_return").desc else col("daily_return").asc

@@ -171,7 +171,7 @@ class PlanBudgetSpec extends SparkSpec {
     // every single-table scan is under the broadcast threshold, and the
     // one-partition rule would drop exchanges a larger input keeps
     s.conf.set("spark.sql.optimizer.excludedRules",
-      graft.functions.CoalesceSmallSingleScan.ruleName)
+      graft.functions.CoalesceSmallScans.ruleName)
     s
   }
 

@@ -100,4 +100,29 @@ class KmvSpec extends SparkSpec {
     r0(0) shouldBe 0.0f
     r0(1) shouldBe 0.0f
   }
+
+  test("jaccard: each input is cut and shape-guarded once; rows replay the estimator") {
+    // A = 1..600, B = 401..1000 at k = 64, both sketches already cut so
+    // that the call's jobs are the estimator's own
+    val (a, b) = (Cut(Kmv.build((1 to 600).map(i => s"j$i").toDF("k"), "k", 64)),
+      Cut(Kmv.build((401 to 1000).map(i => s"j$i").toDF("k"), "k", 64)))
+    var out: Seq[Seq[Any]] = Nil
+    val jobs = jobsStartedBy { out = Kmv.jaccard(a, b, 64).rows }
+    // three cuts: each input once (then probed), and the merged union
+    withClue(jobs.mkString("\n")) { jobs.count(_.contains(" at Cut.scala")) shouldBe 3 }
+    val hashes = (df: org.apache.spark.sql.DataFrame) => df.as[Long].collect().toSet
+    val (ha, hb) = (hashes(a), hashes(b))
+    val l = (ha ++ hb).toSeq.sorted.take(64)
+    val common = l.count(h => ha(h) && hb(h))
+    val r = out.head
+    r(3) shouldBe common.toLong
+    r(4) shouldBe 64L
+    r(0) shouldBe (common.toDouble / 64).toFloat
+    r(2) shouldBe (63.0 * math.pow(2.0, 60) / l.last.toDouble).toFloat
+    // the shape guard still runs on each input
+    for ((x, y) <- Seq((Kmv.build(keys, "k", 256), b), (a, Kmv.build(keys, "k", 256))))
+      intercept[IllegalArgumentException] {
+        Kmv.jaccard(x, y, 64)
+      }.getMessage should include("more than k=64")
+  }
 }

@@ -218,43 +218,68 @@ class StockPipelineSpec extends SparkSpec {
     rel.head shouldBe 0.0 +- 1e-12                             // day1: both 1.0
     rel.last shouldBe 100.0 * (1.1 - 0.8) +- 1e-9              // day2: 1.1 vs 0.8
 
-    val dim = Seq(("AAA", "Alpha Corp", "Tech", "Software"),
+    Seq(("AAA", "Alpha Corp", "Tech", "Software"),
       ("BBB", "Beta Inc", "Energy", "Oil"),
       ("CCC", "Gamma Co", "Tech", "Software"),
       ("DDD", "Delta Ltd", "Tech", "Hardware"),
       ("EEE", "Epsilon AG", "Tech", "Hardware"))
       .toDF("ticker_symbol", "security_name", "gics_sector", "gics_sub_industry")
+      .write.parquet(s"$dir/dim")
+    val dim = LakeReader.read(spark, s"$dir/dim")
+    // both tables are small files: snapshot and movers each collect in
+    // one job, with no exchange and no broadcast
+    // (graft.functions.CoalesceSmallScans)
+    def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan.toString
+    def inOneJob[T](body: => T): T = {
+      var out: Option[T] = None
+      jobsStartedBy { out = Some(body) } should have size 1
+      out.get
+    }
     val snap = StockAnalytics.latestSnapshot(metrics, dim)
-    val snapRows = snap.select("ticker", "daily_return").rows
+    assert(!plan(snap).contains("Exchange"), plan(snap))
+    val snapRows = inOneJob(snap.select("ticker", "daily_return").rows)
       .map(r => (r(0).asInstanceOf[String], r(1).asInstanceOf[Double]))
     snapRows.map(_._1) shouldBe Seq("CCC", "AAA", "EEE", "DDD", "BBB")  // daily_return desc
     snapRows.map(_._2).zip(Seq(0.25, 0.10, 0.05, -0.10, -0.20)).foreach {
       case (got, want) => got shouldBe want +- 1e-12 }
 
     // reference semantics: n = min(count/2, 20) → 4 Tech tickers give 2 a side
-    def movers(sector: String, gainers: Boolean) =
-      StockAnalytics.topMovers(snap, sector, gainers).select("ticker").rows.map(_.head)
+    def movers(sector: String, gainers: Boolean) = {
+      val df = StockAnalytics.topMovers(snap, sector, gainers)
+      assert(!plan(df).contains("Exchange"), plan(df))
+      inOneJob(df.select("ticker").rows.map(_.head))
+    }
     movers("Tech", gainers = true) shouldBe Seq("CCC", "AAA")
     movers("Tech", gainers = false) shouldBe Seq("DDD", "EEE")
     movers("Energy", gainers = true) shouldBe empty              // a 1-row sector yields 0
 
     // plan shape: the display sorts the windows re-sort plan no range
-    // exchange, and the snapshot's one task reads only the partial
-    // per-ticker limit's survivors, never the whole warehouse
-    def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan.toString
+    // exchange
     val trendsPlan = plan(trends)
     // a warehouse this small is one partition: history's display sort
-    // plans no range exchange either (graft.functions.CoalesceSmallSingleScan)
+    // plans no range exchange either
     val histSortPlan = plan(hist)
     assert(!histSortPlan.contains("rangepartitioning"), histSortPlan)
     val moversPlan = plan(StockAnalytics.topMovers(snap, "Tech", gainers = true))
     assert(!trendsPlan.contains("rangepartitioning"), trendsPlan)
     assert(!moversPlan.contains("rangepartitioning"), moversPlan)
-    val snapLines = plan(snap).linesIterator.toSeq
+
+    // at scale, with the small-scan rule out: the planner broadcasts the
+    // dimension by its size (no hint), and the snapshot's one task reads
+    // only the partial per-ticker limit's survivors, never the whole
+    // warehouse
+    val atScale = spark.newSession()
+    atScale.conf.set("spark.sql.optimizer.excludedRules",
+      graft.functions.CoalesceSmallScans.ruleName)
+    val scaleSnap = StockAnalytics.latestSnapshot(LakeReader.read(atScale, wh),
+      LakeReader.read(atScale, s"$dir/dim"))
+    val snapLines = plan(scaleSnap).linesIterator.toSeq
     val exchange = snapLines.indexWhere(_.contains("Exchange hashpartitioning(ticker"))
     val partial = snapLines.indexWhere(l => l.contains("WindowGroupLimit") && l.contains("Partial"))
     assert(snapLines.exists(_.contains("Coalesce 1")), snapLines.mkString("\n"))
+    assert(snapLines.exists(_.contains("BroadcastHashJoin")), snapLines.mkString("\n"))
     assert(exchange >= 0 && partial > exchange, snapLines.mkString("\n"))
+    scaleSnap.select("ticker", "daily_return").rows shouldBe snap.select("ticker", "daily_return").rows
 
     // history slice pushes its predicates into the parquet scan
     val histPlan = StockAnalytics.history(metrics, Seq("AAA"), "2024-01-01", "2024-01-31")

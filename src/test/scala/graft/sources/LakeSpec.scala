@@ -5,7 +5,6 @@ import java.sql.{Date, Timestamp}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -25,33 +24,6 @@ class LakeSpec extends SparkSpec {
     def sorted(df: DataFrame) = df.rows.sortBy(_.mkString("|"))
     sorted(ours) shouldBe sorted(theirs)
     ours
-  }
-
-  /** Spark jobs that `body` starts on this thread. A sentinel job runs
-    * afterwards and is waited for on the listener, so the bus has
-    * delivered every earlier event. Job groups keep the count to this
-    * thread: other suites run jobs concurrently in the same JVM. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val group = s"lakespec-${java.util.UUID.randomUUID}"
-    val sentinel = s"$group-sentinel"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(String.valueOf(Option(e.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "LakeSpec: zone open")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "LakeSpec: sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
-      while (!seen.contains(sentinel) && System.nanoTime < deadline) Thread.sleep(10)
-      assert(seen.contains(sentinel), "the sentinel job never reached the listener")
-      seen.asScala.count(_ == group)
-    } finally sc.removeSparkListener(listener)
   }
 
   private def stockBars = Seq(
@@ -82,10 +54,10 @@ class LakeSpec extends SparkSpec {
     StockPipeline.run(spark, stockBars, Timestamp.valueOf("2024-01-05 12:00:00"),
       raw, enr, wh) shouldBe Right(4L)
     // the counter sees the inference job that spark.read.parquet starts
-    jobsStartedBy(spark.read.parquet(wh)) should be >= 1
+    jobsStartedBy(spark.read.parquet(wh)).size should be >= 1
     jobsStartedBy {
       Seq(raw, enr, wh).foreach(z => LakeReader.read(spark, z).queryExecution.analyzed)
-    } shouldBe 0
+    } shouldBe empty
   }
 
   test("read: skips _SUCCESS, .crc, _temporary/ and ._COPYING_ leftovers") {
@@ -118,7 +90,7 @@ class LakeSpec extends SparkSpec {
     val file = new java.io.File(s"$dir/t").listFiles().map(_.getPath)
       .filter(_.endsWith(".parquet")).head
     readsLikeSpark(file).columns.toSeq shouldBe Seq("k", "s", "v")
-    jobsStartedBy(LakeReader.read(spark, file)) shouldBe 0
+    jobsStartedBy(LakeReader.read(spark, file)) shouldBe empty
   }
 
   test("read: timestamp columns, from Spark and from a foreign writer") {
@@ -566,7 +538,7 @@ class LakeSpec extends SparkSpec {
     assert(relation(again) eq relation(first))
     // the key is the normalised path: a trailing slash names the same table
     assert(relation(LakeReader.read(spark, s"$path/")) eq relation(first))
-    jobsStartedBy(LakeReader.read(spark, path)) shouldBe 0
+    jobsStartedBy(LakeReader.read(spark, path)) shouldBe empty
     sortedRows(again) shouldBe sortedRows(first)
   }
 }
