@@ -36,8 +36,15 @@ object Tables {
     * to the contract at the read boundary, so every downstream query and
     * oracle is schema-generation-proof. */
   def events(spark: SparkSession, dir: String): DataFrame =
-    normalizeEventTs(apply(spark, dir, "events"))
-      .withColumn("ts_utc", expr("timestamp_micros(ts div 1000)"))
+    eventTime(apply(spark, dir, "events"))
+
+  /** The event time of [[events]] on any frame of the events table,
+    * batch or streaming (the live queries' staged source applies it
+    * too): `ts` folded to nanos ([[normalizeEventTs]]) and `ts_utc`
+    * derived from it. Plain projections, so a watermark or stateful op
+    * composes on top. */
+  def eventTime(df: DataFrame): DataFrame =
+    normalizeEventTs(df).withColumn("ts_utc", expr("timestamp_micros(ts div 1000)"))
 
   /** Fold either on-disk representation of `events.ts` to nanos-Long
     * (see [[events]]). The NTZ→instant interpretation is pinned by the

@@ -2,11 +2,12 @@ package graft.queries
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.Tables
-import graft.ops.{CountMin, Cut, Hll, Kll, Percentiles, Reconcile, Reshape}
+import graft.ops.{CountMin, Hll, Kll, Percentiles, Reconcile, Reshape}
 import graft.pipeline.StockPipeline
 import graft.sources.{LakeReader, LakeWriter, VersionedLake}
 import graft.streaming.EventStreams
@@ -29,43 +30,115 @@ object PipelineQueries {
 
   import QuerySql.tempDir
 
+  // The live-query harness. A live `stream_*` entry is a DataFrame
+  // query over a staged source, drained to a sink and read back; these
+  // functions own the staging, the event time, the run and the
+  // finalization, so the entries spell out only their query.
+
   /** Stage one read-only parquet table as a file-source stream: symlink
     * the file into a scratch source dir (the file source wants a
-    * directory; no copy) and open it with the batch-read schema. Returns
-    * the streaming frame and the scratch root (for sink/checkpoint
-    * paths). One staged file ⇒ AvailableNow runs exactly one data
-    * micro-batch — the property every live streaming oracle's
-    * batching-invariance argument rests on. */
-  private def stageStream(s: SparkSession, dir: String, table: String,
-                          prefix: String): (DataFrame, String) = {
+    * directory; no copy) and open it with the table's footer schema (no
+    * Spark job). The events table gets the batch read's event time,
+    * [[Tables.eventTime]]. Returns the streaming frame and the scratch
+    * root that holds the sink and checkpoint. One staged file ⇒
+    * AvailableNow runs exactly one data micro-batch, the property every
+    * live oracle's batching-invariance argument rests on. */
+  private[queries] def stageStream(s: SparkSession, dir: String, table: String,
+                                   prefix: String): (DataFrame, String) = {
     val tmp = tempDir(prefix)
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$tmp/src"))
     java.nio.file.Files.createSymbolicLink(
       java.nio.file.Paths.get(s"$tmp/src/$table.parquet"),
       java.nio.file.Paths.get(s"$dir/$table.parquet"))
-    val schema = s.read.parquet(s"$dir/$table.parquet").schema
-    val stream = EventStreams.fromParquetDir(s, s"$tmp/src", schema)
-    // events streams get the same ts normalization as the batch reads
-    // (nanos-Long contract; see Tables.normalizeEventTs) — a projection,
-    // so it composes with any downstream watermark/stateful op
-    (if (table == "events") Tables.normalizeEventTs(stream) else stream, tmp)
+    val stream = EventStreams.fromParquetDir(s, s"$tmp/src", Tables(s, dir, table).schema)
+    (if (table == "events") Tables.eventTime(stream) else stream, tmp)
   }
 
+  /** Shuffle partitions a live query runs under (state-store partitions
+    * are fixed at query start from spark.sql.shuffle.partitions).
+    * Stateful micro-batches pay a per-partition state commit every
+    * trigger, so on a toy-scale stream 32 partitions are pure fixed
+    * overhead; 8 keeps full correctness (grouping is exact at any
+    * partition count) at a quarter of the commit traffic. A real
+    * deployment sizes this to state volume. */
+  private val LivePartitions = "8"
 
-  /** Start and drain a streaming query under a reduced shuffle-partition
-    * count (state-store partitions are fixed at query start from
-    * spark.sql.shuffle.partitions). Stateful micro-batches pay a
-    * per-partition state commit every trigger, so on a toy-scale stream
-    * 32 partitions are pure fixed overhead; 8 keeps full correctness
-    * (grouping is exact at any partition count) at a quarter of the
-    * commit traffic. A real deployment sizes this to state volume. */
-  private def awaitScoped(s: SparkSession, partitions: Int = 8)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  /** Run one live query to the end of its staged input: `start` gets
+    * the checkpoint dir `$tmp/ckpt` and the AvailableNow trigger, and
+    * the query runs under [[LivePartitions]]. Whether it finishes or
+    * throws, the query is stopped and the session's partition count
+    * restored. The one place a live query runs, so the one place to read
+    * its progress. */
+  private[queries] def awaitScoped(s: SparkSession, tmp: String)(
+      start: (String, Trigger) => StreamingQuery): Unit = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    s.conf.set(key, partitions.toString)
-    try start.awaitTermination() finally s.conf.set(key, prev)
+    s.conf.set(key, LivePartitions)
+    try {
+      val q = start(s"$tmp/ckpt", Trigger.AvailableNow())
+      try q.awaitTermination() finally q.stop()
+    } finally s.conf.set(key, prev)
   }
+
+  /** [[awaitScoped]] for a query that commits a lake directory: `start`
+    * gets its path, `$tmp/sink`, before the checkpoint and trigger.
+    * Returns what was committed, opened by [[LakeReader.read]]. */
+  private[queries] def drain(s: SparkSession, tmp: String)(
+      start: (String, String, Trigger) => StreamingQuery): DataFrame = {
+    awaitScoped(s, tmp)(start(s"$tmp/sink", _, _))
+    LakeReader.read(s, s"$tmp/sink")
+  }
+
+  /** [[drain]] through the append-mode file sink, [[EventStreams.toLake]]. */
+  private[queries] def drainToLake(s: SparkSession, tmp: String,
+                                   stream: DataFrame): DataFrame =
+    drain(s, tmp)((sink, ckpt, _) =>
+      EventStreams.toLake(stream, sink, ckpt, partitionCols = Seq.empty))
+
+  /** [[awaitScoped]] through a foreachBatch sink: `commit` gets every
+    * micro-batch. */
+  private[queries] def drainBatches(s: SparkSession, tmp: String, stream: DataFrame)(
+      commit: DataFrame => Unit): Unit =
+    awaitScoped(s, tmp)((ckpt, trigger) => stream.writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) => commit(batch) }
+      .option("checkpointLocation", ckpt).trigger(trigger).start())
+
+  /** [[awaitScoped]] through an Update-mode memory sink; returns its
+    * table. A later run under the same `name` replaces the table; a
+    * frame read from an earlier run keeps that run's rows. */
+  private[queries] def drainToMemory(s: SparkSession, tmp: String, name: String,
+                                     stream: DataFrame): DataFrame = {
+    awaitScoped(s, tmp)((ckpt, trigger) => stream.writeStream.format("memory")
+      .queryName(name).outputMode("update")
+      .option("checkpointLocation", ckpt).trigger(trigger).start())
+    s.table(name)
+  }
+
+  /** The rows of `df` whose `end` is at most max(ts_utc) − `horizon`
+    * over the events table, with that bound as column `bound`. A live
+    * query's sink holds the windows (or sessions) its watermark has
+    * finalized, and the watermark lags the stream's max event time by
+    * the 10-minute lateness. The horizon lies strictly inside lateness
+    * (20 minutes for an hourly or daily window; 40, the 30-minute gap
+    * plus lateness, for a session), so the emitted set does not depend
+    * on how the engine batches the files. Applied to the sink and to any
+    * exact batch side it is compared with. */
+  private[queries] def finalized(s: SparkSession, dir: String, df: DataFrame,
+                                 end: Column, horizon: String = "20 MINUTES"): DataFrame =
+    df.crossJoin(broadcast(Tables.events(s, dir)
+        .agg((max(col("ts_utc")) - expr(s"INTERVAL $horizon")).as("bound"))))
+      .filter(end <= col("bound"))
+
+  /** The final row per user of an Update-mode keyed-state sink: the most
+    * `progress`, then the most `n_late` (an all-late batch). Update mode
+    * emits one row per (user, micro-batch); one staged file drains as a
+    * single batch today, but a trigger or maxFilesPerTrigger change
+    * would append earlier partial states, and the oracle compare must
+    * not depend on batching. */
+  private def finalPerUser(df: DataFrame, progress: String): DataFrame =
+    df.withColumn("__rn", row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy(col("user_id")).orderBy(col(progress).desc, col("n_late").desc)))
+      .filter(col("__rn") === 1)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -220,11 +293,6 @@ object PipelineQueries {
         .orderBy(col("o_orderkey"))
     }),
 
-    // STREAMING ingest INTO the versioned lake: foreachBatch commits
-    // each micro-batch as a version (checkpointed — a replayed batch
-    // would just re-commit the same partitions, idempotent at the
-    // read-latest level). One staged file ⇒ one commit holding every
-    // partition; the read-back equals the batch projection.
     // STREAMING INCREMENTAL SESSIONIZATION: each micro-batch's session
     // rollup folds into the standing rollup via Sessionize.mergeSessions
     // — session-granular state, no event-history rescan, the versioned
@@ -254,9 +322,7 @@ object PipelineQueries {
       }
       stage(ev.filter(col("t_us") <= cutoff), "0_head")
       stage(ev.filter(col("t_us") > cutoff), "1_tail")
-      val statePath = s"$tmp/state"
-      val schema = s.read.parquet(s"$tmp/src").schema
-      val src = s.readStream.schema(schema)
+      val src = s.readStream.schema(LakeReader.read(s, s"$tmp/src").schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/src")
       def roll(df: DataFrame) =
         graft.ops.Sessionize.assign(df, "user_id", "t_us", "event_id", gap)
@@ -265,25 +331,16 @@ object PipelineQueries {
             max(col("t_us")).as("session_end"),
             count(lit(1)).as("n_events"),
             sum(d2(col("value"))).as("sum_value"))
-      awaitScoped(s)(src.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val delta = roll(batch)
-          val merged =
-            if (java.nio.file.Files.exists(
-                java.nio.file.Paths.get(statePath)))
-              graft.ops.Sessionize.mergeSessions(
-                batch.sparkSession.read.parquet(statePath), delta,
-                key = "user_id", gap = gap, sums = Seq("sum_value"))
-            else delta
-          // state is session-granular (tiny): cut lineage eagerly so the
-          // overwrite never reads under its own write
-          Cut(merged)
-            .write.mode("overwrite").parquet(statePath); ()
-        }
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      s.read.parquet(statePath)
+      // the state is the session rollup, rewritten from itself each
+      // batch: replaceSnapshot reads it and swaps the merge in
+      val statePath = s"$tmp/state"
+      drainBatches(s, tmp, src) { batch =>
+        val delta = roll(batch)
+        LakeWriter.replaceSnapshot(batch.sparkSession, statePath, Seq.empty)(
+          _.fold(delta)(graft.ops.Sessionize.mergeSessions(_, delta,
+            key = "user_id", gap = gap, sums = Seq("sum_value"))))
+      }
+      LakeReader.read(s, statePath)
         .select(col("user_id"), col("session_id"),
           col("session_start").as("session_start_us"),
           col("session_end").as("session_end_us"),
@@ -291,18 +348,17 @@ object PipelineQueries {
         .orderBy(col("user_id"), col("session_id"))
     }),
 
+    // STREAMING ingest INTO the versioned lake: foreachBatch commits
+    // each micro-batch as a version (checkpointed — a replayed batch
+    // would just re-commit the same partitions, idempotent at the
+    // read-latest level). One staged file ⇒ one commit holding every
+    // partition; the read-back equals the batch projection.
     "stream_versioned_ingest_live" -> ((s, dir) => {
       val (raw, tmp) = stageStream(s, dir, "events", "graft_svl")
       val root = s"$tmp/vlake"
       val src = raw.select(col("event_id"), col("user_id"), col("event_type"),
         col("value"))
-      awaitScoped(s)(src.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          VersionedLake.commit(batch, root, Seq("event_type")); ()
-        }
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
+      drainBatches(s, tmp, src)(VersionedLake.commit(_, root, Seq("event_type")))
       VersionedLake.read(s, root)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .orderBy(col("event_id"))
@@ -340,18 +396,12 @@ object PipelineQueries {
     // AvailableNow file sink → read the sink back. Append mode emits
     // only watermark-finalized windows; both sides therefore restrict to
     // windows ending ≥20 min before the stream's max event time — a
-    // conservative bound strictly inside the 10-min-lateness horizon, so
-    // the emitted set is identical however the engine batches the files.
+    // conservative bound strictly inside the 10-min-lateness horizon
+    // (see finalized).
     "stream_tumbling_live" -> ((s, dir) => {
-      val (raw, tmp) = stageStream(s, dir, "events", "graft_stream")
-      val src = raw.withColumn("ts_utc", expr("timestamp_micros(ts div 1000)"))
-      awaitScoped(s)(EventStreams.toLake(EventStreams.tumblingAgg(src),
-        s"$tmp/sink", s"$tmp/ckpt", partitionCols = Seq.empty))
-      val bound = Tables.events(s, dir)
-        .agg((max(col("ts_utc")) - expr("INTERVAL 20 MINUTES")).as("bound"))
-      LakeReader.read(s, s"$tmp/sink")
-        .crossJoin(broadcast(bound))
-        .filter(col("window_end") <= col("bound"))
+      val (src, tmp) = stageStream(s, dir, "events", "graft_stream")
+      finalized(s, dir, drainToLake(s, tmp, EventStreams.tumblingAgg(src)),
+          col("window_end"))
         .select(col("window_start"), col("event_type"), col("n_events"),
           col("sum_value").cast("float").as("sum_value"))
         .orderBy(col("window_start"), col("event_type"))
@@ -366,15 +416,9 @@ object PipelineQueries {
     // training-data gate that catches a source going off-mix within an
     // hour instead of at the next full-corpus audit.
     "stream_drift_live" -> ((s, dir) => {
-      val (raw, tmp) = stageStream(s, dir, "events", "graft_sdrift")
-      val src = raw.withColumn("ts_utc", expr("timestamp_micros(ts div 1000)"))
-      awaitScoped(s)(EventStreams.toLake(EventStreams.tumblingAgg(src),
-        s"$tmp/sink", s"$tmp/ckpt", partitionCols = Seq.empty))
-      val bound = Tables.events(s, dir)
-        .agg((max(col("ts_utc")) - expr("INTERVAL 20 MINUTES")).as("bound"))
-      val win = LakeReader.read(s, s"$tmp/sink")
-        .crossJoin(broadcast(bound))
-        .filter(col("window_end") <= col("bound"))
+      val (src, tmp) = stageStream(s, dir, "events", "graft_sdrift")
+      val win = finalized(s, dir,
+          drainToLake(s, tmp, EventStreams.tumblingAgg(src)), col("window_end"))
         .select(col("window_start"), col("event_type"), col("n_events"))
       val ref = Tables.events(s, dir).groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_ref"))
@@ -401,9 +445,6 @@ object PipelineQueries {
         .orderBy(col("window_start"), col("event_type"))
     }),
 
-    // LIVE TRENDING: top-3 event types per finalized hourly window —
-    // the streaming engine maintains the windowed counts, the read-back
-    // ranks them (integer counts, type tie-break: the cut is exact).
     // Bounded-state heavy-user monitoring: the stream maintains ONE
     // 4×256 Count-Min grid per hour window — state independent of user
     // cardinality, the sketch a 100 TB/day stream can actually afford —
@@ -411,26 +452,18 @@ object PipelineQueries {
     // Because the cells are md5-derived the oracle replays the SKETCH
     // as well as the exact counts: estimates land on the hash signal.
     "stream_cms_live" -> ((s, dir) => {
-      val (raw, tmp) = stageStream(s, dir, "events", "graft_scms")
-      val src = raw.withColumn("ts_utc", expr("timestamp_micros(ts div 1000)"))
-      awaitScoped(s)(EventStreams.toLake(
-        EventStreams.cmsWindowed(src, key = "user_id", depth = 4, width = 256),
-        s"$tmp/sink", s"$tmp/ckpt", partitionCols = Seq.empty))
-      val bound = Tables.events(s, dir)
-        .agg((max(col("ts_utc")) - expr("INTERVAL 20 MINUTES")).as("bound"))
-      val sk = LakeReader.read(s, s"$tmp/sink")
-        .crossJoin(broadcast(bound))
-        .filter(col("window_end") <= col("bound"))
+      val (src, tmp) = stageStream(s, dir, "events", "graft_scms")
+      val sk = finalized(s, dir, drainToLake(s, tmp,
+          EventStreams.cmsWindowed(src, key = "user_id", depth = 4, width = 256)),
+          col("window_end"))
         .select(col("window_start"), col("cms_row"), col("cms_bucket"),
           col("cnt"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("window_start"))
         .orderBy(col("n_exact").desc, col("user_id"))
-      val top = Tables.events(s, dir)
-        .select(date_trunc("hour", col("ts_utc")).as("window_start"),
-          col("user_id"))
-        .crossJoin(broadcast(bound))
-        .filter(col("window_start") + expr("INTERVAL 1 HOUR") <= col("bound"))
+      val top = finalized(s, dir, Tables.events(s, dir)
+          .select(date_trunc("hour", col("ts_utc")).as("window_start"),
+            col("user_id")), col("window_start") + expr("INTERVAL 1 HOUR"))
         .groupBy(col("window_start"), col("user_id"))
         .agg(count(lit(1)).as("n_exact"))
         .withColumn("rank", row_number().over(w).cast("long"))
@@ -452,22 +485,13 @@ object PipelineQueries {
     // estimator as the batch sketch and compared against the exact
     // per-window distinct. Registers AND estimates replay in DuckDB.
     "stream_hll_live" -> ((s, dir) => {
-      val (raw, tmp) = stageStream(s, dir, "events", "graft_shll")
-      val src = raw.withColumn("ts_utc", expr("timestamp_micros(ts div 1000)"))
-      awaitScoped(s)(EventStreams.toLake(
-        EventStreams.hllWindowed(src, key = "user_id", b = 6),
-        s"$tmp/sink", s"$tmp/ckpt", partitionCols = Seq.empty))
-      val bound = Tables.events(s, dir)
-        .agg((max(col("ts_utc")) - expr("INTERVAL 20 MINUTES")).as("bound"))
-      val sk = LakeReader.read(s, s"$tmp/sink")
-        .crossJoin(broadcast(bound))
-        .filter(col("window_end") <= col("bound"))
+      val (src, tmp) = stageStream(s, dir, "events", "graft_shll")
+      val sk = finalized(s, dir, drainToLake(s, tmp,
+          EventStreams.hllWindowed(src, key = "user_id", b = 6)), col("window_end"))
         .select(col("window_start"), col("hll_register"), col("hll_rank"))
-      val exact = Tables.events(s, dir)
-        .select(date_trunc("hour", col("ts_utc")).as("window_start"),
-          col("user_id"))
-        .crossJoin(broadcast(bound))
-        .filter(col("window_start") + expr("INTERVAL 1 HOUR") <= col("bound"))
+      val exact = finalized(s, dir, Tables.events(s, dir)
+          .select(date_trunc("hour", col("ts_utc")).as("window_start"),
+            col("user_id")), col("window_start") + expr("INTERVAL 1 HOUR"))
         .groupBy(col("window_start"))
         .agg(count_distinct(col("user_id")).as("n_exact"))
       Hll.estimateByGroup(sk, b = 6, Seq("window_start"))
@@ -481,16 +505,10 @@ object PipelineQueries {
     // cumulative-count nearest-rank pick. Integer cents end to end, so
     // every percentile replays exactly.
     "stream_pctile_live" -> ((s, dir) => {
-      val (raw, tmp) = stageStream(s, dir, "events", "graft_spct")
-      val src = raw.withColumn("ts_utc", expr("timestamp_micros(ts div 1000)"))
-      awaitScoped(s)(EventStreams.toLake(
-        EventStreams.histWindowed(src, value = "value", binWidthCents = 100L),
-        s"$tmp/sink", s"$tmp/ckpt", partitionCols = Seq.empty))
-      val bound = Tables.events(s, dir)
-        .agg((max(col("ts_utc")) - expr("INTERVAL 20 MINUTES")).as("bound"))
-      val sk = LakeReader.read(s, s"$tmp/sink")
-        .crossJoin(broadcast(bound))
-        .filter(col("window_end") <= col("bound"))
+      val (src, tmp) = stageStream(s, dir, "events", "graft_spct")
+      val sk = finalized(s, dir, drainToLake(s, tmp,
+          EventStreams.histWindowed(src, value = "value", binWidthCents = 100L)),
+          col("window_end"))
         .select(col("window_start"), col("bin"), col("cnt"))
       // per-window windows range over the ≤ range/binWidth histogram
       // bins — the declared-bounded frame, never the events
@@ -523,26 +541,18 @@ object PipelineQueries {
     // the same compactByGroup call, spec-covered with its additive
     // error band.
     "stream_kll_live" -> ((s, dir) => {
-      val (raw, tmp) = stageStream(s, dir, "events", "graft_skll")
-      val src = raw.withColumn("ts_utc", expr("timestamp_micros(ts div 1000)"))
-      awaitScoped(s)(EventStreams.kllPartialsToLake(src, s"$tmp/sink",
-        s"$tmp/ckpt", value = "value", k = 64))
-      val bound = Tables.events(s, dir)
-        .agg((max(col("ts_utc")) - expr("INTERVAL 20 MINUTES")).as("bound"))
+      val (src, tmp) = stageStream(s, dir, "events", "graft_skll")
       val ps = Seq(0.5, 0.95, 0.99)
-      val partials = LakeReader.read(s, s"$tmp/sink")
-        .crossJoin(broadcast(bound))
-        .filter(col("window_end") <= col("bound"))
+      val partials = finalized(s, dir, drain(s, tmp)((sink, ckpt, trigger) =>
+          EventStreams.kllPartialsToLake(src, sink, ckpt, value = "value", k = 64,
+            trigger = trigger)), col("window_end"))
         .select(col("window_start"), col("kll_value"), col("kll_weight"))
       val sk = Kll.compactByGroup(partials, Seq("window_start"), k = 64)
       val q = Kll.quantilesByGroup(sk, Seq("window_start"), ps, k = 64)
       val exact = Percentiles.nearestRank(
-          Tables.events(s, dir)
-            .select(date_trunc("hour", col("ts_utc")).as("window_start"),
-              col("value"))
-            .crossJoin(broadcast(bound))
-            .filter(col("window_start") + expr("INTERVAL 1 HOUR") <=
-              col("bound")),
+          finalized(s, dir, Tables.events(s, dir)
+              .select(date_trunc("hour", col("ts_utc")).as("window_start"),
+                col("value")), col("window_start") + expr("INTERVAL 1 HOUR")),
           Seq("window_start"), "value", ps)
         .select(col("window_start"), col("p"),
           col("pct_value").cast("double").as("__ex"))
@@ -553,19 +563,16 @@ object PipelineQueries {
         .orderBy(col("window_start"), col("p"))
     }),
 
+    // LIVE TRENDING: top-3 event types per finalized hourly window —
+    // the streaming engine maintains the windowed counts, the read-back
+    // ranks them (integer counts, type tie-break: the cut is exact).
     "stream_topk_live" -> ((s, dir) => {
-      val (raw, tmp) = stageStream(s, dir, "events", "graft_stopk")
-      val src = raw.withColumn("ts_utc", expr("timestamp_micros(ts div 1000)"))
-      awaitScoped(s)(EventStreams.toLake(EventStreams.tumblingAgg(src),
-        s"$tmp/sink", s"$tmp/ckpt", partitionCols = Seq.empty))
-      val bound = Tables.events(s, dir)
-        .agg((max(col("ts_utc")) - expr("INTERVAL 20 MINUTES")).as("bound"))
+      val (src, tmp) = stageStream(s, dir, "events", "graft_stopk")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("window_start"))
         .orderBy(col("n_events").desc, col("event_type"))
-      LakeReader.read(s, s"$tmp/sink")
-        .crossJoin(broadcast(bound))
-        .filter(col("window_end") <= col("bound"))
+      finalized(s, dir, drainToLake(s, tmp, EventStreams.tumblingAgg(src)),
+          col("window_end"))
         .withColumn("rank", row_number().over(w).cast("long"))
         .filter(col("rank") <= 3)
         .select(col("window_start"), col("rank"), col("event_type"),
@@ -576,18 +583,11 @@ object PipelineQueries {
     // REAL-ENGINE daily OHLC candles: the order-dependent open/close
     // computed by an order-insensitive min_by/max_by accumulator over
     // the total (ts, event_id) order — arrival order cannot change a
-    // candle. Finalized windows only (watermark-bounded), the
-    // stream_tumbling_live finalization argument verbatim.
+    // candle. Finalized windows only (watermark-bounded).
     "stream_ohlc_live" -> ((s, dir) => {
-      val (raw, tmp) = stageStream(s, dir, "events", "graft_sohlc")
-      val src = raw.withColumn("ts_utc", expr("timestamp_micros(ts div 1000)"))
-      awaitScoped(s)(EventStreams.toLake(EventStreams.ohlcCandles(src),
-        s"$tmp/sink", s"$tmp/ckpt", partitionCols = Seq.empty))
-      val bound = Tables.events(s, dir)
-        .agg((max(col("ts_utc")) - expr("INTERVAL 20 MINUTES")).as("bound"))
-      LakeReader.read(s, s"$tmp/sink")
-        .crossJoin(broadcast(bound))
-        .filter(col("window_end") <= col("bound"))
+      val (src, tmp) = stageStream(s, dir, "events", "graft_sohlc")
+      finalized(s, dir, drainToLake(s, tmp, EventStreams.ohlcCandles(src)),
+          col("window_end"))
         .select(col("window_start"), col("event_type"), col("open"),
           col("high"), col("low"), col("close"), col("n_ticks"),
           col("vol_cents"))
@@ -602,14 +602,11 @@ object PipelineQueries {
     // task-order-dependent, so the query projects onto the key columns,
     // making the output DISTINCT(keys): deterministic and oracle-exact.
     "stream_dedup_live" -> ((s, dir) => {
-      val (raw, tmp) = stageStream(s, dir, "events", "graft_sdedup")
-      val src = raw.withColumn("ts_utc", expr("timestamp_micros(ts div 1000)"))
+      val (src, tmp) = stageStream(s, dir, "events", "graft_sdedup")
       val deduped = EventStreams
         .streamingDedup(src, Seq("user_id", "event_type", "value"))
         .select(col("user_id"), col("event_type"), col("value"))
-      awaitScoped(s)(EventStreams.toLake(deduped, s"$tmp/sink", s"$tmp/ckpt",
-        partitionCols = Seq.empty))
-      LakeReader.read(s, s"$tmp/sink")
+      drainToLake(s, tmp, deduped)
         .orderBy(col("user_id"), col("event_type"), col("value"))
     }),
 
@@ -622,17 +619,12 @@ object PipelineQueries {
     // state silently), keeping the output batching-invariant.
     "stream_running_totals_live" -> ((s, dir) => {
       import s.implicits._
-      val (raw, tmp) = stageStream(s, dir, "events", "graft_srt")
-      val src = raw.withColumn("ts_utc", expr("timestamp_micros(ts div 1000)"))
+      val (src, tmp) = stageStream(s, dir, "events", "graft_srt")
       val ue = src.select(col("user_id"), col("ts_utc"),
           round(col("value") * 100).cast("double").as("value"))
         .as[EventStreams.UserEvent]
-      awaitScoped(s)(EventStreams.runningUserTotals(ue).toDF()
-        .writeStream.format("memory").queryName("graft_srt_mem")
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      s.table("graft_srt_mem")
+      drainToMemory(s, tmp, "graft_srt_mem",
+          EventStreams.runningUserTotals(ue).toDF())
         .select(col("user_id"), col("n_events"),
           col("total_value").cast("long").as("total_cents"))
         .orderBy(col("user_id"))
@@ -648,29 +640,13 @@ object PipelineQueries {
       import s.implicits._
       val (raw, tmp) = stageStream(s, dir, "events", "graft_scusum")
       val ce = raw.filter(col("value").isNotNull)
-        .select(col("user_id"),
-          expr("timestamp_micros(ts div 1000)").as("ts_utc"),
+        .select(col("user_id"), col("ts_utc"),
           col("ts").as("ts_nanos"), col("event_id"),
           round(col("value") * 100).cast("long").as("cents"))
         .as[EventStreams.CusumEvent]
-      awaitScoped(s)(EventStreams.streamingCusum(ce,
-          targetCents = 5000L, slackCents = 100L).toDF()
-        .writeStream.format("memory").queryName("graft_scusum_mem")
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      // Update mode emits one row per (user, micro-batch). One staged
-      // file under AvailableNow drains as a single batch TODAY, but a
-      // trigger/maxFilesPerTrigger change would append earlier partial
-      // states per user — keep only the FINAL state row (max n_events,
-      // n_late as tiebreak for an all-late batch) so the oracle compare
-      // doesn't depend on batching config.
-      val wFinal = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id"))
-        .orderBy(col("n_events").desc, col("n_late").desc)
-      s.table("graft_scusum_mem")
-        .withColumn("__rn", row_number().over(wFinal))
-        .filter(col("__rn") === 1)
+      finalPerUser(drainToMemory(s, tmp, "graft_scusum_mem",
+          EventStreams.streamingCusum(ce, targetCents = 5000L, slackCents = 100L)
+            .toDF()), "n_events")
         .select(col("user_id"), col("n_events"),
           col("cusum_up"), col("cusum_down"), col("n_late"))
         .orderBy(col("user_id"))
@@ -692,24 +668,12 @@ object PipelineQueries {
             .when(col("event_type") === "purchase", 3)
             .otherwise(-1))
         .filter(col("step") >= 0)
-        .select(col("user_id"),
-          expr("timestamp_micros(ts div 1000)").as("ts_utc"),
+        .select(col("user_id"), col("ts_utc"),
           col("ts").as("ts_nanos"), col("event_id"), col("step"))
         .as[EventStreams.FunnelEvent]
-      awaitScoped(s)(EventStreams.streamingFunnel(fe, nSteps = 4,
-          maxGapNanos = 48L * 3600L * 1000000000L).toDF()
-        .writeStream.format("memory").queryName("graft_sfunnel_mem")
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      // Update mode emits one row per (user, batch) — keep the final
-      // chain per user (max reached; n_late tiebreak), as stream_cusum
-      val wFinal = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id"))
-        .orderBy(col("reached").desc, col("n_late").desc)
-      s.table("graft_sfunnel_mem")
-        .withColumn("__rn", row_number().over(wFinal))
-        .filter(col("__rn") === 1)
+      finalPerUser(drainToMemory(s, tmp, "graft_sfunnel_mem",
+          EventStreams.streamingFunnel(fe, nSteps = 4,
+            maxGapNanos = 48L * 3600L * 1000000000L).toDF()), "reached")
         .select(col("user_id"), col("reached"), col("t_final"), col("n_late"))
         .orderBy(col("user_id"))
     }),
@@ -730,9 +694,7 @@ object PipelineQueries {
         .withColumn("content_hash", md5(col("text")))
       val deduped = EventStreams.streamingDedup(gated, Seq("content_hash"))
         .select(col("content_hash"))
-      awaitScoped(s)(EventStreams.toLake(deduped, s"$tmp/sink", s"$tmp/ckpt",
-        partitionCols = Seq.empty))
-      LakeReader.read(s, s"$tmp/sink").orderBy(col("content_hash"))
+      drainToLake(s, tmp, deduped).orderBy(col("content_hash"))
     }),
 
     // REAL-ENGINE stream-stream interval join: click→purchase attribution
@@ -743,8 +705,7 @@ object PipelineQueries {
     // exactly — state expiry only affects matches across batches, of
     // which there are none. Times on the micros grid both engines share.
     "stream_interval_join_live" -> ((s, dir) => {
-      val (raw, tmp) = stageStream(s, dir, "events", "graft_sij")
-      val src = raw.withColumn("ts_utc", expr("timestamp_micros(ts div 1000)"))
+      val (src, tmp) = stageStream(s, dir, "events", "graft_sij")
       val clicks = src.filter(col("event_type") === "click")
         .select(col("user_id").as("l_user"), col("ts_utc").as("l_ts"),
           col("event_id").as("click_id"))
@@ -755,10 +716,7 @@ object PipelineQueries {
           clicks, "l_user", "l_ts", buys, "r_user", "r_ts",
           horizon = "4 hours")
         .select(col("click_id"), col("purchase_id"), col("value"))
-      awaitScoped(s)(EventStreams.toLake(joined, s"$tmp/sink", s"$tmp/ckpt",
-        partitionCols = Seq.empty))
-      LakeReader.read(s, s"$tmp/sink")
-        .orderBy(col("click_id"), col("purchase_id"))
+      drainToLake(s, tmp, joined).orderBy(col("click_id"), col("purchase_id"))
     }),
 
     // REAL-ENGINE stream-stream LEFT OUTER interval join: same
@@ -771,8 +729,7 @@ object PipelineQueries {
     // end and are discarded unemitted — the oracle replays that cutoff
     // exactly.
     "stream_interval_left_join_live" -> ((s, dir) => {
-      val (raw, tmp) = stageStream(s, dir, "events", "graft_silj")
-      val src = raw.withColumn("ts_utc", expr("timestamp_micros(ts div 1000)"))
+      val (src, tmp) = stageStream(s, dir, "events", "graft_silj")
       val clicks = src.filter(col("event_type") === "click")
         .select(col("user_id").as("l_user"), col("ts_utc").as("l_ts"),
           col("event_id").as("click_id"))
@@ -783,10 +740,7 @@ object PipelineQueries {
           clicks, "l_user", "l_ts", buys, "r_user", "r_ts",
           horizon = "4 hours", joinType = "left_outer")
         .select(col("click_id"), col("purchase_id"), col("value"))
-      awaitScoped(s)(EventStreams.toLake(joined, s"$tmp/sink", s"$tmp/ckpt",
-        partitionCols = Seq.empty))
-      LakeReader.read(s, s"$tmp/sink")
-        .orderBy(col("click_id"), col("purchase_id"))
+      drainToLake(s, tmp, joined).orderBy(col("click_id"), col("purchase_id"))
     }),
 
     // REAL-ENGINE stream-stream FULL OUTER interval join: both
@@ -796,8 +750,7 @@ object PipelineQueries {
     // l_ts ∈ [r_ts − horizon, r_ts], all in the past once the watermark
     // crosses r_ts). Both cutoffs replayed in the oracle.
     "stream_interval_full_join_live" -> ((s, dir) => {
-      val (raw, tmp) = stageStream(s, dir, "events", "graft_sifj")
-      val src = raw.withColumn("ts_utc", expr("timestamp_micros(ts div 1000)"))
+      val (src, tmp) = stageStream(s, dir, "events", "graft_sifj")
       val clicks = src.filter(col("event_type") === "click")
         .select(col("user_id").as("l_user"), col("ts_utc").as("l_ts"),
           col("event_id").as("click_id"))
@@ -808,10 +761,7 @@ object PipelineQueries {
           clicks, "l_user", "l_ts", buys, "r_user", "r_ts",
           horizon = "4 hours", joinType = "full_outer")
         .select(col("click_id"), col("purchase_id"), col("value"))
-      awaitScoped(s)(EventStreams.toLake(joined, s"$tmp/sink", s"$tmp/ckpt",
-        partitionCols = Seq.empty))
-      LakeReader.read(s, s"$tmp/sink")
-        .orderBy(col("click_id"), col("purchase_id"))
+      drainToLake(s, tmp, joined).orderBy(col("click_id"), col("purchase_id"))
     }),
 
     // REAL-ENGINE foreachBatch upsert — the reference's watermark+DELETE+
@@ -823,10 +773,9 @@ object PipelineQueries {
       val (raw, tmp) = stageStream(s, dir, "events", "graft_sup")
       val src = raw
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      awaitScoped(s)(EventStreams.mergeIntoWarehouse(src, s"$tmp/wh", s"$tmp/ckpt",
-        keys = Seq("user_id", "event_type"), tiebreak = "event_id",
-        trigger = Some(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
-      LakeReader.read(s, s"$tmp/wh")
+      drain(s, tmp)((wh, ckpt, trigger) => EventStreams.mergeIntoWarehouse(src, wh,
+          ckpt, keys = Seq("user_id", "event_type"), tiebreak = "event_id",
+          trigger = Some(trigger)))
         .select(col("user_id"), col("event_type"), col("event_id"), col("value"))
         .orderBy(col("user_id"), col("event_type"))
     }),
@@ -843,12 +792,7 @@ object PipelineQueries {
         raw.select(col("user_id"), col("event_id"),
           round(col("value") * 100).cast("long").as("cents")),
         dim, keys = Seq("user_id"))
-      awaitScoped(s)(enriched.writeStream
-        .format("parquet").option("path", s"$tmp/sink")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start())
-      LakeReader.read(s, s"$tmp/sink")
+      drainToLake(s, tmp, enriched)
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("cents")).as("total_cents"))
@@ -864,12 +808,10 @@ object PipelineQueries {
       val (raw, tmp) = stageStream(s, dir, "orders", "graft_scdc")
       val base = Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_acctbal").as("bal"))
-      awaitScoped(s)(EventStreams.cdcIntoWarehouse(
-        AnalyticsQueries.ordersChangelog(raw), base,
-        s"$tmp/wh", s"$tmp/ckpt", key = "c_custkey",
-        seqCol = "o_orderdate", tieCol = "o_orderkey", opCol = "op",
-        trigger = Some(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
-      LakeReader.read(s, s"$tmp/wh")
+      drain(s, tmp)((wh, ckpt, trigger) => EventStreams.cdcIntoWarehouse(
+          AnalyticsQueries.ordersChangelog(raw), base, wh, ckpt, key = "c_custkey",
+          seqCol = "o_orderdate", tieCol = "o_orderkey", opCol = "op",
+          trigger = Some(trigger)))
         .filter(col("__op") =!= "D") // tombstones stay in the snapshot
         .select(col("c_custkey"), col("bal"))
         .orderBy(col("c_custkey"))
@@ -896,21 +838,13 @@ object PipelineQueries {
     // LIVE-ENGINE sliding windows: the overlapping-window agg through
     // the real streaming engine (append mode emits only watermark-
     // finalized windows; the DECIMAL value cast keeps the sum exact
-    // whatever the per-task fold order). Both sides restrict to windows
-    // ending >= 20 min before the stream's max event time — strictly
-    // inside the 10-min lateness horizon, so the emitted set is
-    // batching-invariant (the stream_tumbling_live argument verbatim).
+    // whatever the per-task fold order). Both sides restrict to
+    // finalized windows, ending >= 20 min before the stream's max event
+    // time.
     "stream_sliding_live" -> ((s, dir) => {
-      val (raw, tmp) = stageStream(s, dir, "events", "graft_sslide")
-      val src = raw.withColumn("ts_utc", expr("timestamp_micros(ts div 1000)"))
-      awaitScoped(s)(EventStreams.toLake(
-        EventStreams.slidingAvg(src, value = d2(col("value"))),
-        s"$tmp/sink", s"$tmp/ckpt", partitionCols = Seq.empty))
-      val bound = Tables.events(s, dir)
-        .agg((max(col("ts_utc")) - expr("INTERVAL 20 MINUTES")).as("bound"))
-      LakeReader.read(s, s"$tmp/sink")
-        .crossJoin(broadcast(bound))
-        .filter(col("window_end") <= col("bound"))
+      val (src, tmp) = stageStream(s, dir, "events", "graft_sslide")
+      finalized(s, dir, drainToLake(s, tmp,
+          EventStreams.slidingAvg(src, value = d2(col("value")))), col("window_end"))
         .select(col("window_start"), col("event_type"),
           col("avg_value").cast("float").as("avg_value"), col("n_events"))
         .orderBy(col("window_start"), col("event_type"))
@@ -925,16 +859,10 @@ object PipelineQueries {
     // time (gap + lateness, conservatively) for a batching-invariant
     // emitted set.
     "stream_session_live" -> ((s, dir) => {
-      val (raw, tmp) = stageStream(s, dir, "events", "graft_ssess")
-      val src = raw.withColumn("ts_utc", expr("timestamp_micros(ts div 1000)"))
-      awaitScoped(s)(EventStreams.toLake(
-        EventStreams.sessionize(src, value = d2(col("value"))),
-        s"$tmp/sink", s"$tmp/ckpt", partitionCols = Seq.empty))
-      val bound = Tables.events(s, dir)
-        .agg((max(col("ts_utc")) - expr("INTERVAL 40 MINUTES")).as("bound"))
-      LakeReader.read(s, s"$tmp/sink")
-        .crossJoin(broadcast(bound))
-        .filter(col("session_end") <= col("bound"))
+      val (src, tmp) = stageStream(s, dir, "events", "graft_ssess")
+      finalized(s, dir, drainToLake(s, tmp,
+          EventStreams.sessionize(src, value = d2(col("value")))),
+          col("session_end"), horizon = "40 MINUTES")
         .select(col("session_start"), col("user_id"), col("n_events"),
           col("session_value").cast("double").as("session_value"))
         .orderBy(col("user_id"), col("session_start"))

@@ -15,6 +15,27 @@ trait SparkSpec extends AnyFunSuite with Matchers {
     def rows: Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq)
   }
 
+  /** Runs `body` with a fresh temp dir as the context's checkpoint dir,
+    * then clears it (null → no dir: the pristine session the other
+    * specs expect) and deletes the dir. */
+  def withCheckpointDir[T](body: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    try {
+      spark.sparkContext.setCheckpointDir(dir.toString)
+      body(dir)
+    } finally {
+      spark.sparkContext.setCheckpointDir(null)
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(dir.toFile)
+    }
+  }
+
+  /** Regular files under `dir`, at any depth. */
+  def filesUnder(dir: java.nio.file.Path): Long =
+    java.nio.file.Files.walk(dir).iterator.asScala.count(java.nio.file.Files.isRegularFile(_))
+
   /** The call site of every Spark job that `body` starts on this thread
     * (its result stage's name, e.g. `localCheckpoint at Cut.scala:33`).
     * A sentinel job runs afterwards and is waited for on the listener, so

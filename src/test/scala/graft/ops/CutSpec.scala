@@ -1,6 +1,6 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -22,25 +22,6 @@ class CutSpec extends SparkSpec {
     * `None` for local blocks, `Some(path)` for a reliable checkpoint. */
   private def checkpointFiles(df: DataFrame): Seq[Option[String]] =
     df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.getCheckpointFile }
-
-  private def withCheckpointDir[T](body: Path => T): T = {
-    val dir = Files.createTempDirectory("graft_cut")
-    try {
-      spark.sparkContext.setCheckpointDir(dir.toString)
-      body(dir)
-    } finally {
-      // null clears the JVM-wide checkpoint dir so other specs see the
-      // pristine session (setCheckpointDir(null) → checkpointDir = None)
-      spark.sparkContext.setCheckpointDir(null)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir.toFile)
-    }
-  }
-
-  private def filesUnder(dir: Path): Long =
-    Files.walk(dir).iterator.asScala.count(Files.isRegularFile(_))
 
   test("only graft/ops/Cut.scala materializes: no other localCheckpoint( or .checkpoint( in src/main") {
     val root = Paths.get("src/main/scala")

@@ -310,9 +310,7 @@ class DedupSpec extends SparkSpec {
       (3L, "a totally novel document about cooking pasta with garlic and olive oil"))
       .toDF("doc_id", "text")
     spark.sparkContext.getCheckpointDir shouldBe empty
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt")
-    try {
-      spark.sparkContext.setCheckpointDir(ckpt.toString)
+    withCheckpointDir { ckpt =>
       Dedup.duplicateClusters(chain).orderBy("id").rows
         .map(r => (r(0), r(1))) shouldBe
         Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L))
@@ -322,14 +320,6 @@ class DedupSpec extends SparkSpec {
       // the cut actually wrote RDD checkpoint data to the dir
       val wrote = java.nio.file.Files.walk(ckpt).count() > 1
       assert(wrote, s"no checkpoint data written under $ckpt")
-    } finally {
-      // null clears the JVM-wide checkpoint dir so other specs see the
-      // pristine session (setCheckpointDir(null) → checkpointDir = None)
-      spark.sparkContext.setCheckpointDir(null)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(ckpt.toFile)
     }
   }
 
