@@ -25,6 +25,12 @@ import graft.sources.{LakeReader, LakeWriter}
   * and `ticker` stays a string column (a `ticker=0700` directory would
   * be read back as the integer 700).
   *
+  * Zone contract: in every zone (raw, enriched, warehouse) a row's
+  * `year` is `year(date)` in the session time zone. The writers here
+  * derive it and nothing else sets it, so a `date` bound is also a
+  * `year` bound: [[StockAnalytics.history]] turns its date window into a
+  * `year` predicate that prunes year directories.
+  *
   * Idempotency / incrementality:
   *  - ingest: dynamic partition overwrite — re-running a batch rewrites
   *    exactly its year partitions (replaces the reference's

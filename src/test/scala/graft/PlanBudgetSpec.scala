@@ -62,24 +62,19 @@ class PlanBudgetSpec extends SparkSpec {
       }.toMap
 
   /** Check-time EXCHANGE slack for the executed-AQE audit only:
-    * queries whose final adaptive shape was OBSERVED to vary with box
-    * load (a cached-checkpoint size stat tipping a runtime broadcast
-    * decision), with the measured spread. Encoded here rather than in
-    * the budget file because PLAN_BUDGET_REGEN rewrites the file with
-    * whatever THIS run measured — a quiet regen would silently ratchet
-    * the budget back to the uncontended floor and re-arm the flake.
-    *   rec_topn_recall: 11 quiet / 13 under parallel suites (r14 judge
-    *     + reproduced in r15); sim_recall_eval: 5 quiet / 7 contended
-    *     (r15). Slack = observed spread; anything beyond it still
-    *     fails (after the re-measure pass confirms it reproduces). */
+    * queries whose final adaptive shape varies with box load (a
+    * cached-checkpoint size stat tipping a runtime broadcast decision),
+    * with the spread measured between quiet and contended runs:
+    * rec_topn_recall 11 → 13, sim_recall_eval 5 → 7, agg_mad ±1 (two
+    * `withRunningTotals` checkpoints carry the same stat). Anything beyond
+    * the slack still fails, after the re-measure pass confirms it
+    * reproduces. PLAN_BUDGET_REGEN keeps the larger of the committed and
+    * the measured exchange count for these queries, so the budget the
+    * slack is added to never falls to a quiet run's floor. */
   private val aqeExchangeSlack = Map(
     "rec_topn_recall" -> 2,
     "sim_recall_eval" -> 2,
-    "agg_mad" -> 1) // r15: 13/14 floated across regens (quiet AND
-                    // contended). r16's shared-ledger rewrite lands at
-                    // 13 pre-AQE / 10 AQE; the ±1 stays because the
-                    // same cached-checkpoint stat class remains in the
-                    // plan (two withRunningTotals checkpoints)
+    "agg_mad" -> 1)
 
   /** (query name, human message) per budget violation. */
   private def violationsOf(budget: Map[String, Seq[Int]],
@@ -126,8 +121,16 @@ class PlanBudgetSpec extends SparkSpec {
                           exchangeSlack: Map[String, Int] = Map.empty)
       : Unit = {
     if (sys.env.contains("PLAN_BUDGET_REGEN")) {
+      // a query whose exchange count varies from run to run keeps the
+      // larger of its committed and its measured count, so a quiet
+      // regeneration cannot lower the budget its slack is measured from
+      val committed = if (Files.exists(path)) readBudget(path) else Map.empty[String, Seq[Int]]
       val lines = "# query\texchanges\tsmj\tbnlj\tcart" +:
-        current.map { case (n, m) => s"$n\t${m.mkString("\t")}" }
+        current.map { case (n, m) =>
+          val kept = committed.get(n).filter(_ => exchangeSlack.contains(n))
+            .fold(m)(b => m.updated(0, m(0) max b(0)))
+          s"$n\t${kept.mkString("\t")}"
+        }
       Files.createDirectories(path.getParent)
       Files.write(path, lines.asJava, StandardCharsets.UTF_8)
       info(s"regenerated $path with ${current.size} rows")

@@ -226,8 +226,9 @@ class StockPipelineSpec extends SparkSpec {
       .toDF("ticker_symbol", "security_name", "gics_sector", "gics_sub_industry")
       .write.parquet(s"$dir/dim")
     val dim = LakeReader.read(spark, s"$dir/dim")
-    // both tables are small files: snapshot and movers each collect in
-    // one job, with no exchange and no broadcast
+    // the queries as computed on every call (StockAnalytics.Computed):
+    // both tables are small files, so snapshot and movers each collect
+    // in one job, with no exchange and no broadcast
     // (graft.functions.CoalesceSmallScans)
     def plan(df: org.apache.spark.sql.DataFrame) = df.queryExecution.executedPlan.toString
     def inOneJob[T](body: => T): T = {
@@ -235,7 +236,7 @@ class StockPipelineSpec extends SparkSpec {
       jobsStartedBy { out = Some(body) } should have size 1
       out.get
     }
-    val snap = StockAnalytics.latestSnapshot(metrics, dim)
+    val snap = StockAnalytics.Computed.latestSnapshot(metrics, dim)
     assert(!plan(snap).contains("Exchange"), plan(snap))
     val snapRows = inOneJob(snap.select("ticker", "daily_return").rows)
       .map(r => (r(0).asInstanceOf[String], r(1).asInstanceOf[Double]))
@@ -255,10 +256,12 @@ class StockPipelineSpec extends SparkSpec {
 
     // plan shape: the display sorts the windows re-sort plan no range
     // exchange
-    val trendsPlan = plan(trends)
+    val computedHist = StockAnalytics.Computed.history(metrics, Seq("AAA", "BBB"),
+      "2024-01-01", "2024-01-31")
+    val trendsPlan = plan(StockAnalytics.computeTrends(computedHist, investment = 100.0))
     // a warehouse this small is one partition: history's display sort
     // plans no range exchange either
-    val histSortPlan = plan(hist)
+    val histSortPlan = plan(computedHist)
     assert(!histSortPlan.contains("rangepartitioning"), histSortPlan)
     val moversPlan = plan(StockAnalytics.topMovers(snap, "Tech", gainers = true))
     assert(!trendsPlan.contains("rangepartitioning"), trendsPlan)
@@ -271,7 +274,7 @@ class StockPipelineSpec extends SparkSpec {
     val atScale = spark.newSession()
     atScale.conf.set("spark.sql.optimizer.excludedRules",
       graft.functions.CoalesceSmallScans.ruleName)
-    val scaleSnap = StockAnalytics.latestSnapshot(LakeReader.read(atScale, wh),
+    val scaleSnap = StockAnalytics.Computed.latestSnapshot(LakeReader.read(atScale, wh),
       LakeReader.read(atScale, s"$dir/dim"))
     val snapLines = plan(scaleSnap).linesIterator.toSeq
     val exchange = snapLines.indexWhere(_.contains("Exchange hashpartitioning(ticker"))
@@ -282,10 +285,22 @@ class StockPipelineSpec extends SparkSpec {
     scaleSnap.select("ticker", "daily_return").rows shouldBe snap.select("ticker", "daily_return").rows
 
     // history slice pushes its predicates into the parquet scan
-    val histPlan = StockAnalytics.history(metrics, Seq("AAA"), "2024-01-01", "2024-01-31")
+    val histPlan = StockAnalytics.Computed.history(metrics, Seq("AAA"), "2024-01-01", "2024-01-31")
       .queryExecution.executedPlan.toString
     assert(histPlan.contains("PushedFilters") && histPlan.contains("EqualTo(ticker,AAA)"),
       s"expected ticker pushdown in:\n$histPlan")
+
+    // served (the public calls): the same rows from the kept rows, each
+    // frame with no file scan and at most one job
+    val servedSnap = StockAnalytics.latestSnapshot(metrics, dim)
+    for (df <- Seq(servedSnap, StockAnalytics.topMovers(servedSnap, "Tech", gainers = true),
+                   hist, trends, StockAnalytics.finalRelativeReturn(trends, "AAA", "BBB"))) {
+      assert(!plan(df).contains("FileScan"), plan(df))
+      jobsStartedBy { df.collect(); () }.size should be <= 1
+    }
+    servedSnap.select("ticker", "daily_return").rows shouldBe snap.select("ticker", "daily_return").rows
+    StockAnalytics.topMovers(servedSnap, "Tech", gainers = true).select("ticker").rows
+      .map(_.head) shouldBe Seq("CCC", "AAA")
 
     // display formatting (F7) + tz conversion (F6): native expressions
     val fmt = Seq((0.01234, ts("2024-01-01"))).toDF("r", "t")
