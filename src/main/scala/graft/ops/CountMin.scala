@@ -130,6 +130,8 @@ object CountMin {
     checkShape(depth, width)
     val a = checkedCellFrame(cmsA, depth, width)
     val bSide = checkedCellFrame(cmsB, depth, width)
+    // PlanAudit sf0.1, 1 MB threshold: freq_cms_selfjoin_f2 6 exch/0 SMJ with both
+    // hints; 8/1 without this one, 7/1 without the one below
     val dots = a.join(broadcast(bSide.withColumnRenamed("cnt", "__cnt_b")),
         Seq("cms_row", "cms_bucket"))
       .groupBy(col("cms_row"))
@@ -157,7 +159,7 @@ object CountMin {
     val cells = candidates.select(col("*"),
       posexplode(array((0 until depth).map(i =>
         bucket(i, col(key), width)): _*)).as(Seq("cms_row", "cms_bucket")))
-    cells.join(broadcast(cms), Seq("cms_row", "cms_bucket"), "left")
+    cells.join(cms, Seq("cms_row", "cms_bucket"), "left")
       .groupBy(candidates.columns.map(col): _*)
       .agg(min(coalesce(col("cnt"), lit(0L))).as("cms_estimate"))
   }

@@ -113,6 +113,7 @@ object CrossSeries {
     val market = series.groupBy(col("b")).agg(sum(col("v")).as("m"))
     val w = Window.partitionBy(col("k")).orderBy(col("b"))
       .rowsBetween(-(window - 1), Window.currentRow)
+    // PlanAudit sf0.01: w_rolling_corr_market 5 exch/1 bcast with this hint, 0/0 without
     series.join(broadcast(market), Seq("b"))
       .withColumn("n", count(lit(1)).over(w))
       .withColumn("sx", sum(d38(col("v"))).over(w))
@@ -133,6 +134,7 @@ object CrossSeries {
   def betaVsMarket(series: DataFrame, minOverlap: Int = 2): DataFrame = {
     require(minOverlap >= 2, s"beta needs at least 2 shared buckets, got $minOverlap")
     val market = series.groupBy(col("b")).agg(sum(col("v")).as("m"))
+    // PlanAudit sf0.01: beta_vs_market 5 exch/1 bcast with this hint, 0/0 without
     series.join(broadcast(market), Seq("b"))
       .groupBy(col("k"))
       .agg(count(lit(1)).as("n"),
@@ -183,6 +185,7 @@ object CrossSeries {
       .agg(count(lit(1)).as("n_pairs"),
         sum(d38(col("x")) * d38(col("y"))).as("sxy"),
         sum(d38(col("x"))).as("sa"), sum(d38(col("y"))).as("sb"))
+      // PlanAudit sf0.1, 1 MB threshold: ts_acf 7 exch/1 SMJ with this hint, 8/2 without
       .join(broadcast(tot), Seq("k"))
       .withColumn("num",
         d38(col("n")) * d38(col("n")) * col("sxy") -

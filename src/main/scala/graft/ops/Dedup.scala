@@ -63,7 +63,7 @@ object Dedup {
         max(when(col("p") === 0.5, col("kll_q"))).as("size_p50"),
         max(when(col("p") === 0.95, col("kll_q"))).as("size_p95"),
         max(when(col("p") === 0.99, col("kll_q"))).as("size_p99"))
-    n.crossJoin(broadcast(est)).crossJoin(broadcast(qs))
+    Attach(Attach(n, est), qs)
   }
 
   /** Word n-gram shingles (space-joined); documents shorter than `n`
@@ -77,10 +77,11 @@ object Dedup {
   /** Engine-portable hash: the first `hexChars` hex chars of
     * md5(tag ++ x) as an unsigned long (the [[Sampling.hashBucket]]
     * trick; 8 chars → 32 bits for minhash, 15 → 60 bits for simhash,
-    * the most that fits a signed BIGINT) — any engine with md5 replays
-    * it bit-for-bit, which is what puts the hash pipelines on the hard
-    * correctness signal. ~3× the cost of xxhash64, so the non-portable
-    * defaults keep xxhash64 for the 100 TB hot path. */
+    * the most that fits a signed BIGINT). Any engine with md5 replays
+    * it bit-for-bit, which puts simhash and the portable minhash on the
+    * hard correctness signal. Minhash keeps xxhash64 as its default:
+    * which pairs LSH banding finds depends on the hash family, so the
+    * two are not interchangeable. */
   private def mdHash(tag: String, x: Column, hexChars: Int = 8): Column =
     conv(substring(md5(concat(lit(tag), x)), 1, hexChars), 16, 10).cast("long")
 
@@ -170,20 +171,19 @@ object Dedup {
 
   /** SimHash over tokens: each token's hash votes +1/-1 on every bit;
     * the sign of each bit-sum forms the signature. Near-dups differ in
-    * few bits. Default: 64-bit xxhash64 (fast). `portable = true`: a
-    * 60-bit md5-derived signature (60 = what fits a signed BIGINT from
-    * 15 hex chars) that any md5-capable engine replays bit-for-bit.
+    * few bits. The signature is 60 bits of [[mdHash]] (60 = what fits
+    * a signed BIGINT from 15 hex chars), so any md5-capable engine
+    * replays it bit-for-bit.
     *
     * Computed entirely per-row: hash every distinct token once, then fold
     * the hashes into a bit-slot vote array with `aggregate`/`zip_with` —
     * NO explode, NO groupBy, NO shuffle (the previous explode+groupBy
     * form shuffled docs×tokens rows; this is a pure map stage). */
-  def simhash(df: DataFrame, id: String, text: String,
-              portable: Boolean = false): DataFrame = {
-    val bits = if (portable) 60 else 64
+  def simhash(df: DataFrame, id: String, text: String): DataFrame = {
+    val bits = 60
     val masks = array((0 until bits).map(i => lit(1L << i)): _*)
     val hashes = transform(array_distinct(TextAnalysis.tokens(col(text))),
-      t => if (portable) mdHash("sh:", t, hexChars = 15) else xxhash64(t))
+      t => mdHash("sh:", t, hexChars = 15))
     val votes = aggregate(hashes, array_repeat(lit(0), bits),
       (acc, h) => zip_with(acc, masks,
         (a, m) => a + when(h.bitwiseAND(m) === m, 1).otherwise(-1)))
@@ -197,17 +197,16 @@ object Dedup {
 
 
   /** (id, simhash, chunk, bucket) — each signature bucketed under its
-    * four 16-bit (15-bit portable) chunks; shared by the pair join and
-    * the cap observer so both see the identical bucketing. */
-  private def simhashChunkBuckets(df: DataFrame, id: String, text: String,
-                                  portable: Boolean): DataFrame = {
-    val sig = simhash(df, id, text, portable)
-    // 4 chunks of 16 (64-bit) or 15 (60-bit portable) bits — pigeonhole
-    // recall at hamming ≤ 3 holds for any 4-way disjoint chunking
-    val (cb, cm) = if (portable) (15, 0x7FFFL) else (16, 0xFFFFL)
+    * four 15-bit chunks; shared by the pair join and the cap observer
+    * so both see the identical bucketing. */
+  private def simhashChunkBuckets(df: DataFrame, id: String,
+                                  text: String): DataFrame = {
+    val sig = simhash(df, id, text)
+    // 4 chunks of 15 bits — pigeonhole recall at hamming ≤ 3 holds for
+    // any 4-way disjoint chunking
     val chunks = array((0 until 4).map { i =>
       struct(lit(i).as("chunk"),
-        shiftright(col("simhash"), i * cb).bitwiseAND(lit(cm)).as("bucket"))
+        shiftright(col("simhash"), i * 15).bitwiseAND(lit(0x7FFFL)).as("bucket"))
     }: _*)
     sig.select(col(id), col("simhash"), explode(chunks).as("cb"))
       .select(col(id), col("simhash"), col("cb.chunk").as("chunk"),
@@ -220,24 +219,22 @@ object Dedup {
     * surface this frame so dropped recall is measured, never assumed.
     * Empty output proves the cap never fired on this input. */
   def simhashDroppedBuckets(df: DataFrame, id: String, text: String,
-                            maxBucket: Int = 10000,
-                            portable: Boolean = false): DataFrame =
-    simhashChunkBuckets(df, id, text, portable)
+                            maxBucket: Int = 10000): DataFrame =
+    simhashChunkBuckets(df, id, text)
       .groupBy(col("chunk"), col("bucket"))
       .agg(count(lit(1)).as("n_members"))
       .filter(col("n_members") > maxBucket)
 
   /** SimHash near-duplicate pairs via the standard 4-table chunk scheme:
-    * each signature buckets under its four 16-bit chunks; by pigeonhole,
+    * each signature buckets under its four 15-bit chunks; by pigeonhole,
     * any pair within Hamming distance ≤ 3 agrees exactly on at least one
     * chunk, so candidate recall is GUARANTEED at maxBits ≤ 3 (and high
     * above it). Candidates verify with bit_count over XOR — built-in,
     * codegen'd, no custom expression. Join cost is bounded per
     * (chunk, bucket), never corpus². */
   def simhashNearDup(df: DataFrame, id: String, text: String,
-                     maxBits: Int = 3, maxBucket: Int = 10000,
-                     portable: Boolean = false): DataFrame = {
-    val bucketed = simhashChunkBuckets(df, id, text, portable)
+                     maxBits: Int = 3, maxBucket: Int = 10000): DataFrame = {
+    val bucketed = simhashChunkBuckets(df, id, text)
     val sized = bucketed.withColumn("bsize",
       count(lit(1)).over(org.apache.spark.sql.expressions.Window
         .partitionBy(col("chunk"), col("bucket"))))
@@ -527,7 +524,7 @@ object Dedup {
     val docGrams = docs.select(col(id),
       explode(array_distinct(shingles(TextAnalysis.tokens(col(text)), shingleSize)))
         .as("gram"))
-    val hits = docGrams.join(broadcast(benchGrams), Seq("gram"))
+    val hits = docGrams.join(benchGrams, Seq("gram"))
       .groupBy(col(id)).agg(count(lit(1)).as("n_contaminated_grams"))
     docs.select(col(id))
       .join(hits, Seq(id), "left")

@@ -86,7 +86,7 @@ object Eval {
       (sum((col("n_bin").cast("double") * abs(col("__rate") - col("__conf")))
         .cast("decimal(30,12)")).cast("double") /
         sum(col("n_bin")).cast("double")).as("__ece"))
-    byBin.crossJoin(broadcast(ece))
+    Attach(byBin, ece)
       .select(col("bin"), col("n_bin"),
         col("__conf").cast("float").as("mean_score"),
         col("__rate").cast("float").as("rate"),
@@ -128,18 +128,15 @@ object Eval {
     val cum = Ranking.withRunningTotals(vc, keys, Seq(col(residual)),
       Seq("__c" -> "__cum"))
     val tot = cum.groupBy(keys.map(col): _*).agg(sum(col("__c")).as("__n"))
-    val withTot =
-      if (keys.isEmpty) cum.crossJoin(broadcast(tot))
-      else cum.as("__a").join(broadcast(tot).as("__b"),
-          keys.map(k => col(s"__a.$k") <=> col(s"__b.$k")).reduce(_ && _))
-        .select(cum.columns.map(c => col(s"__a.$c")) :+ col("__b.__n"): _*)
     // k* = min(⌈(n+1)(1−α)⌉, n) in integer arithmetic:
     // ⌈(n+1)(1−α)⌉ computed as ceil of a double product — the same
     // fixed chain in both engines; the pick itself is pure integers
     val kStar = least(
       ceil((col("__n").cast("double") + lit(1.0)) * lit(1.0 - alpha)),
       col("__n"))
-    withTot
+    // keyed, the broadcast keeps eval_conformal_interval at 15 exchanges
+    // and 1 SMJ (19 and 3 without it, PlanBudgetSpec)
+    Attach(cum, broadcast(tot), keys)
       .filter(col("__cum") - col("__c") < kStar && kStar <= col("__cum"))
       .select(keys.map(col) ++ Seq(
         col("__n").as("n_cal"),
@@ -175,10 +172,11 @@ object Eval {
         sum(lit(1L) - col("__y").cast("long")).as("__neg"))
     val tot = byBin.agg(sum(col("__pos")).as("__p"), sum(col("__neg")).as("__n"))
     val cum = byBin.as("a")
+      // PlanAudit: eval_roc_points 5 exch with this hint, 6 without (sf0.01 and sf0.1)
       .join(broadcast(byBin.as("b")), col("b.bin") >= col("a.bin"))
       .groupBy(col("a.bin").as("bin"))
       .agg(sum(col("b.__pos")).as("n_pos_ge"), sum(col("b.__neg")).as("n_neg_ge"))
-    cum.crossJoin(broadcast(tot))
+    Attach(cum, tot)
       .select(
         (col("bin").cast("double") / lit(bins.toDouble))
           .cast("float").as("threshold"),
@@ -216,13 +214,14 @@ object Eval {
         sum(lit(1L) - col("__y").cast("long")).as("__neg"))
     val tot = byBin.agg(sum(col("__pos")).as("__p"))
     val cum = byBin.as("a")
+      // PlanAudit: eval_pr_points 5 exch with this hint, 6 without (sf0.01 and sf0.1)
       .join(broadcast(byBin.as("b")), col("b.bin") >= col("a.bin"))
       .groupBy(col("a.bin").as("bin"))
       .agg(sum(col("b.__pos")).as("n_pos_ge"), sum(col("b.__neg")).as("n_neg_ge"))
     val prec = col("n_pos_ge").cast("double") /
       (col("n_pos_ge") + col("n_neg_ge")).cast("double")
     val rec = col("n_pos_ge").cast("double") / col("__p").cast("double")
-    cum.crossJoin(broadcast(tot))
+    Attach(cum, tot)
       .select(
         (col("bin").cast("double") / lit(bins.toDouble))
           .cast("float").as("threshold"),
@@ -256,12 +255,13 @@ object Eval {
       .agg(sum(col("__y").cast("long")).as("__pos"),
         sum(lit(1L) - col("__y").cast("long")).as("__neg"))
     val cum = byBin.as("a")
+      // PlanAudit: eval_avg_precision 5 exch with this hint, 6 without (sf0.01 and sf0.1)
       .join(broadcast(byBin.as("b")), col("b.bin") >= col("a.bin"))
       .groupBy(col("a.bin").as("bin"))
       .agg(max(col("a.__pos")).as("__pos"),
         sum(col("b.__pos")).as("n_pos_ge"), sum(col("b.__neg")).as("n_neg_ge"))
     val tot = byBin.agg(sum(col("__pos")).as("__p"), sum(col("__neg")).as("__n"))
-    cum.crossJoin(broadcast(tot))
+    Attach(cum, tot)
       .groupBy(col("__p"), col("__n"))
       .agg(sum((col("__pos").cast("double") *
           (col("n_pos_ge").cast("double") /
@@ -318,7 +318,7 @@ object Eval {
         sum(col("__x")).as("__px"), sum(col("__se")).as("__sse"))
       .select(col("__n"), col("__sse"),
         (col("__px").cast("double") / col("__n").cast("double")).as("__ybar"))
-    val terms = byBin.crossJoin(broadcast(tot))
+    val terms = Attach(byBin, tot)
       .select(col("__n"), col("__sse"), col("__ybar"),
         col("n_bin"),
         (col("__x").cast("double") / col("n_bin").cast("double")).as("__rate"),
@@ -374,11 +374,12 @@ object Eval {
     // running totals over ≤ k band rows: a self-join triangular sum —
     // bounded by k, never the data, no window
     val cum = byBand.as("a")
+      // PlanAudit: eval_cumulative_gains 20 exch with this hint, 21 without (sf0.01 and sf0.1)
       .join(broadcast(byBand.as("b")), col("b.band") <= col("a.band"))
       .groupBy(col("a.band").as("band"))
       .agg(max(col("a.n_band")).as("n_band"), max(col("a.n_pos")).as("n_pos"),
         sum(col("b.n_band")).as("__cn"), sum(col("b.n_pos")).as("__cp"))
-    cum.crossJoin(broadcast(tot))
+    Attach(cum, tot)
       .select(col("band"), col("n_band"), col("n_pos"),
         (col("__cp").cast("double") / col("__p").cast("double"))
           .cast("float").as("cum_pos_share"),

@@ -75,8 +75,7 @@ object Features {
     val w = exp(lit(-math.log(2.0)) *
       (col("__wm") - col(tsNanos)).cast("double") /
       lit(halfLifeNanos.toDouble))
-    df.filter(col(tsNanos).isNotNull)
-      .crossJoin(broadcast(wm))
+    Attach(df.filter(col(tsNanos).isNotNull), wm)
       .withColumn("__w", w)
       .groupBy(col(key))
       .agg(
@@ -172,7 +171,7 @@ object Features {
           (lit(1.0) - col("__m")) *
             (col("__m") * (lit(1.0) - col("__m")) / col("__v") - lit(1.0)))
           .as("beta"))
-    perKey.crossJoin(broadcast(prior.select(col("alpha"), col("beta"))))
+    Attach(perKey, prior.select(col("alpha"), col("beta")))
       .select(col(key), col("n"), col("x"),
         col("rate_raw").cast("float").as("rate_raw"),
         col("alpha").cast("float").as("alpha"),

@@ -227,7 +227,7 @@ object Graph {
       .distinct()
     val outdeg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("outdeg"))
     val nd = Cut(nodes.join(outdeg, Seq("id"), "left")
-      .join(broadcast(sd.withColumn("is_seed", lit(true))), Seq("id"), "left")
+      .join(sd.withColumn("is_seed", lit(true)), Seq("id"), "left")
       .withColumn("is_seed", coalesce(col("is_seed"), lit(false))))
     val ns = sd.count()
     require(ns > 0, "personalizedPageRank needs a non-empty seed set")
@@ -242,7 +242,7 @@ object Graph {
         .select(col("dst").as("id"), (col("pr") / col("outdeg")).as("c"))
       val inflow = contrib.groupBy(col("id"))
         .agg(sum(d30(col("c"))).cast("double").as("inflow"))
-      Cut(nd.join(inflow, Seq("id"), "left").crossJoin(broadcast(dm))
+      Cut(Attach(nd.join(inflow, Seq("id"), "left"), dm)
         .select(col("id"), col("outdeg"), col("is_seed"),
           (lit(1 - damping) * sv + lit(damping) *
             (coalesce(col("inflow"), lit(0.0)) + col("dm") * sv)).as("pr")))
@@ -507,16 +507,14 @@ object Graph {
         .groupBy(col("dst").as("id"))
         .agg(sum(d30(col("h"))).cast("double").as("__ar"))
       val aTot = aRaw.agg(sum(d30(col("__ar"))).cast("double").as("__at"))
-      val aN = st.select(col("id")).join(aRaw, Seq("id"), "left")
-        .crossJoin(broadcast(aTot))
+      val aN = Attach(st.select(col("id")).join(aRaw, Seq("id"), "left"), aTot)
         .select(col("id"),
           (coalesce(col("__ar"), lit(0.0)) / col("__at")).as("a"))
       val hRaw = aN.join(e, col("id") === col("dst"))
         .groupBy(col("src").as("id"))
         .agg(sum(d30(col("a"))).cast("double").as("__hr"))
       val hTot = hRaw.agg(sum(d30(col("__hr"))).cast("double").as("__ht"))
-      Cut(aN.join(hRaw, Seq("id"), "left")
-        .crossJoin(broadcast(hTot))
+      Cut(Attach(aN.join(hRaw, Seq("id"), "left"), hTot)
         .select(col("id"), col("a"),
           (coalesce(col("__hr"), lit(0.0)) / col("__ht")).as("h")))
     }
@@ -558,7 +556,7 @@ object Graph {
         .select(col("dst").as("id"), (col("pr") / col("outdeg")).as("c"))
       val inflow = contrib.groupBy(col("id"))
         .agg(sum(d30(col("c"))).cast("double").as("inflow"))
-      Cut(nd.join(inflow, Seq("id"), "left").crossJoin(broadcast(dm))
+      Cut(Attach(nd.join(inflow, Seq("id"), "left"), dm)
         .select(col("id"), col("outdeg"),
           (lit(1 - damping) / lit(n) + lit(damping) *
             (coalesce(col("inflow"), lit(0.0)) + col("dm") / lit(n))).as("pr")))

@@ -83,23 +83,6 @@ object Kll {
         (if (keys.isEmpty) "" else ", ") +
         s"kll_value, kll_weight), got: ${sk.columns.mkString(", ")}")
 
-  /** Null-safe per-group join of the 1-row-per-group totals frame
-    * back onto the cumulated ledger (a null key is a group — the
-    * [[Percentiles]] convention). The broadcast hint applies ONLY to
-    * the unkeyed 1-row case: the keyed totals frame is GROUPS-sized
-    * (per-key sketches over millions of groups is exactly the
-    * segmented-quantiles case this class advertises), so the keyed
-    * branch is a plain null-safe equi-join — AQE broadcasts it while
-    * it fits and shuffle-partitions it by key when it doesn't, and
-    * neither the driver nor a broadcast ever holds the full keyed
-    * frame. */
-  private def joinTot(cum: DataFrame, tot: DataFrame,
-                      keys: Seq[String]): DataFrame =
-    if (keys.isEmpty) cum.crossJoin(broadcast(tot))
-    else cum.as("__a").join(tot.as("__b"),
-        keys.map(kk => col(s"__a.$kk") <=> col(s"__b.$kk")).reduce(_ && _))
-      .select(cum.columns.map(c => col(s"__a.$c")) :+ col("__b.__w"): _*)
-
   /** One systematic-rank compaction per group of a (keys…, kll_value,
     * kll_weight) ledger down to ≤ k rows per group — the multiway
     * merge primitive: weights for the same (group, value) are summed
@@ -138,7 +121,7 @@ object Kll {
     val cum = Ranking.withRunningTotals(folded, keys, Seq(col("kll_value")),
       Seq("kll_weight" -> "__cum"))
     val tot = cum.groupBy(keyCols: _*).agg(sum(col("kll_weight")).as("__w"))
-    joinTot(cum, tot, keys)
+    Attach(cum, tot, keys)
   }
 
   /** The systematic-rank keep over a [[cumulate]]d ledger — the
@@ -189,6 +172,7 @@ object Kll {
         col("kll_value").as("exact_q")): _*)
     // the exact-pick frame is groups × ps rows — broadcast only the
     // unkeyed (ps-sized) case; keyed, the equi-join partitions by key
+    // PlanAudit: freq_kll_quantiles 8 exch/0 SMJ with this hint, 10/1 without (sf0.01 and sf0.1)
     q.join(if (keys.isEmpty) broadcast(exact) else exact, keys :+ "p")
       .select(keys.map(col) ++ Seq(col("p"), col("kll_q"), col("exact_q"),
         col("n_weight")): _*)
@@ -293,7 +277,7 @@ object Kll {
       .agg(sum(col("b.kll_weight")).as("__cw"),
         max(col("a.kll_weight")).as("__c"))
     val tot = sk.groupBy(keyCols: _*).agg(sum(col("kll_weight")).as("__w"))
-    joinTot(cw, tot, keys)
+    Attach(cw, tot, keys)
       .withColumn("p", explode(array(ps.map(lit): _*)))
       .filter(col("__cw") - col("__c") < ceil(col("p") * col("__w")) &&
         ceil(col("p") * col("__w")) <= col("__cw"))

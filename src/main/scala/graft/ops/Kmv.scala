@@ -159,8 +159,8 @@ object Kmv {
     val (a, b) = (cutKmv(skA, k), cutKmv(skB, k))
     val l = Cut(mergeCut(k, Seq(a, b)))
     val common = l
-      .join(broadcast(a), Seq("kmv_hash"), "left_semi")
-      .join(broadcast(b), Seq("kmv_hash"), "left_semi")
+      .join(a, Seq("kmv_hash"), "left_semi")
+      .join(b, Seq("kmv_hash"), "left_semi")
       .agg(count(lit(1)).as("n_common"))
     // the union estimate at FULL double precision: the intersection
     // product must consume the untruncated double (going through the
@@ -175,7 +175,7 @@ object Kmv {
             col("n_union_hashes").cast("double"))
           .otherwise(lit((k - 1).toDouble) * lit(math.pow(2.0, HashBits)) /
             col("__hk").cast("double")).as("__u"))
-    common.crossJoin(unionEst)
+    Attach(common, unionEst)
       .select(
         when(col("n_union_hashes") > 0,
           (col("n_common").cast("double") /

@@ -60,12 +60,11 @@ object Market {
     val (itemCounts, nBaskets, inPlay) =
       frequentPresence(df, basket, item, minSupport, maxBasketItems)
     val pairs = pairCounts(inPlay, minPairSupport)
-    pairs
+    Attach(pairs
       .join(itemCounts.select(col("__item").as("item_a"),
         col("n_i").as("n_a")), "item_a")
       .join(itemCounts.select(col("__item").as("item_b"),
-        col("n_i").as("n_b")), "item_b")
-      .crossJoin(broadcast(nBaskets))
+        col("n_i").as("n_b")), "item_b"), nBaskets)
       .select(col("item_a"), col("item_b"),
         col("n_a"), col("n_b"), col("n_ab"),
         (col("n_ab").cast("double") / col("n_baskets").cast("double"))
@@ -139,7 +138,7 @@ object Market {
       .agg(count(lit(1)).as("n_abc"))
       .filter(col("n_abc") >= minTripleSupport)
     val dbl = (c: Column) => c.cast("double")
-    tri
+    Attach(tri
       .join(fp.select(col("item_a"), col("item_b"), col("n_ab")),
         Seq("item_a", "item_b"))
       .join(fp.select(col("item_a"), col("item_b").as("item_c"),
@@ -151,8 +150,7 @@ object Market {
       .join(itemCounts.select(col("__item").as("item_b"),
         col("n_i").as("n_b")), "item_b")
       .join(itemCounts.select(col("__item").as("item_c"),
-        col("n_i").as("n_c")), "item_c")
-      .crossJoin(broadcast(nBaskets))
+        col("n_i").as("n_c")), "item_c"), nBaskets)
       .select(col("item_a"), col("item_b"), col("item_c"),
         col("n_ab"), col("n_ac"), col("n_bc"), col("n_abc"),
         (dbl(col("n_abc")) / dbl(col("n_baskets")))

@@ -49,6 +49,7 @@ object Moments {
     // (Resample.scala): re-runs the μ aggregation once but only ever
     // scans maxBroadcastGroups+1 of its rows.
     val over = mu.limit(maxBroadcastGroups + 1).count() > maxBroadcastGroups
+    // PlanAudit sf0.1, 1 MB threshold: agg_skew_kurt 3 exch with this hint, 2 without
     val muSide = if (over) mu else broadcast(mu)
     val d = col("__x") - col("__mu")
     val t = in.join(muSide, keys)

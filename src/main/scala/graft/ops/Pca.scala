@@ -18,12 +18,8 @@ import org.apache.spark.sql.functions._
   * exact covariance is inherently O(n·d²) COMPUTE, and the expansion
   * pays it per row (d=256 → 33k products/row is fine; d=4096 → 8.4M
   * products/row means every core does 8.4M multiplies per vector —
-  * that's a compute wall no partitioning fixes). Past ~1k dims the
-  * production answer is [[covarianceSampled]] (deterministic row
-  * subsample — covariance is an expectation, so a hash-chosen sample
-  * estimates it with ~1/√m error at m rows and cuts n, the axis that
-  * is actually huge) or a sketched pass; this exact form is for
-  * d ≲ 1024.
+  * that's a compute wall no partitioning fixes). This exact form is
+  * for d ≲ 1024.
   *
   * Exactness: every sum quantizes its double terms to DECIMAL(30,12)
   * first (order-independent, cross-engine identical — the repo's
@@ -72,32 +68,12 @@ object Pca {
       .groupBy(col("i"))
       .agg((sum(pico(col("x"))).cast("double") / lit(1e12)).as("s"))
     val n = v.agg(count(lit(1)).as("n"))
-    sums
-      .join(broadcast(dimSums.select(col("i"), col("s").as("s_i"))), "i")
-      .join(broadcast(dimSums.select(col("i").as("j"), col("s").as("s_j"))), "j")
-      .crossJoin(broadcast(n))
+    Attach(sums
+      .join(dimSums.select(col("i"), col("s").as("s_i")), "i")
+      .join(dimSums.select(col("i").as("j"), col("s").as("s_j")), "j"), n)
       .select(col("i"), col("j"),
         ((col("s_ij") - (col("s_i") * col("s_j")) / col("n")) /
           (col("n") - lit(1))).as("cov"))
-  }
-
-  /** Sample covariance over a DETERMINISTIC row subsample: keep rows
-    * whose md5-bucket of `id` falls under `keepPct` (the
-    * [[Sampling.hashBucket]] contract — a row's fate is a pure function
-    * of its id, so the estimate replays bit-for-bit across runs,
-    * retries and engines), then run the exact quantized pass on the
-    * survivors. This is the prescribed path past ~1k dims: it divides
-    * the O(n·d²) compute by 100/keepPct while the d²-cell shuffle
-    * contract is unchanged, and the standard error of each cell decays
-    * as 1/√(sampled rows) — at 100 TB a 1% sample is still ~1e9 rows,
-    * far past where the estimate has converged for curation use. */
-  def covarianceSampled(df: DataFrame, id: String, vec: String,
-                        keepPct: Int): DataFrame = {
-    require(keepPct >= 1 && keepPct <= 100,
-      s"keepPct must be in [1, 100], got $keepPct")
-    covariance(
-      df.filter(Sampling.hashBucket(col(id), 100, tag = "cov:") < keepPct),
-      vec)
   }
 
   /** Dominant eigenvector of the covariance as a (i, val) frame via
@@ -155,7 +131,7 @@ object Pca {
               component: DataFrame): DataFrame =
     df.filter(col(vec).isNotNull)
       .select(col(id), posexplode(col(vec)).as(Seq("i", "x")))
-      .join(broadcast(component), "i")
+      .join(component, "i")
       .groupBy(col(id))
       .agg(sum(d30(col("x").cast("double") * col("val"))).cast("double")
         .as("pc1"))

@@ -43,18 +43,12 @@ object Percentiles {
       .agg(count(lit(1)).as("__c"))
     val cum = Ranking.withRunningTotals(vc, keys, Seq(col(value)),
       Seq("__c" -> "__cum"))
-    // per-key totals off the checkpointed ledger, joined back
-    // null-safely (a null key is a group, and must not fall out)
+    // per-key totals off the checkpointed ledger
     val tot = cum.groupBy(keys.map(col): _*).agg(sum(col("__c")).as("__n"))
-    val withTot =
-      if (keys.isEmpty) cum.crossJoin(broadcast(tot))
-      else cum.as("__a").join(tot.as("__b"),
-          keys.map(k => col(s"__a.$k") <=> col(s"__b.$k")).reduce(_ && _))
-        .select(cum.columns.map(c => col(s"__a.$c")) :+ col("__b.__n"): _*)
     // the value AT rank ⌈p·n⌉: ⌈p·n⌉ lands inside exactly one distinct
     // value's [cum−c+1, cum] — same row the per-key row_number picked,
     // same ceil arithmetic, so results replay bit-identically
-    withTot
+    Attach(cum, tot, keys)
       .withColumn("p", explode(array(ps.map(lit): _*)))
       .filter(col("__cum") - col("__c") < ceil(col("p") * col("__n")) &&
         ceil(col("p") * col("__n")) <= col("__cum"))
@@ -95,6 +89,7 @@ object Percentiles {
     // ever scans maxBroadcastGroups+1 of its rows.
     val over =
       bounds.limit(maxBroadcastGroups + 1).count() > maxBroadcastGroups
+    // PlanAudit: sample_winsorize 1 SMJ fewer with this hint (sf0.01 and sf0.1)
     val boundsSide = if (over) bounds else broadcast(bounds)
     df.join(boundsSide, keys, "left")
       .withColumn("winsorized",
@@ -138,29 +133,21 @@ object Percentiles {
       .agg(count(lit(1)).as("__c")))
     val tot = vc.groupBy(keyCols: _*).agg(sum(col("__c")).as("__n"))
     // rank-⌈n/2⌉ selection over a cumulated ledger: the shared close
-    // for both passes (null-safe on the keys — a null key is a group)
-    def pickMedian(cum: DataFrame, v: String, out: String): DataFrame = {
-      val withTot =
-        if (keys.isEmpty) cum.crossJoin(broadcast(tot))
-        else cum.as("__a").join(broadcast(tot).as("__b"),
-            keys.map(k => col(s"__a.$k") <=> col(s"__b.$k")).reduce(_ && _))
-          .select(cum.columns.map(c => col(s"__a.$c")) :+ col("__b.__n"): _*)
-      withTot
+    // for both passes
+    def pickMedian(cum: DataFrame, v: String, out: String): DataFrame =
+      Attach(cum, tot, keys)
         .filter(col("__cum") - col("__c") < ceil(col("__n") * 0.5) &&
           ceil(col("__n") * 0.5) <= col("__cum"))
         .select(keyCols :+ col(v).as(out): _*)
-    }
     val med = pickMedian(
       Ranking.withRunningTotals(vc, keys, Seq(col(value)),
         Seq("__c" -> "__cum")), value, "med")
     // deviation ledger FOLDED FROM THE VALUE LEDGER (med is ≤ one row
-    // per key — broadcast onto the ledger, never onto the data)
-    val medSide = broadcast(med)
+    // per key — joined onto the ledger, never onto the data). Unkeyed,
+    // med is one row the analyzer cannot bound (a filter over the
+    // ledger), so the cross join is written out with its broadcast.
     val devLedger = (
-      if (keys.isEmpty) vc.crossJoin(medSide)
-      else vc.as("__v").join(medSide.as("__m"),
-          keys.map(k => col(s"__v.$k") <=> col(s"__m.$k")).reduce(_ && _))
-        .select(vc.columns.map(c => col(s"__v.$c")) :+ col("__m.med"): _*))
+      if (keys.isEmpty) vc.crossJoin(broadcast(med)) else Attach(vc, med, keys))
       .select(keyCols ++ Seq(abs(col(value) - col("med")).as("__dev"),
         col("__c")): _*)
       .groupBy((keyCols :+ col("__dev")): _*)
@@ -168,10 +155,8 @@ object Percentiles {
     val mad = pickMedian(
       Ranking.withRunningTotals(devLedger, keys, Seq(col("__dev")),
         Seq("__c" -> "__cum")), "__dev", "mad")
-    if (keys.isEmpty) med.crossJoin(mad)
-    else med.as("__x").join(mad.as("__y"),
-        keys.map(k => col(s"__x.$k") <=> col(s"__y.$k")).reduce(_ && _))
-      .select(med.columns.map(c => col(s"__x.$c")) :+ col("__y.mad"): _*)
+    // unkeyed, both sides are one row the analyzer cannot bound
+    if (keys.isEmpty) med.crossJoin(mad) else Attach(med, mad, keys)
   }
 
   /** Weighted median per group: the smallest value whose cumulative
@@ -203,15 +188,9 @@ object Percentiles {
     val cum = Ranking.withRunningTotals(vw, keys, Seq(col("__v")),
       Seq("__w" -> "__cum"))
     // per-key totals off the checkpointed ledger (map-side combined, ≤
-    // |keys| rows), joined back null-safely — a null key is a group
+    // |keys| rows)
     val tot = cum.groupBy(keys.map(col): _*).agg(sum(col("__w")).as("__tot"))
-    val withTot =
-      if (keys.isEmpty) cum.crossJoin(broadcast(tot))
-      else cum.as("__c").join(tot.as("__t"),
-          keys.map(k => col(s"__c.$k") <=> col(s"__t.$k")).reduce(_ && _))
-        .select(cum.columns.map(c => col(s"__c.$c")) :+
-          col("__t.__tot"): _*)
-    withTot.filter(col("__cum") * 2 >= col("__tot"))
+    Attach(cum, tot, keys).filter(col("__cum") * 2 >= col("__tot"))
       .groupBy(keys.map(col): _*)
       .agg(min(col("__v")).as("weighted_median"),
         max(col("__tot")).as("total_weight"))
@@ -245,10 +224,7 @@ object Percentiles {
     * combined), [[Ranking.withRunningTotals]] cumulates the ledger
     * distributed, the p-list explodes over ledger rows, the pick is a
     * pure filter — no per-group sort, no single-task window. The
-    * totals join carries a broadcast hint ONLY unkeyed (1 row): keyed,
-    * the frame is GROUPS-sized, so the plain equi-join lets AQE
-    * broadcast while it fits and shuffle-partition by key when it
-    * doesn't. */
+    * totals ride [[Attach]]. */
   def weightedNearestRank(df: DataFrame, keys: Seq[String], value: String,
                           weight: String, ps: Seq[Double]): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p > 0 && p <= 1),
@@ -268,13 +244,7 @@ object Percentiles {
     val cum = Ranking.withRunningTotals(vw, keys, Seq(col("__v")),
       Seq("__w" -> "__cum"))
     val tot = cum.groupBy(keys.map(col): _*).agg(sum(col("__w")).as("__tot"))
-    val withTot =
-      if (keys.isEmpty) cum.crossJoin(broadcast(tot))
-      else cum.as("__c").join(tot.as("__t"),
-          keys.map(k => col(s"__c.$k") <=> col(s"__t.$k")).reduce(_ && _))
-        .select(cum.columns.map(c => col(s"__c.$c")) :+
-          col("__t.__tot"): _*)
-    withTot
+    Attach(cum, tot, keys)
       .withColumn("p", explode(array(ps.map(lit): _*)))
       .filter(col("__cum") - col("__w") < ceil(col("p") * col("__tot")) &&
         ceil(col("p") * col("__tot")) <= col("__cum"))
@@ -306,7 +276,7 @@ object Percentiles {
       Seq("c" -> "cum"))
     // total off the checkpointed ledger, never a second data scan
     val n = cum.agg(sum(col("c")).as("n"))
-    cum.crossJoin(broadcast(n))
+    Attach(cum, n)
       .withColumn("bucket",
         expr(s"(cum * $buckets + n - 1) div n"))
       .groupBy(col("bucket"))

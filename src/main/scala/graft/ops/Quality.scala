@@ -176,7 +176,7 @@ object Quality {
       .select(substring(cents.cast("string"), 1, 1).cast("int").as("digit"))
       .groupBy(col("digit")).agg(count(lit(1)).as("n"))
     val total = counts.agg(sum(col("n")).as("total"))
-    counts.crossJoin(broadcast(total))
+    Attach(counts, total)
       .withColumn("expected_share",
         log(10.0, lit(1.0) + lit(1.0) / col("digit")))
       .select(col("digit"), col("n"),
@@ -217,7 +217,7 @@ object Quality {
     // totals off the ledger the prefix sum already checkpointed — the
     // two corpus-sized histogram scans are never re-executed
     val totals = f.agg(sum(col("__c1")).as("__n1"), sum(col("__c2")).as("__n2"))
-    f.crossJoin(broadcast(totals))
+    Attach(f, totals)
       // an ECDF over zero observations is undefined — surface a clear
       // message instead of a bare ANSI divide-by-zero
       .where(assert_true(col("__n1") > 0 && col("__n2") > 0,
@@ -259,7 +259,7 @@ object Quality {
     val totals = f.agg(sum(col("__c1")).as("__n1"), sum(col("__c2")).as("__n2"))
     val gap = col("__f1").cast("double") / col("__n1").cast("double") -
       col("__f2").cast("double") / col("__n2").cast("double")
-    f.crossJoin(broadcast(totals))
+    Attach(f, totals)
       .where(assert_true(col("__n1") > 0 && col("__n2") > 0,
         lit("cvmDrift: a snapshot has no non-null values")).isNull)
       .agg(
@@ -307,7 +307,7 @@ object Quality {
     val contrib = (p - q) * log(p / q)
     val w = org.apache.spark.sql.expressions.Window
       .rowsBetween(Long.MinValue, Long.MaxValue)
-    joined.crossJoin(broadcast(totals))
+    Attach(joined, totals)
       .withColumn("contribution", contrib)
       .withColumn("psi_total",
         sum(col("contribution").cast("decimal(30,12)")).over(w)
@@ -352,7 +352,7 @@ object Quality {
       q * log(lit(2.0) * q / (p + q))) * lit(0.5)
     val w = org.apache.spark.sql.expressions.Window
       .rowsBetween(Long.MinValue, Long.MaxValue)
-    joined.crossJoin(broadcast(totals))
+    Attach(joined, totals)
       .withColumn("contribution", contrib)
       .withColumn("jsd_total",
         sum(col("contribution").cast("decimal(30,12)")).over(w)
@@ -401,8 +401,8 @@ object Quality {
     val orphan = c.join(
       parent.select(col(parentKey).as(childKey)).distinct(),
       Seq(childKey), "left_anti")
-    c.agg(count(lit(1)).as("n_child"))
-      .crossJoin(orphan.agg(count(lit(1)).as("n_orphans")))
+    Attach(c.agg(count(lit(1)).as("n_child")),
+        orphan.agg(count(lit(1)).as("n_orphans")))
       .select(lit(name).as("fk"), col("n_child"), col("n_orphans"))
   }
 }

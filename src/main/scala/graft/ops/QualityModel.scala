@@ -93,7 +93,7 @@ object QualityModel {
       count(lit(1)).as("__v"),
       sum(col("tf_pos")).as("__npos"),
       sum(col("tf_neg")).as("__nneg"))
-    vocab.crossJoin(broadcast(scal))
+    Attach(vocab, scal)
       .withColumn("w",
         d12(log((col("tf_pos") + 1).cast("double") /
                 (col("__npos") + col("__v")).cast("double"))) -
@@ -123,6 +123,7 @@ object QualityModel {
     val zero = lit(0).cast("decimal(20,12)")
     val wt = weights.select(col("token"), col("w"))
     val over = wt.limit(maxBroadcastVocab + 1).count() > maxBroadcastVocab
+    // PlanAudit sf0.1, 1 MB threshold: text_quality_nb 3 exch/0 SMJ with this hint, 5/1 without
     val wtSide = if (over) wt else broadcast(wt)
     // explode_outer keeps zero-token documents as a null-token row, so
     // every input document gets a scored output row in the same pass —

@@ -88,9 +88,8 @@ object Ranking {
     // total n = sum of the ledger's per-partition counts (one tiny agg)
     val total = counts.agg(coalesce(sum(col("__c")), lit(0L)).as("__n"))
     val w = Window.partitionBy(col("__pid")).orderBy(order: _*)
-    ranged.withColumn("__lr", row_number().over(w).cast("long"))
-      .join(broadcast(offs), Seq("__pid"))
-      .crossJoin(broadcast(total))
+    Attach(ranged.withColumn("__lr", row_number().over(w).cast("long"))
+      .join(broadcast(offs), Seq("__pid")), total)
       .withColumn(out, expr(
         s"""CASE WHEN (__off + __lr) <= ((__n div ${k}L) + 1L) * (__n % ${k}L)
            |THEN ((__off + __lr) + (__n div ${k}L)) div ((__n div ${k}L) + 1L)
@@ -185,10 +184,9 @@ object Ranking {
     val total = parts.agg(coalesce(sum(col("__pc")), lit(0L)).as("__n"))
     val w = Window.partitionBy(col("__pid")).orderBy(oc: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val scored = ledger
+    val scored = Attach(ledger
       .withColumn("__cl", sum(col("__c")).over(w))
-      .join(broadcast(offs), Seq("__pid"))
-      .crossJoin(broadcast(total))
+      .join(broadcast(offs), Seq("__pid")), total)
       .withColumn("__cum", col("__coff") + col("__cl"))
       .withColumn(pctOut,
         when(col("__n") === 1L, lit(0.0))

@@ -59,9 +59,9 @@ object Retrieval {
     val lenNorm = lit(0.25) + ((lit(0.75) * d(col("dl"))) * d(col("n_docs"))) / d(col("tot_len"))
     val termScore = idf * ((d(col("tf")) * lit(2.25)) /
       (d(col("tf")) + lit(1.25) * lenNorm))
-    val probed = qt
-      .join(tf.join(dfreq, "token").join(dl, id), "token") // inverted-index probe
-      .crossJoin(broadcast(totals))
+    val probed = Attach(qt
+      .join(tf.join(dfreq, "token").join(dl, id), "token"), // inverted-index probe
+      totals)
     val kept = if (excludeSelf) probed.filter(col("query_id") =!= col(id)) else probed
     val scored = kept
       .withColumn("__ts", termScore.cast("decimal(20,12)"))
@@ -151,7 +151,7 @@ object Retrieval {
     // docs with ≥1 token, matching the BM25 stats universe (an
     // empty-text doc carries no retrieval mass on either engine)
     val n = tf.select(col(id)).distinct().agg(count(lit(1)).as("n_docs"))
-    val idf = dfT.crossJoin(broadcast(n))
+    val idf = Attach(dfT, n)
       .select(col("token"),
         log(col("n_docs").cast("double") / col("df_t")).as("idf"))
     val qTerms = queries.select(col(queryId).as("query_id"),

@@ -216,6 +216,7 @@ object Similarity {
     // cap that gates queryProductJoin's broadcast
     val overCap =
       anchors.limit(maxBroadcastQueries + 1).count() > maxBroadcastQueries
+    // PlanAudit: emb_hard_negatives 3 exch/0 SMJ with this hint, 5/1 without (sf0.01 and sf0.1)
     val negSide = if (overCap) neg else broadcast(neg)
     pos.join(negSide, Seq("anchor_id"))
       .select(col("anchor_id"), col("pos_id"),
@@ -402,8 +403,8 @@ object Similarity {
     var centers = Cut(seed)
     for (r <- 2 to k) {
       val scoredMin = pts
-        .join(broadcast(centers.select(col("__pid").as("__cid"),
-          col("__pv").as("__cv"))), col("__pid") =!= col("__cid"))
+        .join(centers.select(col("__pid").as("__cid"),
+          col("__pv").as("__cv")), col("__pid") =!= col("__cid"))
         .withColumn("__d", lit(1.0) - cosine(col("__pv"), col("__cv")))
         .groupBy(col("__pid"))
         .agg(min(col("__d")).as("__mind"), first(col("__pv")).as("__pv2"))
@@ -462,14 +463,10 @@ object Similarity {
         lit(i).as("id"))
     }: _*)
 
-  /** Assign each vector to its nearest (max-cosine) centroid — the IVF
-    * index build. One broadcast-free map pass: centroids are literals in
-    * the plan, the argmax is an array_max over (cosine, id) structs. */
-  def ivfAssign(df: DataFrame, vec: String, dim: Int, k: Int = 16,
-                seed: Long = 7L, out: String = "centroid_id"): DataFrame =
-    ivfAssignWith(df, vec, ivfCentroids(dim, k, seed), out)
-
-  /** [[ivfAssign]] against an explicit centroid set (e.g. a refined one). */
+  /** Assign each vector to its nearest (max-cosine) centroid of `cents`
+    * — the IVF index build. One broadcast-free map pass: centroids are
+    * literals in the plan, the argmax is an array_max over (cosine, id)
+    * structs. */
   def ivfAssignWith(df: DataFrame, vec: String, cents: Array[Array[Double]],
                     out: String = "centroid_id"): DataFrame =
     df.withColumn(out, array_max(centroidScores(col(vec), cents)).getField("id"))
@@ -616,7 +613,7 @@ object Similarity {
       .agg(coalesce(sum(d38(coalesce(col("__r"), lit(0L))) *
         d38(coalesce(col("__c"), lit(0L)))), lit(0).cast("decimal(38,0)"))
         .as("__penum"))
-    tot.crossJoin(broadcast(pe))
+    Attach(tot, pe)
       .select(col("__N").as("n"), col("__agree").as("n_agree"),
         (col("__agree").cast("double") / col("__N").cast("double"))
           .cast("float").as("accuracy"),
@@ -651,7 +648,7 @@ object Similarity {
           .as("meansq"))
       .withColumn("std",
         sqrt(greatest(col("meansq") - col("mean") * col("mean"), lit(0.0))))
-    comps.join(broadcast(stats), Seq("j"))
+    comps.join(stats, Seq("j"))
       .withColumn("z",
         ((col("x") - col("mean")) / nullif(col("std"), lit(0.0))).cast("float"))
       .select(col(id), col("j"), col("z"))
@@ -734,15 +731,15 @@ object Similarity {
         slice(probeList, 1, nprobe).as("probes"))
       .select(col("query_id"), col("qv"),
         explode(col("probes").getField("id")).as("centroid_id"))
-    // BROADCAST the probe side: the corpus must never hash-shuffle on
+    // The probe side broadcasts: the corpus must never hash-shuffle on
     // centroid_id (nCentroids distinct values would pin the whole corpus
-    // onto ≤nCentroids reducers regardless of cluster size). Broadcasting
-    // the tiny queries×nprobe frame keeps the index a pure streamed scan
-    // — which makes the scan's own split count the stage parallelism:
-    // a ≤nCentroids-file persisted index rebalances when the caller
-    // declares a fat probe side, no-op past cores splits.
+    // onto ≤nCentroids reducers regardless of cluster size). The planner
+    // broadcasts the tiny queries×nprobe frame by size, keeping the index
+    // a pure streamed scan — which makes the scan's own split count the
+    // stage parallelism: a ≤nCentroids-file persisted index rebalances
+    // when the caller declares a fat probe side, no-op past cores splits.
     val ind = if (spreadPostings) Skew.spread(indexed) else indexed
-    val scored = ind.join(broadcast(probed), Seq("centroid_id"))
+    val scored = ind.join(probed, Seq("centroid_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", cosine(col("qv"), col("cv")))
     topKPerQuery(scored, k)
@@ -849,7 +846,7 @@ object Similarity {
         slice(probeList, 1, nprobe).as("probes"))
       .select(col("query_id"), col("qv"),
         explode(col("probes").getField("id")).as("centroid_id"))
-    val scored = enc.join(broadcast(probed), Seq("centroid_id"))
+    val scored = enc.join(probed, Seq("centroid_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", dot(col("qv"), col("recon")))
     topKPerQuery(scored, k)
@@ -976,7 +973,7 @@ object Similarity {
         slice(probeList, 1, nprobe).as("probes"))
       .select(col("query_id"), col("qv"),
         explode(col("probes").getField("id")).as("centroid_id"))
-    val scored = enc.join(broadcast(probed), Seq("centroid_id"))
+    val scored = enc.join(probed, Seq("centroid_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", dot(col("qv"), col("recon")))
     topKPerQuery(scored, k)
@@ -1199,6 +1196,7 @@ object Similarity {
           .agg(count(lit(1)).as("__csize"))
           .filter(col("__csize") <= maxCluster)
           .select(col("centroid_id"))
+        // ≤ k centroid ids: the assigned corpus never shuffles (no query sets maxCluster)
         assigned0.join(broadcast(small), Seq("centroid_id"), "left_semi")
       }
     val a = assigned.select(col("centroid_id"), col(id).as("id_a"), col(vec).as("va"))

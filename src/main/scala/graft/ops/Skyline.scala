@@ -50,7 +50,7 @@ object Skyline {
     // feeds BOTH the per-bucket guard and the survivor filter: cut once
     // so the grouped candidate scan — the only data-sized stage — runs
     // once
-    val bucketed = Cut(pts.crossJoin(broadcast(bounds))
+    val bucketed = Cut(Attach(pts, bounds)
       .withColumn("bkt",
         when(col("hmax") === col("hmin"), lit(0)).otherwise(
           least(lit(buckets - 1),
@@ -62,6 +62,7 @@ object Skyline {
     val wb = Window.orderBy(col("bkt").desc).rowsBetween(Window.unboundedPreceding, -1)
     val guard = perBucket.withColumn("hb_min", min(col("bl")).over(wb))
       .select(col("bkt"), col("hb_min"))
+    // PlanAudit sf0.1, 1 MB threshold: skyline_pareto 3 exch/0 SMJ with this hint, 5/1 without
     val survivors = bucketed.join(broadcast(guard), Seq("bkt"))
       .filter(col("hb_min").isNull || col("l") < col("hb_min"))
       .select(col("h"), col("l"))

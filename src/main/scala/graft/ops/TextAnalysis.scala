@@ -235,8 +235,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("df_ab"),
         min(col("a.df")).as("df_a"), min(col("b.df")).as("df_b"))
     val n = df.agg(count(lit(1)).as("n_docs"))
-    pairs.filter(col("df_ab") >= minSupport)
-      .crossJoin(broadcast(n))
+    Attach(pairs.filter(col("df_ab") >= minSupport), n)
       .withColumn("pmi",
         log(col("df_ab").cast("double") * col("n_docs") /
           (col("df_a").cast("double") * col("df_b"))).cast("float"))
@@ -289,7 +288,7 @@ object TextAnalysis {
     // phrase scores): EAGER, like every multi-consumer op here —
     // re-deriving the corpus token explode per consumer is the rescan
     // this avoids
-    val isl = Cut(tok.join(broadcast(stops), Seq("tok"), "left")
+    val isl = Cut(tok.join(stops, Seq("tok"), "left")
       .withColumn("__island",
         sum(when(col("__stop"), 1L).otherwise(0L)).over(wDoc))
       .filter(col("__stop").isNull)

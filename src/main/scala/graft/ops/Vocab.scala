@@ -49,8 +49,7 @@ object Vocab {
     // (id, token) is distinct in tf, so count(*) per token IS document frequency
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df_t"))
     val nDocs = df.agg(count(lit(1)).as("n_docs"))
-    val scored = tf.join(dfreq, "token")
-      .crossJoin(broadcast(nDocs))
+    val scored = Attach(tf.join(dfreq, "token"), nDocs)
       .withColumn("tfidf",
         col("tf").cast("double") * log(col("n_docs").cast("double") / col("df_t")))
     val w = Window.partitionBy(col(id)).orderBy(col("tfidf").desc, col("token"))
@@ -94,8 +93,7 @@ object Vocab {
       .groupBy(col(id), col("token")).agg(count(lit(1)).as("tf")))
     val counts = tf.groupBy(col("token")).agg(sum(col("tf")).as("n"))
     val total = counts.agg(sum(col("n")).as("total"))
-    tf.join(counts, "token")
-      .crossJoin(broadcast(total))
+    Attach(tf.join(counts, "token"), total)
       .withColumn("__lp",
         log(col("n").cast("double") / col("total").cast("double")))
       .groupBy(col(id))
@@ -133,8 +131,7 @@ object Vocab {
     val counts = tokenRows(model, id, text)
       .groupBy(col("token")).agg(count(lit(1)).as("n"))
     val stats = counts.agg(sum(col("n")).as("total"), count(lit(1)).as("v"))
-    tf.join(counts, Seq("token"), "left")
-      .crossJoin(broadcast(stats))
+    Attach(tf.join(counts, Seq("token"), "left"), stats)
       .withColumn("__lp",
         log((coalesce(col("n"), lit(0L)) + 1L).cast("double") /
           (col("total") + col("v") + 1L).cast("double")))
@@ -309,8 +306,7 @@ object Vocab {
     // materialize the weighted postings ONCE: they feed four plan
     // branches (norms ×2 via doc_a/doc_b, self-join ×2) and without a
     // cut Spark re-runs the whole scan→tf→df chain for each branch
-    val wts = Cut(tf.join(dfreq.filter(col("df_t") <= maxDf), "token")
-      .crossJoin(broadcast(nDocs))
+    val wts = Cut(Attach(tf.join(dfreq.filter(col("df_t") <= maxDf), "token"), nDocs)
       .withColumn("w", col("tf").cast("double") *
         sqrt(col("n_docs").cast("double") / col("df_t").cast("double")))
       .select(col(id), col("token"), col("df_t"), col("w")))
@@ -375,7 +371,7 @@ object Vocab {
       .filter(length(col("token")) > 0)
       .select(col("token")).distinct()
       .agg(count(lit(1)).as("v"))
-    occ.join(nab, "bg").join(na, "ctx").crossJoin(broadcast(v))
+    Attach(occ.join(nab, "bg").join(na, "ctx"), v)
       .withColumn("__lp",
         log((col("nab") + 1).cast("double") /
           (col("na") + col("v")).cast("double")))

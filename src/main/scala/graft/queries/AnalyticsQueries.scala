@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.{Anomaly, Cdc, Cut, CrossSeries, Eval, Experiment, Features, FuzzyJoin, Indicators, Intervals, Market, Markov, Moments, Percentiles, Quality, Ranking, Recommend, Reconcile, Resample, Skyline}
+import graft.ops.{Anomaly, Attach, Cdc, Cut, CrossSeries, Eval, Experiment, Features, FuzzyJoin, Indicators, Intervals, Market, Markov, Moments, Percentiles, Quality, Ranking, Recommend, Reconcile, Resample, Skyline}
 
 /** OLAP / warehouse-analytics extensions: grouping sets, event-path
   * transitions, exact nearest-rank quantiles, batch CDC apply, and
@@ -27,6 +27,7 @@ object AnalyticsQueries {
       .join(Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey")),
         col("l_orderkey") === col("o_orderkey"))
+      // PlanAudit sf0.01: basket_oversize_observer 6 exch/4 bcast/1 SMJ, 10/0/0 without
       .join(broadcast(Tables.part(s, dir)
         .select(col("p_partkey"), col("p_brand"))),
         col("l_partkey") === col("p_partkey"))
@@ -307,8 +308,7 @@ object AnalyticsQueries {
     "basket_brand_rules" -> ((s, dir) => {
       val baskets = Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_partkey"))
-        .join(broadcast(Tables.part(s, dir)
-          .select(col("p_partkey"), col("p_brand"))),
+        .join(Tables.part(s, dir).select(col("p_partkey"), col("p_brand")),
           col("l_partkey") === col("p_partkey"))
         .select(col("l_orderkey").as("basket"), col("p_brand").as("brand"))
       Market.pairRules(baskets, basket = "basket", item = "brand",
@@ -325,8 +325,7 @@ object AnalyticsQueries {
     "basket_brand_triples" -> ((s, dir) => {
       val baskets = Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_partkey"))
-        .join(broadcast(Tables.part(s, dir)
-          .select(col("p_partkey"), col("p_brand"))),
+        .join(Tables.part(s, dir).select(col("p_partkey"), col("p_brand")),
           col("l_partkey") === col("p_partkey"))
         .select(col("l_orderkey").as("basket"), col("p_brand").as("brand"))
       Market.tripleRules(baskets, basket = "basket", item = "brand",
@@ -608,6 +607,7 @@ object AnalyticsQueries {
     // last broadcast (a join condition, never a cartesian). DECIMAL
     // revenue, ties pinned by name.
     "j6_local_supplier_volume" -> ((s, dir) => {
+      // PlanAudit sf0.1, 1 MB threshold: 2 exch/5 bcast/0 SMJ with these hints, 4/4/1 without
       val asiaNations = Tables.nation(s, dir)
         .join(broadcast(Tables.region(s, dir).filter(col("r_name") === "ASIA")),
           col("n_regionkey") === col("r_regionkey"))
@@ -642,6 +642,7 @@ object AnalyticsQueries {
     // divided once in double, so both engines replay it bit-for-bit.
     "j8_market_share" -> ((s, dir) => {
       val vol = d2(col("l_extendedprice")) * d2(lit(1) - col("l_discount"))
+      // PlanAudit sf0.1, 1 MB threshold: 4 exch/6 bcast/1 SMJ with these hints, 6/5/2 without
       val econPart = Tables.part(s, dir)
         .filter(col("p_type") === "ECONOMY").select(col("p_partkey"))
       val ord = Tables.orders(s, dir)
@@ -684,6 +685,7 @@ object AnalyticsQueries {
     // quantize to DECIMAL(20,12) before the final sum so reduction
     // order cannot smear the last bit.
     "agg_hhi" -> ((s, dir) => {
+      // PlanAudit sf0.1, 1 MB threshold: 3 exch/2 bcast/0 SMJ with these hints, 4/1/1 without
       val supRev = Tables.lineitem(s, dir)
         .select(col("l_suppkey"),
           (d2(col("l_extendedprice")) * d2(lit(1) - col("l_discount"))).as("__v"))
@@ -1030,7 +1032,7 @@ object AnalyticsQueries {
         .groupBy(col("l_suppkey"))
         .agg(sum(d2(col("l_extendedprice")) * d2(lit(1) - col("l_discount")))
           .as("__rev"))
-      rev.crossJoin(broadcast(rev.agg(max(col("__rev")).as("__mx"))))
+      Attach(rev, rev.agg(max(col("__rev")).as("__mx")))
         .filter(col("__rev") === col("__mx"))
         // no hint on supplier: it is SF-scaled — AQE sees the tiny
         // filtered probe side and picks the broadcast itself
@@ -1069,6 +1071,7 @@ object AnalyticsQueries {
         .select(col("p_partkey"), col("p_brand"), col("p_size"))
         .filter(col("p_size") >= 1 && col("p_size") <= 15 &&
           col("p_brand").isin("Brand#1", "Brand#2", "Brand#3"))
+      // PlanAudit sf0.01: 2 exch/1 bcast with this hint, 0/0 without
       li.join(broadcast(p), col("l_partkey") === col("p_partkey"))
         .filter(
           (col("p_brand") === "Brand#1" && col("p_size") <= 5 &&
@@ -1100,16 +1103,15 @@ object AnalyticsQueries {
           count(lit(1)).as("frequency"),
           sum(d2(col("o_totalprice"))).as("__mon"))
       val edge = o.agg(max(col("o_orderdate")).as("__edge"))
-      val rfm = base.crossJoin(broadcast(edge))
+      val rfm = Attach(base, edge)
         .withColumn("recency_days",
           datediff(col("__edge"), col("__last")).cast("long"))
       // quintile orderings carry the custkey tiebreak so the
       // bucket-boundary assignment is total and engine-portable;
       // recency ASCENDS (most recent = best = 5 after the flip below).
       // Multi-order variant: ONE base materialization, each dimension
-      // ranks only its narrow (key, value) projection — three calls to
-      // withGlobalNtile re-checkpointed the full customer frame three
-      // times (the round-13 advice).
+      // ranks only its narrow (key, value) projection, never the full
+      // customer frame.
       val scored = Ranking.withGlobalNtiles(rfm, key = Seq("o_custkey"),
         specs = Seq(
           (Seq("recency_days", "o_custkey"), 5, "__rq"),
@@ -1258,6 +1260,7 @@ object AnalyticsQueries {
       val model = ev.filter(col("__b") < 50).groupBy(col("event_type"))
         .agg((sum(col("value").cast("decimal(18,2)")).cast("double") /
           count(lit(1)).cast("double")).as("__yhat"))
+      // PlanAudit sf0.1, 1 MB threshold: 19 exch/7 bcast/3 SMJ with these hints, 24/4/6 without
       val calRes = ev.filter(col("__b") >= 50 && col("__b") < 75)
         .join(broadcast(model), Seq("event_type"))
         .select(col("event_type"),
@@ -1387,7 +1390,7 @@ object AnalyticsQueries {
           max(col("__day")).as("__mx"))
         .select(expr("(__mn + __mx) div 2").as("__split"))
       val zero = lit(0).cast("decimal(18,2)")
-      val perUser = ev.crossJoin(broadcast(split))
+      val perUser = Attach(ev, split)
         .groupBy(col("event_type"),
           when(pmod(col("user_id"), lit(2)) === 0, "A").otherwise("B")
             .as("variant"),

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.Tables
-import graft.ops.{CountMin, Hll, Kll, Percentiles, Reconcile, Reshape}
+import graft.ops.{Attach, CountMin, Hll, Kll, Percentiles, Reconcile, Reshape}
 import graft.pipeline.StockPipeline
 import graft.sources.{LakeReader, LakeWriter, VersionedLake}
 import graft.streaming.EventStreams
@@ -125,8 +125,8 @@ object PipelineQueries {
     * exact batch side it is compared with. */
   private[queries] def finalized(s: SparkSession, dir: String, df: DataFrame,
                                  end: Column, horizon: String = "20 MINUTES"): DataFrame =
-    df.crossJoin(broadcast(Tables.events(s, dir)
-        .agg((max(col("ts_utc")) - expr(s"INTERVAL $horizon")).as("bound"))))
+    Attach(df, Tables.events(s, dir)
+        .agg((max(col("ts_utc")) - expr(s"INTERVAL $horizon")).as("bound")))
       .filter(end <= col("bound"))
 
   /** The final row per user of an Update-mode keyed-state sink: the most
@@ -429,10 +429,9 @@ object PipelineQueries {
       val wAll = org.apache.spark.sql.expressions.Window
         .partitionBy(col("window_start"))
         .rowsBetween(Long.MinValue, Long.MaxValue)
-      val withTotals = j
+      val withTotals = Attach(j
         .withColumn("tw", sum(col("n_win")).over(wAll))
-        .withColumn("b", count(lit(1)).over(wAll))
-        .crossJoin(broadcast(ref.agg(sum(col("n_ref")).as("tr"))))
+        .withColumn("b", count(lit(1)).over(wAll)), ref.agg(sum(col("n_ref")).as("tr")))
       val p = (col("n_ref") + 1).cast("double") / (col("tr") + col("b"))
       val q = (col("n_win") + 1).cast("double") / (col("tw") + col("b"))
       withTotals.withColumn("contribution", (p - q) * log(p / q))

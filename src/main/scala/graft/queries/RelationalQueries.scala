@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.{Anomaly, AsOfJoin, Attribution, Cohort, Funnel, Merge, Quality, RangeJoin, Reshape, Returns, RuntimeFilter, Scd, Sessionize, Skew, Snapshot, Volatility}
+import graft.ops.{Anomaly, AsOfJoin, Attach, Attribution, Cohort, Funnel, Merge, Quality, RangeJoin, Reshape, Returns, RuntimeFilter, Scd, Sessionize, Skew, Snapshot, Volatility}
 
 /** Core relational operator inventory (SURVEY.md §2.2–§2.9) expressed over
   * the driver's TPC-H-ish lake, each with a DuckDB oracle.
@@ -73,7 +73,7 @@ object RelationalQueries {
       val audit = Quality.nullAudit(Tables.lineitem(s, dir),
         Seq("l_orderkey", "l_partkey", "l_shipdate", "l_quantity"))
       val li = Tables.lineitem(s, dir)
-      audit.crossJoin(li.agg(
+      Attach(audit, li.agg(
         min(col("l_quantity")).as("min_qty"),
         max(col("l_quantity")).as("max_qty"),
         min(col("l_extendedprice")).as("min_price")))
@@ -222,6 +222,7 @@ object RelationalQueries {
         .orderBy(col("o_orderkey"))
     }),
 
+    // PlanAudit sf0.01 and sf0.1: 1 exch/2 bcast with these hints, 3/0 without
     "j2_dim_join" -> ((s, dir) =>
       Tables.customer(s, dir)
         .join(broadcast(Tables.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
@@ -742,7 +743,7 @@ object RelationalQueries {
         .groupBy(col("user_id"))
         .agg(min(col("ts")).as("__first"), max(col("ts")).as("__last"))
       val bounds = Tables.events(s, dir).agg(max(col("ts")).as("__edge"))
-      val subjects = perUser.crossJoin(broadcast(bounds))
+      val subjects = Attach(perUser, bounds)
         .select(
           expr(s"__first div ${7 * day}L").as("cohort_week"),
           expr(s"(__last - __first) div ${day}L").as("duration_days"),

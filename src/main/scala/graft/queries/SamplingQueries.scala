@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.{CountMin, Dedup, Hll, Kll, Kmv, Packing, Percentiles, Sampling, Snapshot, TextAnalysis, Vocab}
+import graft.ops.{Attach, CountMin, Dedup, Hll, Kll, Kmv, Packing, Percentiles, Sampling, Snapshot, TextAnalysis, Vocab}
 
 /** Training-data curation layer over `documents`: deterministic
   * splits/samples/mixtures, vocabulary + TF-IDF, token-budget packing,
@@ -113,19 +113,18 @@ object SamplingQueries {
     }),
 
     // portable HLL distinct-count estimates beside the exact counts —
-    // the machinery corpusProfile's distinct column rides (r18: the
-    // profile moved off the unoracleable builtin approx_count_distinct
-    // onto this): md5 registers, binary-string-length ranks,
-    // integer-shifted harmonic sum, so every register and both estimates
-    // replay in DuckDB. Two rows exercise BOTH estimator regimes: the
-    // 31-token vocabulary under m=256 fires the small-range linear-
-    // counting correction; 500 distinct doc texts under m=64 exhaust
-    // every register and take the raw harmonic path.
+    // the machinery corpusProfile's distinct column rides in place of
+    // the unoracleable builtin approx_count_distinct: md5 registers,
+    // binary-string-length ranks, integer-shifted harmonic sum, so every
+    // register and both estimates replay in DuckDB. Two rows exercise
+    // BOTH estimator regimes: the 31-token vocabulary under m=256 fires
+    // the small-range linear-counting correction; 500 distinct doc texts
+    // under m=64 exhaust every register and take the raw harmonic path.
     "freq_hll_portable" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       def row(label: String, keyed: DataFrame, key: String, b: Int) =
-        keyed.agg(count_distinct(col(key)).as("n_exact"))
-          .crossJoin(Hll.estimate(Hll.build(keyed, key, b), b))
+        Attach(keyed.agg(count_distinct(col(key)).as("n_exact")),
+            Hll.estimate(Hll.build(keyed, key, b), b))
           .select(lit(label).as("key_kind"), col("n_exact"),
             col("hll_estimate"), col("hll_raw"), col("n_zero_registers"),
             col("used_linear_counting"))
@@ -157,11 +156,10 @@ object SamplingQueries {
           Seq("hll_register"), "full_outer")
         .filter(not(col("r_merged") <=> col("r_mono")))
         .agg(count(lit(1)).as("n_register_mismatches"))
-      Hll.estimate(merged, b = 8)
-        .select(col("hll_estimate").as("hll_estimate_merged"))
-        .crossJoin(Hll.estimate(mono, b = 8)
-          .select(col("hll_estimate").as("hll_estimate_mono")))
-        .crossJoin(mismatches)
+      def est(sk: DataFrame, out: String) =
+        Hll.estimate(sk, b = 8).select(col("hll_estimate").as(out))
+      Attach(Attach(est(merged, "hll_estimate_merged"),
+        est(mono, "hll_estimate_mono")), mismatches)
     }),
 
     // CMS inner-product join-size planning: the sketch's self inner
@@ -175,7 +173,7 @@ object SamplingQueries {
       val cms = CountMin.build(li, "l_suppkey", depth = 4, width = 4096)
       val exact = li.groupBy(col("l_suppkey")).agg(count(lit(1)).as("f"))
         .agg(sum(col("f") * col("f")).as("f2_exact"))
-      exact.crossJoin(CountMin.innerProduct(cms, cms, depth = 4, width = 4096)
+      Attach(exact, CountMin.innerProduct(cms, cms, depth = 4, width = 4096)
         .withColumnRenamed("cms_inner_product", "f2_estimate"))
     }),
 
@@ -199,13 +197,12 @@ object SamplingQueries {
         Hll.estimate(sk, b = 8).select(col("hll_estimate").as(out))
       val exact = a.distinct().join(b.distinct(), Seq("o_custkey"), "left_semi")
         .agg(count(lit(1)).as("n_exact_intersection"))
-      est(skA, "est_a").crossJoin(est(skB, "est_b"))
-        .crossJoin(est(Hll.merge(8, skA, skB), "est_union"))
-        .select(col("est_a"), col("est_b"), col("est_union"),
+      val ests = Attach(Attach(est(skA, "est_a"), est(skB, "est_b")),
+        est(Hll.merge(8, skA, skB), "est_union"))
+      Attach(ests.select(col("est_a"), col("est_b"), col("est_union"),
           (col("est_a").cast("double") + col("est_b").cast("double") -
             col("est_union").cast("double")).cast("float")
-            .as("est_intersection"))
-        .crossJoin(exact)
+            .as("est_intersection")), exact)
     }),
 
     // KMV bottom-k set algebra on the SAME cohorts as
@@ -222,9 +219,8 @@ object SamplingQueries {
         .select(col("o_custkey"))
       val exact = a.distinct().join(b.distinct(), Seq("o_custkey"), "left_semi")
         .agg(count(lit(1)).as("n_exact_intersection"))
-      Kmv.jaccard(Kmv.build(a, "o_custkey", k = 256),
-          Kmv.build(b, "o_custkey", k = 256), k = 256)
-        .crossJoin(exact)
+      Attach(Kmv.jaccard(Kmv.build(a, "o_custkey", k = 256),
+          Kmv.build(b, "o_custkey", k = 256), k = 256), exact)
     }),
 
     // KLL-style deterministic rank sketch on an UNBOUNDED value

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.{Cut, Dedup, Features, Graph, Merge, Multimodal, Quality, QualityModel, Ranking, Retrieval, Sampling, TextAnalysis}
+import graft.ops.{Attach, Cut, Dedup, Features, Graph, Merge, Multimodal, Quality, QualityModel, Ranking, Retrieval, Sampling, TextAnalysis}
 
 /** LLM-training-data text pipeline over the `documents` table:
   * dedup (exact / MinHash-LSH / SimHash / Jaccard), token statistics,
@@ -174,10 +174,9 @@ object TextQueries {
     // away — all-integer, round-for-round replayed by the oracle, the
     // fixed-round contract HITS/PageRank use.
     // 16 rounds: the sf0.01 corpus needs 12 peel rounds to reach the
-    // 30-core fixed point (measured; 8 left it an unconverged superset
-    // that the round-13 convergence observer now rejects loudly) —
-    // converged extra rounds are idempotent in BOTH engines, so the
-    // margin costs little and the oracle replays the same 16.
+    // 30-core fixed point, and kCore rejects an unconverged result
+    // loudly; converged extra rounds are idempotent in BOTH engines, so
+    // the margin costs little and the oracle replays the same 16.
     "graph_kcore" -> ((s, dir) =>
       Graph.kCore(Graph.loadEdges(s, coocEdgeDir(s, dir)), k = 30, rounds = 16)
         .select(col("id").as("doc_id"), col("deg"))
@@ -237,7 +236,7 @@ object TextQueries {
       val tmp = QuerySql.tempDir("graft_edgebuild")
       Graph.saveEdges(coocEdges(s, dir), "src", "dst", tmp)
       val e = Graph.loadEdges(s, tmp)
-      e.agg(count(lit(1)).as("n_edges")).crossJoin(
+      Attach(e.agg(count(lit(1)).as("n_edges")),
         e.select(explode(array(col("src"), col("dst"))).as("id"))
           .agg(countDistinct(col("id")).as("n_nodes")))
     }),
@@ -468,8 +467,8 @@ object TextQueries {
     // HARD SIGNAL: the portable (md5-hash) MinHash-LSH variant — DuckDB
     // replays shingling, all 16 minhashes, band buckets, the maxBucket
     // skew cap, and the candidate join, so the whole LSH pipeline is
-    // row/schema/hash-verified (xxhash64 stays the non-portable default
-    // for the scale hot path; semantics identical by construction).
+    // row/schema/hash-verified (xxhash64 stays minhash's default; which
+    // pairs the banding finds differs between the two hashes).
     "dedup_minhash_lsh" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val pairs = Dedup.minhashCandidatePairs(docs, id = "doc_id", text = "text",
@@ -503,21 +502,18 @@ object TextQueries {
         .orderBy(col("doc_id"))
     }),
 
-    // HARD SIGNAL: 60-bit portable (md5-hash) SimHash — DuckDB replays
-    // the per-token bit votes and the signature fold exactly
+    // HARD SIGNAL: 60-bit md5-hash SimHash — DuckDB replays the
+    // per-token bit votes and the signature fold exactly
     "dedup_simhash" -> ((s, dir) =>
-      Dedup.simhash(Tables.documents(s, dir), id = "doc_id", text = "text",
-          portable = true)
+      Dedup.simhash(Tables.documents(s, dir), id = "doc_id", text = "text")
         .orderBy(col("doc_id"))),
 
-    // HARD SIGNAL: portable SimHash near-dup pairs. maxBits = 3 keeps the
-    // query in the pigeonhole-guaranteed regime: the 4-chunk scheme
-    // provably finds EVERY pair within hamming 3 (verified 1034/1034
-    // against brute force at sf0.01 for the 64-bit variant; the same
-    // pigeonhole argument covers the 4×15-bit portable chunking).
+    // HARD SIGNAL: SimHash near-dup pairs. maxBits = 3 keeps the query
+    // in the pigeonhole-guaranteed regime: any 4-way disjoint chunking
+    // (here 4×15 bits) provably finds EVERY pair within hamming 3.
     "dedup_simhash_pairs" -> ((s, dir) =>
       Dedup.simhashNearDup(Tables.documents(s, dir), id = "doc_id", text = "text",
-          maxBits = 3, portable = true)
+          maxBits = 3)
         .orderBy(col("id_a"), col("id_b"))),
 
     // duplicate families: connected components over the exact-Jaccard

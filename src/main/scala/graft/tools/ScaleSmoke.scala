@@ -52,7 +52,7 @@ object ScaleSmoke {
     "dedup_substring", "text_quality_nb",
     "sim_ivfpq_topk", "sim_ivfpq_persisted",
     "sim_sq8_topk", "emb_semantic_dedup",
-    // round 9: retrieval tier + lake/maintenance + sampling additions
+    // retrieval tier, lake maintenance and sampling
     "text_bm25_topk", "retrieval_rrf_fusion", "sample_weighted_wor",
     "bloom_semi_join", "mv_incremental_refresh", "w_rolling_median",
     "lake_compact_roundtrip", "lake_timetravel",
@@ -62,9 +62,8 @@ object ScaleSmoke {
     // measure a vanishing input, not the operator
     "emb_covariance", "emb_pca_project", "sample_temperature_mix",
     // graph_triangles / graph_khop share the same caveat (their input
-    // graph SHRINKS under replication) — their scale decades were
-    // measured over synthetic graphs with a true ×10/×30 edge axis
-    // instead (BENCH_NOTES_r9.md §8)
+    // graph SHRINKS under replication): their scaling is measured over
+    // synthetic graphs with a true ×10/×30 edge axis instead
     "corr_series_pairs", "beta_vs_market", "hist_equi_depth",
     "skyline_pareto", "ts_ohlc_weekly")
 
@@ -197,7 +196,7 @@ object ScaleSmoke {
     if (sel.contains("dedup_simhash_pairs")) {
       val docs = spark.read.parquet(s"$dst/documents.parquet")
       val dropped = graft.ops.Dedup.simhashDroppedBuckets(
-          docs, "doc_id", "text", maxBucket = 10000, portable = true)
+          docs, "doc_id", "text", maxBucket = 10000)
         .agg(count(lit(1)), coalesce(sum(col("n_members")), lit(0L)))
         .head()
       println(s"""{"metric":"simhash_dropped_buckets","copies":$copies,""" +

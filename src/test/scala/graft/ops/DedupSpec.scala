@@ -199,11 +199,11 @@ class DedupSpec extends SparkSpec {
     val pairs = Dedup.minhashCandidatePairs(docs, "doc_id", "text", portable = true)
       .filter(col("id_a") === 1 && col("id_b") === 2).rows
     pairs.head(2) shouldBe 1.0
-    val sh = Dedup.simhash(docs, "doc_id", "text", portable = true)
+    val sh = Dedup.simhash(docs, "doc_id", "text")
       .select("simhash").rows.map(_.head.asInstanceOf[Long])
     sh(0) shouldBe sh(1)
     all(sh) should (be >= 0L and be < (1L << 60))
-    Dedup.simhashNearDup(docs, "doc_id", "text", portable = true)
+    Dedup.simhashNearDup(docs, "doc_id", "text")
       .filter(col("id_a") === 1 && col("id_b") === 2)
       .rows.head(2) shouldBe 0L
   }
